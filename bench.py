@@ -245,13 +245,14 @@ FLAGSHIP_INLINE = [
 
 
 def host_fingerprint() -> dict[str, object]:
-    """CPU model / core count / scaling governor / total RAM — enough to
-    tell whether two bench runs executed on comparable hardware. The
-    r5→r6 rounds saw a uniform ~1.26x wall-clock shift caused by the bench
-    HOST changing between rounds, which would have hidden a real 1.3x code
-    regression; recording the fingerprint lets the regression diff flag
-    cross-host comparisons instead of silently mixing them."""
-    fp: dict[str, object] = {"cores": os.cpu_count()}
+    """CPU model / scaling governor / total RAM — with the core count the
+    run's session stamps, enough to tell whether two bench runs executed
+    on comparable hardware. The r5→r6 rounds saw a uniform ~1.26x
+    wall-clock shift caused by the bench HOST changing between rounds,
+    which would have hidden a real 1.3x code regression; recording the
+    fingerprint lets the regression diff flag cross-host comparisons
+    instead of silently mixing them."""
+    fp: dict[str, object] = {}
     try:
         with open("/proc/cpuinfo") as f:
             for line in f:
@@ -393,6 +394,8 @@ def main() -> None:
             flush=True,
         )
     spark = build_session("bench")
+    # the cores the queries ran on: local[$SPARK_GRAFT_CPUS], not the host's
+    host["cores"] = spark.sparkContext.defaultParallelism
 
     # Prior round's per-query numbers (the committed sidecar, read BEFORE it
     # is overwritten) drive the end-of-run regression diff: round-over-round

@@ -7,8 +7,13 @@ writer in one batched pass and the counters come from the plan itself.
 re-GETs its server id before building subject references
 (cnics_to_fhir.py:530-539). Bulk mode resolves ids from the snapshot join
 instead; patients not yet in the store get a deterministic placeholder
-reference (``urn:pending:<SitePatientId>``) that the writer rewrites after
-the Patient insert wave — documented divergence, same end state.
+reference (``urn:pending:<SitePatientId>``). Nothing rewrites that
+placeholder: a resource written in the same run as its new Patient lands
+in the store still pointing at ``urn:pending:``, and only the next run —
+which finds the Patient in the snapshot and sends the resource as an
+update — stores the server id. Resolving it within one run (a Patient-first
+write wave, or ``transaction`` Bundles with ``urn:uuid:`` full URLs) is the
+open fix, ROADMAP.md Direction 3.
 """
 
 from __future__ import annotations

@@ -73,9 +73,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark.load.versioned_table import ConcurrentCommitError
+from cnics_to_fhir_spark.operators.merge import apply_merge
 
 MANIFEST_FILE = "_export_manifest.json"
-_CHANGES = ("insert", "update", "delete")
 
 
 def _generation(path: str) -> int:
@@ -561,10 +561,10 @@ def update_export(
     shard-level re-export.
 
     ``changes`` must carry exactly (key_col, ``change_col``,
-    *content_cols) per the manifest.  Semantics (table_merge's honesty
-    rules): unknown change labels fail loudly; INSERT of a present key
-    fails loudly (an export is keyed — duplicating a key would corrupt
-    the artifact); UPDATE/DELETE of an absent key counts as
+    *content_cols) per the manifest.  Semantics (operators/merge.apply_merge,
+    shared with the table sinks): unknown change labels fail loudly; INSERT
+    of a present key fails loudly (an export is keyed — duplicating a key
+    would corrupt the artifact); UPDATE/DELETE of an absent key counts as
     ``noop_missing_key``; exported keys must be unique within touched
     shards (checked) — the precondition incremental update relies on.
 
@@ -610,23 +610,14 @@ def update_export(
     from cnics_to_fhir_spark.operators.dedup import portable_hash
 
     shard = (portable_hash(F.col(key_col).cast("string")) % n_shards).cast("int")
-    # changes is consumed several times (labels guard, touched set,
-    # classify, incoming) — freeze it once.
+    # changes is consumed several times (touched set, duplicate guard,
+    # apply_merge) — freeze it once.
     ch = (
         changes.select(
             shard.alias("shard"), key_col, change_col, *content_cols
         ).localCheckpoint(eager=True)
     )
-    # ONE driver round-trip covers label validation AND the touched-shard
-    # list (distinct (change, shard) pairs — bounded by |labels| x
-    # |touched shards|); was two full ch-scan jobs (guide §5).
-    cs = ch.select(
-        F.col(change_col).alias("c"), "shard"
-    ).distinct().collect()
-    bad = sorted({r["c"] for r in cs if r["c"] not in _CHANGES})
-    if bad:
-        raise ValueError(f"update_export: unknown change labels {bad!r}")
-    touched = sorted({r["shard"] for r in cs})
+    touched = sorted(r["shard"] for r in ch.select("shard").distinct().collect())
     if not touched:
         # an empty feed cannot carry duplicate keys — the pre-flight dup
         # check below is vacuous, so the early return stays ahead of it
@@ -684,66 +675,12 @@ def update_export(
             "shards — incremental update requires unique keys"
         )
 
-    present = existing.select(
-        F.col(key_col).alias("__pk"), F.lit(True).alias("__present")
+    merged, counts = apply_merge(
+        ch, existing, [key_col], action_col=change_col, unique_keys=True
     )
-    # The (change, present) tally rides the checkpoint materialization as
-    # an Observation — same integer counts, one driver round-trip fewer
-    # (guide §5).
-    from pyspark.sql import Observation
-
-    def _tcount(label: str, pres: bool):
-        cond = (F.col(change_col) == label) & (
-            F.col("__present") if pres else ~F.col("__present")
-        )
-        return F.count(F.when(cond, F.lit(1))).alias(
-            f"{label}_{'t' if pres else 'f'}"
-        )
-
-    obs = Observation()
-    flagged = (
-        ch.join(present, on=F.col(key_col).eqNullSafe(F.col("__pk")), how="left")
-        .drop("__pk")
-        .withColumn("__present", F.coalesce(F.col("__present"), F.lit(False)))
-        .observe(
-            obs,
-            *[_tcount(c, p) for c in sorted(_CHANGES) for p in (True, False)],
-        )
-        .localCheckpoint(eager=True)
-    )
-    got = obs.get  # blocks on the checkpoint job above
-    tally = {
-        (c, p): got[f"{c}_{'t' if p else 'f'}"]
-        for c in sorted(_CHANGES)
-        for p in (True, False)
-    }
-    if tally.get(("insert", True), 0):
-        raise ValueError(
-            f"update_export: {tally[('insert', True)]} insert(s) of keys "
-            "already present in the export — duplicating a key would "
-            "corrupt the artifact; send them as updates"
-        )
-    counts = {
-        "inserted": tally.get(("insert", False), 0),
-        "updated": tally.get(("update", True), 0),
-        "deleted": tally.get(("delete", True), 0),
-        "noop_missing_key": tally.get(("update", False), 0)
-        + tally.get(("delete", False), 0),
-    }
-
-    gone = flagged.filter(
-        F.col(change_col).isin("update", "delete") & F.col("__present")
-    ).select(F.col(key_col).alias("__gk"))
-    survivors = existing.join(
-        gone, on=F.col(key_col).eqNullSafe(F.col("__gk")), how="left_anti"
-    )
-    incoming = flagged.filter(
-        ((F.col(change_col) == "insert") & ~F.col("__present"))
-        | ((F.col(change_col) == "update") & F.col("__present"))
-    ).select("shard", key_col, *content_cols)
     # consumed twice (write + patched stats): freeze the merged rows so
     # both passes see identical data and the upstream runs once
-    merged = survivors.unionByName(incoming).localCheckpoint(eager=True)
+    merged = merged.localCheckpoint(eager=True)
 
     # Staging write and patched-stats aggregation both read the frozen
     # checkpoint and are independent — overlap them on two driver threads

@@ -4,10 +4,14 @@ Replaces the reference's one-HTTP-call-per-row loop (cnics_to_fhir.py:531,
 :631, :714, :899 + deletes :333, :564, :660, :744) with
 ``df.foreachPartition``: one connection per partition (the reference's own
 ``requests.Session`` optimization, :246-247, made per-executor), explicit
-retry with backoff mirroring the 5×5s SQL retry policy (:163-177), and
-idempotent semantics — PUT/DELETE retry safely; POSTs are guarded upstream
-by the merge classification (insert only when the key is absent), so a
-replayed partition re-POSTs only if the first attempt never landed.
+retry with backoff mirroring the 5×5s SQL retry policy (:163-177).
+PUT/DELETE replay safely. POSTs are safe to replay only in bundle mode,
+whose entries carry ``ifNoneExist`` by default: per-row mode sends a bare
+POST with no ``If-None-Exist`` header, so a Spark task retry that replays
+a partition creates again every resource that already landed. The merge
+classification (insert only when the key is absent) runs once, against
+the snapshot taken before the write, and does not guard a replay. A
+conditional per-row create is the open fix, ROADMAP.md Direction 3.
 
 Counters (A5, :309-320) come back through Spark accumulators and — exactly —
 from ``action_counts`` over the plan itself.
@@ -151,7 +155,9 @@ def write_action_plan(plan: DataFrame, cfg: WriterConfig) -> dict[str, int]:
     per ``transaction``/``batch`` Bundle POSTed to the base URL, with a
     per-entry response-status check.
 
-    Retry/idempotence: PUT/DELETE replay safely in every mode. POST
+    Retry/idempotence: PUT/DELETE replay safely in every mode. Per-row
+    POSTs carry no ``If-None-Exist``, so a replayed partition duplicates
+    the creates that already landed (open: ROADMAP.md Direction 3). POST
     entries in bundle mode carry ``ifNoneExist: identifier={key}``
     (conditional create, on by default) so a replayed partition —
     a ``batch`` bundle that partially applied before an entry failed, or

@@ -13,9 +13,10 @@ shape a lakehouse lands on:
   trickle of changes, a merge touches days, not the table.  The test pins
   this physically (untouched partitions keep byte-identical file lists and
   mtimes).
-- **O(1) Spark jobs, not O(partitions)**: classification runs as ONE
-  aggregation over the whole delta (grouped by partition × action ×
-  key-present), the rewrite is ONE ``partitionBy`` job into a single
+- **O(1) Spark jobs, not O(partitions)**: the MERGE step itself is
+  operators/merge.apply_merge (shared with versioned_table and the corpus
+  export), which classifies the whole delta in ONE checkpoint job; the
+  rewrite is ONE ``partitionBy`` job into a single
   scratch root, and the per-partition go-live step is a metadata rename
   fanned out on a thread pool.  A merge touching 1,000 partitions costs
   ~3 jobs + 1,000 concurrent renames, not ~5,000 sequential driver jobs.
@@ -24,10 +25,11 @@ shape a lakehouse lands on:
   story (recover_compaction_leftovers rolls back or finishes interrupted
   swaps; the shared ``__merging`` scratch root is judged against the table
   root, which a mid-batch crash always leaves live partition-by-partition).
-- **Same honesty rules as the HTTP path**: unknown action labels fail
-  loudly; returned counts state exactly what was applied and what was
-  skipped (a delete/update whose key is absent from the table is a
-  ``noop_missing_key``, reported, never silently dropped).
+- **Same honesty rules as the HTTP path**: unknown action labels and
+  inserts of a key already in its partition fail loudly; returned counts
+  state exactly what was applied and what was skipped (a delete/update
+  whose key is absent from the table is a ``noop_missing_key``, reported,
+  never silently dropped).
 
 NOT a transaction log: concurrent WRITERS to the same partition race, as
 everywhere else in the plain-parquet layer — the module docstring of
@@ -42,13 +44,9 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cnics_to_fhir_spark.operators.merge import (
-    ACTION_DELETE,
-    ACTION_INSERT,
-    ACTION_UPDATE,
-)
+from cnics_to_fhir_spark.load.versioned_table import cluster_for_write
+from cnics_to_fhir_spark.operators.merge import apply_merge
 
-_KNOWN = {ACTION_INSERT, ACTION_UPDATE, ACTION_DELETE}
 _SWAP_THREADS = 16
 
 
@@ -86,17 +84,9 @@ def merge_into_table(
     table.  The O(touched) driver-side partition list itself is inherent
     to the per-partition swap design and unaffected.
     """
-    # ONE driver round-trip covers action validation AND the touched-
-    # partition list: distinct (action, partition) pairs are bounded by
-    # |actions| x |touched| (guide §5: each extra distinct().collect() is
-    # a full plan scan + exchange + driver wait).
-    ap = plan.select(
-        "action", F.col(partition_col).alias("p")
-    ).distinct().collect()
-    bad = sorted({r["action"] for r in ap if r["action"] not in _KNOWN})
-    if bad:
-        raise ValueError(f"merge_into_table: unknown action labels {bad!r}")
-
+    # the touched-partition list is the one driver round-trip before the
+    # merge; apply_merge validates the action labels
+    ap = plan.select(F.col(partition_col).alias("p")).distinct().collect()
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     fs = jvm.org.apache.hadoop.fs.Path(table).getFileSystem(conf)
@@ -171,89 +161,11 @@ def merge_into_table(
             [], plan.select(partition_col, key_col, *payload_cols).schema
         )
 
-    # Classify against what the table ACTUALLY holds — an update for an
-    # absent key (or delete of one) is reported, not invented/ignored.
-    # ONE semi-shaped join flags presence for every plan row; everything
-    # downstream (counts AND rewrite content) reads the flagged plan, so
-    # the whole merge classifies in a single aggregation instead of 4-5
-    # actions per touched partition.
-    # Joins on the partition column are NULL-SAFE: rows in the NULL
-    # partition must match their on-disk counterparts (plain equality
-    # would classify every NULL-partition update as noop_missing_key and
-    # then resurrect the "deleted" old rows as survivors).
-    present = (
-        existing.select(
-            F.col(partition_col).alias("__pp"), F.col(key_col).alias("__pk")
-        )
-        .distinct()
-        .withColumn("__present", F.lit(True))
-    )
-    # The (action, present) tally rides the checkpoint materialization as
-    # an Observation — same integer counts, one driver round-trip fewer
-    # per merge (guide §5).
-    from pyspark.sql import Observation
-
-    def _tcount(action: str, pres: bool):
-        cond = (F.col("action") == action) & (
-            F.col("__present") if pres else ~F.col("__present")
-        )
-        return F.count(F.when(cond, F.lit(1))).alias(
-            f"{action}_{'t' if pres else 'f'}"
-        )
-
-    obs = Observation()
-    flagged = (
-        plan.join(
-            present,
-            on=(
-                F.col(partition_col).eqNullSafe(F.col("__pp"))
-                & F.col(key_col).eqNullSafe(F.col("__pk"))
-            ),
-            how="left",
-        )
-        .drop("__pp", "__pk")
-        .withColumn("__present", F.coalesce(F.col("__present"), F.lit(False)))
-        .observe(
-            obs,
-            *[_tcount(a, p) for a in sorted(_KNOWN) for p in (True, False)],
-        )
-        .localCheckpoint()
-    )
-    got = obs.get  # blocks on the checkpoint job above
-    tally = {
-        (a, p): got[f"{a}_{'t' if p else 'f'}"]
-        for a in sorted(_KNOWN)
-        for p in (True, False)
-    }
-    counts = {
-        "inserted": tally.get((ACTION_INSERT, True), 0)
-        + tally.get((ACTION_INSERT, False), 0),
-        "updated": tally.get((ACTION_UPDATE, True), 0),
-        "deleted": tally.get((ACTION_DELETE, True), 0),
-        "noop_missing_key": tally.get((ACTION_UPDATE, False), 0)
-        + tally.get((ACTION_DELETE, False), 0),
-        "partitions_rewritten": len(parts),
-    }
-
-    # Rewrite content: survivors = existing rows whose (partition, key) is
-    # not touched by an update/delete; incoming = inserts + updates whose
-    # key is present.  All keyed joins — no key list ever rides the driver.
-    touched_keys = flagged.filter(
-        F.col("action").isin(ACTION_UPDATE, ACTION_DELETE)
-    ).select(F.col(partition_col).alias("__tp"), F.col(key_col).alias("__tk"))
-    survivors = existing.join(
-        touched_keys,
-        on=(
-            F.col(partition_col).eqNullSafe(F.col("__tp"))
-            & F.col(key_col).eqNullSafe(F.col("__tk"))
-        ),
-        how="left_anti",
-    )
-    incoming = flagged.filter(
-        (F.col("action") == ACTION_INSERT)
-        | ((F.col("action") == ACTION_UPDATE) & F.col("__present"))
-    ).select(partition_col, key_col, *payload_cols)
-    merged = survivors.unionByName(incoming)
+    # Classify against what the table ACTUALLY holds, on the NULL-safe
+    # (partition, key) pair: rows in the NULL partition must match their
+    # on-disk counterparts.
+    merged, counts = apply_merge(plan, existing, [partition_col, key_col])
+    counts["partitions_rewritten"] = len(parts)
 
     # ONE partitioned write into a shared scratch root (a sibling of the
     # table, so partition discovery on the table never sees it; its name
@@ -261,23 +173,7 @@ def merge_into_table(
     # repartition keys whole partitions (plus a bounded key-hash salt when
     # files_per_partition is set) to one task each — no small-file spray.
     scratch_root = f"{table}__merging"
-    if files_per_partition is not None:
-        # explicit numPartitions: AQE coalesces hint-only repartitions by
-        # size, collapsing the salt spread to one task at small volumes —
-        # the ≤files_per_partition bound held but the spread the caller
-        # asked for silently didn't (versioned_table measured it); salt
-        # tuples colliding into one of N tasks mean fewer files, never
-        # more, so the bound holds for any N.
-        from cnics_to_fhir_spark.load.versioned_table import shuffle_partition_count
-
-        n = shuffle_partition_count(merged)
-        merged = merged.repartition(
-            n,
-            F.col(partition_col),
-            F.pmod(F.xxhash64(F.col(key_col)), F.lit(files_per_partition)),
-        )
-    else:
-        merged = merged.repartition(F.col(partition_col))
+    merged = cluster_for_write(merged, partition_col, files_per_partition, key_col)
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(scratch_root)
 
     # Go live: per-partition rename-aside swaps, pure metadata ops, fanned

@@ -31,11 +31,12 @@ touched partitions' files (read via the manifest — partition-scoped like
 table_merge) and writes ONE partitioned job.  Nothing here scans the
 table to commit.
 
-Same honesty rules as load/table_merge: unknown action labels fail
-loudly; counts report exactly what was applied; NULL partition values
-are supported (the writer's __HIVE_DEFAULT_PARTITION__ plus null-safe
-joins); empty-string partition values are refused (they collapse into
-the NULL partition on write).
+The MERGE step is operators/merge.apply_merge, shared with load/table_merge,
+so the honesty rules are the same: unknown action labels and inserts of
+present keys fail loudly; counts report exactly what was applied; NULL
+partition values are supported (the writer's __HIVE_DEFAULT_PARTITION__
+plus null-safe joins); empty-string partition values are refused (they
+collapse into the NULL partition on write).
 """
 
 from __future__ import annotations
@@ -48,13 +49,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cnics_to_fhir_spark.operators.merge import (
-    ACTION_DELETE,
-    ACTION_INSERT,
-    ACTION_UPDATE,
-)
+from cnics_to_fhir_spark.operators.merge import apply_merge
 
-_KNOWN = {ACTION_INSERT, ACTION_UPDATE, ACTION_DELETE}
 VERSIONS_DIR = "_versions"
 DATA_DIR = "data"
 NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
@@ -159,6 +155,31 @@ def shuffle_partition_count(df: DataFrame) -> int:
         return max(1, df.rdd.getNumPartitions())
 
 
+def cluster_for_write(
+    df: DataFrame,
+    partition_col: str,
+    files_per_partition: int | None,
+    salt_col: str | None,
+) -> DataFrame:
+    """Repartition so a ``partitionBy(partition_col)`` write gives each
+    task whole partitions — one file per partition, or at most
+    ``files_per_partition`` files spread by a hash of ``salt_col``."""
+    if files_per_partition is None or salt_col is None:
+        return df.repartition(F.col(partition_col))
+    # numPartitions is EXPLICIT because AQE coalesces hint-only
+    # repartitions by size — at small volumes every salt bucket lands in
+    # one coalesced task and the SPREAD the caller asked for never happens
+    # (measured: 4-salt repartition → 1 file/partition under AQE).
+    # Distinct (partition, salt) tuples may collide into one of the N
+    # tasks — fewer files, never more — so the ≤files_per_partition bound
+    # holds for any N.
+    return df.repartition(
+        shuffle_partition_count(df),
+        F.col(partition_col),
+        F.pmod(F.xxhash64(F.col(salt_col)), F.lit(files_per_partition)),
+    )
+
+
 def _write_commit(
     df: DataFrame,
     table: str,
@@ -168,24 +189,7 @@ def _write_commit(
     salt_col: str | None = None,
 ) -> list[dict]:
     commit_dir = os.path.join(table, DATA_DIR, f"commit-{version:08d}")
-    if files_per_partition is not None and salt_col is not None:
-        # bounded key-hash salt: whole partitions per task, capped files.
-        # numPartitions is EXPLICIT because AQE coalesces hint-only
-        # repartitions by size — at small volumes every salt bucket lands
-        # in one coalesced task and the file bound silently becomes 1
-        # (fine) but the SPREAD the caller asked for never happens
-        # (measured: 4-salt repartition → 1 file/partition under AQE).
-        # Distinct (partition, salt) tuples may collide into one of the N
-        # tasks — fewer files, never more — so the ≤files_per_partition
-        # bound holds for any N.
-        n = shuffle_partition_count(df)
-        df = df.repartition(
-            n,
-            F.col(partition_col),
-            F.pmod(F.xxhash64(F.col(salt_col)), F.lit(files_per_partition)),
-        )
-    else:
-        df = df.repartition(F.col(partition_col))
+    df = cluster_for_write(df, partition_col, files_per_partition, salt_col)
     df.write.mode("overwrite").partitionBy(partition_col).parquet(commit_dir)
     # drop writer bookkeeping so vacuum's referenced-file sweep stays exact
     for junk in ("_SUCCESS",):
@@ -277,17 +281,9 @@ def merge_versioned(
     get fresh files in this commit's directory, untouched partitions
     carry their manifest entries forward verbatim, prior versions stay
     readable.  Returns table_merge's honest counts plus ``version``."""
-    # ONE driver round-trip covers both validations: distinct (action,
-    # partition) pairs are bounded by |actions| x |touched partitions| —
-    # the two separate distinct().collect() jobs this replaces each cost a
-    # full plan-scan + exchange + driver wait (guide §5: the driver gap
-    # between many small jobs IS the latency of fixture-building entries).
-    ap = plan.select(
-        "action", F.col(partition_col).alias("p")
-    ).distinct().collect()
-    bad = sorted({r["action"] for r in ap if r["action"] not in _KNOWN})
-    if bad:
-        raise ValueError(f"merge_versioned: unknown action labels {bad!r}")
+    # the touched-partition list is the one driver round-trip before the
+    # merge; apply_merge validates the action labels
+    ap = plan.select(F.col(partition_col).alias("p")).distinct().collect()
     parent = current_version(table)
     if parent is None:
         raise ValueError(f"no versioned table at {table}; create_table first")
@@ -313,23 +309,12 @@ def merge_versioned(
 
     touched = {penc(p) for p in parts}
     carried = [e for e in man["entries"] if e["partition"] not in touched]
-    touched_entries = [e for e in man["entries"] if e["partition"] in touched]
-
-    if touched_entries:
-        by_commit: dict[str, list[str]] = {}
-        for e in touched_entries:
-            full = os.path.join(table, e["path"])
-            commit_dir = os.path.dirname(os.path.dirname(full))
-            by_commit.setdefault(commit_dir, []).append(full)
-        existing: DataFrame | None = None
-        for commit_dir, paths in sorted(by_commit.items()):
-            df = spark.read.option("basePath", commit_dir).parquet(*sorted(paths))
-            existing = df if existing is None else existing.unionByName(df)
-    else:
-        existing = None
     payload_cols = [
         c for c in plan.columns if c not in (key_col, "action", "id", partition_col)
     ]
+    existing = _read_entry_paths(
+        spark, table, [e["path"] for e in man["entries"] if e["partition"] in touched]
+    )
     if existing is None:
         existing = spark.createDataFrame(
             [], plan.select(partition_col, key_col, *payload_cols).schema
@@ -337,89 +322,9 @@ def merge_versioned(
     else:
         existing = existing.select(partition_col, key_col, *payload_cols)
 
-    # classification: identical to table_merge — ONE null-safe presence
-    # join, ONE tally aggregation
-    present = (
-        existing.select(
-            F.col(partition_col).alias("__pp"), F.col(key_col).alias("__pk")
-        )
-        .distinct()
-        .withColumn("__present", F.lit(True))
-    )
-    # The (action, present) tally rides the checkpoint materialization as
-    # an Observation instead of a separate groupBy job — same integer
-    # counts, one driver round-trip fewer per merge (guide §5).
-    from pyspark.sql import Observation
-
-    def _tcount(action: str, present: bool):
-        cond = (F.col("action") == action) & (
-            F.col("__present") if present else ~F.col("__present")
-        )
-        return F.count(F.when(cond, F.lit(1))).alias(
-            f"{action}_{'t' if present else 'f'}"
-        )
-
-    obs = Observation()
-    flagged = (
-        plan.join(
-            present,
-            on=(
-                F.col(partition_col).eqNullSafe(F.col("__pp"))
-                & F.col(key_col).eqNullSafe(F.col("__pk"))
-            ),
-            how="left",
-        )
-        .drop("__pp", "__pk")
-        .withColumn("__present", F.coalesce(F.col("__present"), F.lit(False)))
-        .observe(
-            obs,
-            *[_tcount(a, p) for a in sorted(_KNOWN) for p in (True, False)],
-        )
-        .localCheckpoint()
-    )
-    got = obs.get  # blocks on the checkpoint job above
-    tally = {
-        (a, p): got[f"{a}_{'t' if p else 'f'}"]
-        for a in sorted(_KNOWN)
-        for p in (True, False)
-    }
-    # INSERT of an already-present key would silently duplicate the key in
-    # the new version (survivors only anti-join UPDATE/DELETE keys) — fail
-    # loudly, consistent with the unknown-action policy.
-    ins_conflict = tally.get((ACTION_INSERT, True), 0)
-    if ins_conflict:
-        raise ValueError(
-            f"merge_versioned: {ins_conflict} insert(s) of keys already "
-            "present in their partition — duplicating keys would corrupt "
-            "the table; send them as updates"
-        )
+    merged, counts = apply_merge(plan, existing, [partition_col, key_col])
     version = parent + 1
-    counts = {
-        "inserted": tally.get((ACTION_INSERT, False), 0),
-        "updated": tally.get((ACTION_UPDATE, True), 0),
-        "deleted": tally.get((ACTION_DELETE, True), 0),
-        "noop_missing_key": tally.get((ACTION_UPDATE, False), 0)
-        + tally.get((ACTION_DELETE, False), 0),
-        "partitions_rewritten": len(parts),
-        "version": version,
-    }
-
-    touched_keys = flagged.filter(
-        F.col("action").isin(ACTION_UPDATE, ACTION_DELETE)
-    ).select(F.col(partition_col).alias("__tp"), F.col(key_col).alias("__tk"))
-    survivors = existing.join(
-        touched_keys,
-        on=(
-            F.col(partition_col).eqNullSafe(F.col("__tp"))
-            & F.col(key_col).eqNullSafe(F.col("__tk"))
-        ),
-        how="left_anti",
-    )
-    incoming = flagged.filter(
-        (F.col("action") == ACTION_INSERT)
-        | ((F.col("action") == ACTION_UPDATE) & F.col("__present"))
-    ).select(partition_col, key_col, *payload_cols)
-    merged = survivors.unionByName(incoming)
+    counts.update(partitions_rewritten=len(parts), version=version)
 
     new_entries = _write_commit(
         merged, table, version, partition_col, files_per_partition, salt_col=key_col

@@ -1,6 +1,7 @@
-"""Graph propagation operators — the join-agg-per-iteration algorithm
-class (PageRank here; connected components lives in operators/dedup.py's
-label propagation).
+"""Graph operators — the join-agg-per-iteration algorithm class:
+PageRank, connected components by star contraction
+(``connected_components_star``; operators/dedup.py keeps the min-label
+propagation variant, ``duplicate_clusters``) and triangle counts.
 
 Spark-idiomatic shape: the edge list stays distributed; one iteration is
 ``ranks ⋈ edges → groupBy(dst) → sum`` — a single keyed shuffle.  No

@@ -13,7 +13,9 @@ That is exactly ONE full-outer join per resource type — the engine's central
 IR. Everything upstream (extract + transform + assembly) and downstream (the
 HTTP writer) hangs off this plan DataFrame, which makes the whole pipeline
 testable without a FHIR server and lets the same code run under
-``foreachBatch`` for incremental mode (SURVEY.md §2.10).
+``foreachBatch`` for incremental mode (SURVEY.md §2.10). The copy-on-write
+sinks (load/table_merge, load/versioned_table, load/corpus_export) apply a
+plan through ``apply_merge``.
 
 Scale design: both sides are pre-aggregated to one row per key BEFORE the
 join (the reference's loop takes the first key match then breaks — :552-560;
@@ -31,6 +33,7 @@ from pyspark.sql import functions as F
 ACTION_INSERT = "insert"
 ACTION_UPDATE = "update"
 ACTION_DELETE = "delete"
+ACTIONS = (ACTION_INSERT, ACTION_UPDATE, ACTION_DELETE)
 
 
 def merge_plan(
@@ -101,6 +104,95 @@ def merge_plan(
         F.col("__existing_id").alias("id"),
         *[F.col(c) for c in payload_cols],
     )
+
+
+def apply_merge(
+    plan: DataFrame,
+    existing: DataFrame,
+    keys: list[str],
+    action_col: str = "action",
+    unique_keys: bool = False,
+) -> tuple[DataFrame, dict[str, int]]:
+    """Apply an action plan to a copy-on-write target's existing rows — the
+    step every table/export sink shares after ``merge_plan``.
+
+    ``existing`` holds the target rows the plan can touch, already projected
+    to the columns the sink writes; ``plan`` carries those columns plus
+    ``action_col``.  Each plan row is flagged by NULL-SAFE presence of its
+    ``keys`` in ``existing`` (rows in a NULL partition must match their
+    stored counterparts).  ``unique_keys=True`` states that the caller has
+    already checked ``existing`` holds each key once, which drops the dedup
+    aggregation (one shuffle stage) from the presence probe.  The flagged
+    plan is frozen with one eager ``localCheckpoint``; the label check and
+    the (action, present) tally ride that job as an Observation, so the
+    step adds no job of its own.
+
+    Raises ValueError, before the caller writes anything, on an unknown
+    label or on an INSERT of a key already present (survivors keep it, so
+    the key would be duplicated).  Returns the target's new rows — existing
+    rows no update/delete touches, plus inserts and updates of present
+    keys — and the counts {inserted, updated, deleted, noop_missing_key}:
+    an update or delete of an absent key is a reported no-op, never
+    invented or silently dropped.
+    """
+    from functools import reduce
+
+    from pyspark.sql import Observation
+
+    act = F.col(action_col)
+    probe = [f"__k{i}" for i in range(len(keys))]
+    on = reduce(
+        lambda a, b: a & b,
+        [F.col(k).eqNullSafe(F.col(p)) for k, p in zip(keys, probe)],
+    )
+
+    def probe_keys(df: DataFrame) -> DataFrame:
+        return df.select(*[F.col(k).alias(p) for k, p in zip(keys, probe)])
+
+    present = probe_keys(existing)
+    if not unique_keys:
+        present = present.distinct()
+    known = F.coalesce(act.isin(*ACTIONS), F.lit(False))
+    metrics = [
+        F.collect_set(F.when(~known, F.coalesce(act, F.lit("NULL")))).alias("bad")
+    ] + [
+        F.count(F.when((act == a) & (F.col("__present") == p), F.lit(1))).alias(
+            f"{a}_{p}"
+        )
+        for a in ACTIONS
+        for p in (True, False)
+    ]
+    obs = Observation()
+    flagged = (
+        plan.join(present.withColumn("__present", F.lit(True)), on=on, how="left")
+        .drop(*probe)
+        .withColumn("__present", F.coalesce(F.col("__present"), F.lit(False)))
+        .observe(obs, *metrics)
+        .localCheckpoint(eager=True)
+    )
+    got = obs.get  # blocks on the checkpoint job above
+    if got["bad"]:
+        raise ValueError(f"unknown {action_col} labels {sorted(got['bad'])!r}")
+    if got[f"{ACTION_INSERT}_True"]:
+        raise ValueError(
+            f"{got[f'{ACTION_INSERT}_True']} insert(s) of keys already present "
+            "in the target — duplicating a key would corrupt it; send them "
+            "as updates"
+        )
+    counts = {
+        "inserted": got[f"{ACTION_INSERT}_False"],
+        "updated": got[f"{ACTION_UPDATE}_True"],
+        "deleted": got[f"{ACTION_DELETE}_True"],
+        "noop_missing_key": got[f"{ACTION_UPDATE}_False"]
+        + got[f"{ACTION_DELETE}_False"],
+    }
+
+    touched = probe_keys(flagged.filter(act.isin(ACTION_UPDATE, ACTION_DELETE)))
+    survivors = existing.join(touched, on=on, how="left_anti")
+    incoming = flagged.filter(
+        (act == ACTION_INSERT) | ((act == ACTION_UPDATE) & F.col("__present"))
+    ).select(*existing.columns)
+    return survivors.unionByName(incoming), counts
 
 
 def scd2_merge(

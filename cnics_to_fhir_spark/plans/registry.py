@@ -167,20 +167,6 @@ _PRIORITY: tuple[str, ...] = (
     "w06_exact_percentiles",
 )
 
-# Catalog entries that have never appeared in any CORRECTNESS_r0*.json
-# (the driver's independent gate). Recompute after each round:
-#   catalog keys - union(CORRECTNESS_r01..r0N keys).
-# CORRECTNESS_r07 landed green on its full 50-entry prefix, clearing the
-# round-6 backlog; only the 10 round-7 additions remain, all rotated into
-# the round-8 prefix above.
-_NEVER_DRIVER_VERIFIED: tuple[str, ...] = (
-    # Recomputed after round 11 (catalog keys − union of CORRECTNESS_r01-r11
-    # keys): the r11 prefix went 43+7 clean — st12 and ds17 got their
-    # records. Only the round-12 newcomer remains, in block (2) of the
-    # round-12 prefix above, so this tuple should be EMPTY after round 12.
-    "ds18_interleave_full_order",
-)
-
 
 def catalog() -> dict[str, CatalogEntry]:
     # Import side-effect modules that populate the registry.

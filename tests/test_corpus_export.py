@@ -204,10 +204,6 @@ def test_update_export_honesty_rules(spark, tmp_path):
         update_export(spark, path, spark.createDataFrame(
             [(1, "upsert", "x", "s")],
             "doc_id long, change string, text string, source string"))
-    with pytest.raises(ValueError, match="insert\\(s\\) of keys already present"):
-        update_export(spark, path, spark.createDataFrame(
-            [(1, "insert", "x", "s")],
-            "doc_id long, change string, text string, source string"))
     with pytest.raises(ValueError, match="changes columns"):
         update_export(spark, path, spark.createDataFrame(
             [(1, "update")], "doc_id long, change string"))

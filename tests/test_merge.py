@@ -4,11 +4,13 @@ reference loop semantics (cnics_to_fhir.py:548-570, :328-337)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark.operators.merge import (
     action_counts,
     anti_join_deletes,
+    apply_merge,
     assert_unique_keys,
     merge_plan,
 )
@@ -58,6 +60,28 @@ def test_merge_plan_dup_keys_with_null_payload_collapse_nulls_last(spark):
     )
     rows = merge_plan(only_null, existing).collect()
     assert len(rows) == 1 and rows[0]["body"] is None
+
+
+def test_apply_merge_null_safe_keys_and_duplicated_target_keys(spark):
+    """Presence is NULL-safe on every key column, a key the target holds
+    twice still counts as ONE update (both stored rows are replaced by the
+    one incoming row), and a NULL action label is refused like any other
+    unknown label."""
+    existing = spark.createDataFrame(
+        [(1, None, "a"), (1, None, "b"), (2, None, "c"), (2, "p", "d")],
+        "k long, p string, v string",
+    )
+    plan = spark.createDataFrame(
+        [(1, None, "update", "new"), (2, None, "delete", None),
+         (3, None, "delete", None)],
+        "k long, p string, action string, v string",
+    )
+    merged, counts = apply_merge(plan, existing, ["p", "k"])
+    assert counts == {"inserted": 0, "updated": 1, "deleted": 1, "noop_missing_key": 1}
+    assert sorted(map(tuple, merged.collect()), key=str) == [(1, None, "new"), (2, "p", "d")]
+
+    with pytest.raises(ValueError, match=r"unknown action labels \['NULL'\]"):
+        apply_merge(plan.withColumn("action", F.lit(None).cast("string")), existing, ["p", "k"])
 
 
 def test_anti_join_deletes(spark):

@@ -213,17 +213,6 @@ def test_delete_everything_reads_as_empty_table(spark, tmp_path):
     assert vt.read_version(spark, table, 0).count() == 8
 
 
-def test_insert_of_present_key_fails_loudly(spark, tmp_path):
-    table = str(tmp_path / "t")
-    _seed(spark, table)
-    plan = spark.createDataFrame(
-        [(1, "insert", None, "dup", 1)],
-        "key long, action string, id string, val string, day int",
-    )
-    with pytest.raises(ValueError, match="insert\\(s\\) of keys already present"):
-        vt.merge_versioned(spark, table, plan, key_col="key", partition_col="day")
-
-
 def test_vacuum_sweeps_manifest_tmp_debris(spark, tmp_path):
     """Old .tmp debris is swept; FRESH .tmp files survive the grace period
     — a concurrent writer's in-flight temp manifest (created between
