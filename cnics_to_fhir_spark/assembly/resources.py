@@ -49,8 +49,18 @@ def _identifier(system: Column, value: Column) -> Column:
     return F.struct(system.alias("system"), value.alias("value"))
 
 
+def site_patient_system(site: Column) -> Column:
+    """identifier[0].system of a site's Patient (cnics_to_fhir.py:387)."""
+    return F.concat(F.lit(SITE_PATIENT_ID_BASE), F.lower(site))
+
+
 def _subject(patient_ref: Column) -> Column:
-    return F.struct(F.concat(F.lit("Patient/"), patient_ref).alias("reference")).alias("subject")
+    """``Patient/<server id>``; a ``urn:uuid:`` (the fullUrl of a Patient
+    created in the same transaction) is already a full reference."""
+    ref = F.when(patient_ref.startswith("urn:uuid:"), patient_ref).otherwise(
+        F.concat(F.lit("Patient/"), patient_ref)
+    )
+    return F.struct(ref.alias("reference")).alias("subject")
 
 
 def _ombc_extension(url_suffix: str, code_display: Column) -> Column:
@@ -125,7 +135,7 @@ def patient_resource(
 
     site_ident = F.when(
         site_patient_id.isNotNull(),
-        _identifier(F.concat(F.lit(SITE_PATIENT_ID_BASE), lsite), site_patient_id),
+        _identifier(site_patient_system(site), site_patient_id),
     )
     sess_idents = F.transform(
         F.coalesce(session_ids, F.array().cast("array<string>")),

@@ -6,14 +6,14 @@ writer in one batched pass and the counters come from the plan itself.
 ``fhir_patient_id`` resolution: the reference writes each Patient first and
 re-GETs its server id before building subject references
 (cnics_to_fhir.py:530-539). Bulk mode resolves ids from the snapshot join
-instead; patients not yet in the store get a deterministic placeholder
-reference (``urn:pending:<SitePatientId>``). Nothing rewrites that
-placeholder: a resource written in the same run as its new Patient lands
-in the store still pointing at ``urn:pending:``, and only the next run —
-which finds the Patient in the snapshot and sends the resource as an
-update — stores the server id. Resolving it within one run (a Patient-first
-write wave, or ``transaction`` Bundles with ``urn:uuid:`` full URLs) is the
-open fix, ROADMAP.md Direction 3.
+instead; a patient not yet in the store is referenced by the deterministic
+``urn:uuid:`` fullUrl of its own create entry (``patient_full_url`` over
+the Patient's identifier system and value). The default writer sends the
+Patient and its dependents in one ``transaction`` Bundle, where the server
+resolves that reference to the id it assigns, so no placeholder survives
+the run. The per-row writer (``bundle_size=0``) has no Patient-first wave:
+there the reference stays unresolved until the next run finds the Patient
+in the snapshot and sends the resource as an update.
 """
 
 from __future__ import annotations
@@ -24,7 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark import pipelines
+from cnics_to_fhir_spark.assembly.resources import site_patient_system
 from cnics_to_fhir_spark.config import JobSpec, Settings
+from cnics_to_fhir_spark.load.http_writer import patient_full_url, write_action_plan
 from cnics_to_fhir_spark.operators import extract
 
 # table name -> DataFrame; names: Patient, Demographic, Diagnosis, Medication,
@@ -34,14 +36,17 @@ TableProvider = Callable[[str], DataFrame]
 
 def resolve_patient_ids(page: DataFrame, snapshot: DataFrame) -> DataFrame:
     """Attach fhir_patient_id to the page: server id when the Patient
-    exists, else the pending placeholder."""
+    exists, else the ``urn:uuid:`` fullUrl its create entry will carry."""
     pat_ids = (
         snapshot.filter(F.col("resource_type") == "Patient")
         .select(F.col("identifier_0_value").alias("SitePatientId"), F.col("id").alias("__srv_id"))
     )
     return page.join(F.broadcast(pat_ids), "SitePatientId", "left").withColumn(
         "fhir_patient_id",
-        F.coalesce(F.col("__srv_id"), F.concat(F.lit("urn:pending:"), F.col("SitePatientId"))),
+        F.coalesce(
+            F.col("__srv_id"),
+            patient_full_url(site_patient_system(F.col("Site")), F.col("SitePatientId")),
+        ),
     ).drop("__srv_id")
 
 
@@ -124,8 +129,6 @@ def run_job(
         sp = site_plan(spark, job, site, settings, tables_for_site(site))
         plan = sp if plan is None else plan.unionByName(sp)
     if writer_cfg is not None:
-        from cnics_to_fhir_spark.load.http_writer import write_action_plan
-
         write_action_plan(plan.drop("site"), writer_cfg)
     return plan
 

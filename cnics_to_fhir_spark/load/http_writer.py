@@ -5,21 +5,26 @@ Replaces the reference's one-HTTP-call-per-row loop (cnics_to_fhir.py:531,
 ``df.foreachPartition``: one connection per partition (the reference's own
 ``requests.Session`` optimization, :246-247, made per-executor), explicit
 retry with backoff mirroring the 5×5s SQL retry policy (:163-177).
-PUT/DELETE replay safely. POSTs are safe to replay only in bundle mode,
-whose entries carry ``ifNoneExist`` by default: per-row mode sends a bare
-POST with no ``If-None-Exist`` header, so a Spark task retry that replays
-a partition creates again every resource that already landed. The merge
-classification (insert only when the key is absent) runs once, against
-the snapshot taken before the write, and does not guard a replay. A
-conditional per-row create is the open fix, ROADMAP.md Direction 3.
+
+Two transport modes. The default sends FHIR ``transaction`` Bundles of
+about ``WriterConfig.bundle_size`` plan rows each, grouped by patient: a
+new Patient's create and every row whose subject references it travel in
+one transaction, the Patient entry first, under a deterministic
+``fullUrl: urn:uuid:`` that the dependents' ``subject.reference`` already
+holds (``job.resolve_patient_ids``). The server rewrites those references
+to the id it assigns (FHIR R4 bundle.html#references), so no placeholder
+survives one run. ``bundle_size=0`` keeps the reference-parity per-row
+mode (one request per resource); it has no Patient-first wave, so a
+resource created in the same run as its new Patient keeps the ``urn:uuid:``
+reference until the next run sends it as an update.
+
+Replay safety: PUT/DELETE replay safely. Every create is conditional
+(``ifNoneExist`` on a Bundle entry, the ``If-None-Exist`` header on a
+per-row POST) on the resource's ``identifier[0]`` system and value, so a
+Spark task retry that replays a partition re-creates nothing that landed.
 
 Counters (A5, :309-320) come back through Spark accumulators and — exactly —
 from ``action_counts`` over the plan itself.
-
-Two transport modes: per-row (reference parity — one request per resource)
-and FHIR ``transaction``/``batch`` Bundles (``WriterConfig.bundle_size=N``:
-N plan rows per POST with a per-entry response-status check), which removes
-the per-row HTTP round-trip — the write-path ceiling at 100 TB.
 """
 
 from __future__ import annotations
@@ -28,7 +33,13 @@ import json
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+# columns the bundle path adds to the plan: a new Patient's fullUrl, and the
+# group a row must share a transaction with
+_FULL_URL = "__full_url"
+_GROUP = "__group"
 
 
 @dataclass(frozen=True)
@@ -39,34 +50,44 @@ class WriterConfig:
     retry_sleep_s: float = 5.0  # :171 (5 s); scaled down in tests
     timeout_s: float = 30.0
     cascade_patient_delete: bool = True  # ?_cascade=delete (:333)
-    # bundle_size > 0 switches to FHIR `transaction`/`batch` Bundle POSTs of
-    # at most this many entries each — N plan rows per HTTP round-trip
-    # instead of one, the write-path ceiling at scale. 0 keeps the
-    # reference-parity per-row mode (cnics_to_fhir.py:531-533).
-    bundle_size: int = 0
-    bundle_type: str = "transaction"  # or "batch" (independent entries)
-    # Bundle-mode POST entries carry `ifNoneExist: identifier={key}`
-    # (FHIR conditional create) so a Spark task retry that replays a
-    # partially-applied `batch` bundle — or a zombie retry of an already-
-    # committed `transaction` — cannot insert the same resource twice.
-    # The plan's `key` column IS identifier[0].value (operators/merge.py),
-    # so the condition matches exactly what the merge classified on.
+    # bundle_size > 0: FHIR `transaction`/`batch` Bundle POSTs of about this
+    # many entries each, cut only between patients (a new Patient and its
+    # dependents never split), so one bundle exceeds it by at most one
+    # patient's rows. 0 keeps the reference-parity per-row mode
+    # (cnics_to_fhir.py:531-533).
+    bundle_size: int = 100
+    # "batch" entries are independent: the server resolves no urn:uuid:
+    # reference between them
+    bundle_type: str = "transaction"
+    # Every create carries `identifier=<system>|<value>` from the resource's
+    # identifier[0] (FHIR conditional create; `identifier=<key>` when it has
+    # no identifier), so a Spark task retry that replays a partition cannot
+    # create the same resource twice, and another site's resource with the
+    # same value does not turn a create into a no-op. The plan's `key`
+    # column IS identifier[0].value (operators/merge.py), so the condition
+    # matches exactly what the merge classified on.
     conditional_create: bool = True
 
 
-def _send(session, cfg: WriterConfig, method: str, url: str, body: str | None):
-    import requests  # deferred: executors need it only when actually writing
+def patient_full_url(system: Column, value: Column) -> Column:
+    """``urn:uuid:`` fullUrl of a new Patient's create entry: the md5 of
+    ``<system>|<value>`` laid out as a UUID. It is deterministic, so a
+    retried task resends the same one, and it differs between identifier
+    systems, so two sites' patients with the same SitePatientId never
+    share one. NULL when either part is NULL."""
+    h = F.md5(F.concat(system, F.lit("|"), value))
+    parts = [F.substring(h, pos, n) for pos, n in ((1, 8), (9, 4), (13, 4), (17, 4), (21, 12))]
+    return F.concat(F.lit("urn:uuid:"), F.concat_ws("-", *parts))
 
+
+def _send(session, cfg: WriterConfig, method: str, url: str, body: str | None,
+          headers: dict[str, str] | None = None):
     last_exc: Exception | None = None
+    if body:
+        headers = {"Content-Type": "application/fhir+json;charset=utf-8", **(headers or {})}
     for attempt in range(cfg.max_retries):
         try:
-            resp = session.request(
-                method,
-                url,
-                data=body,
-                headers={"Content-Type": "application/fhir+json;charset=utf-8"} if body else None,
-                timeout=cfg.timeout_s,
-            )
+            resp = session.request(method, url, data=body, headers=headers, timeout=cfg.timeout_s)
             resp.raise_for_status()  # E2 (cnics_to_fhir.py:534 etc.)
             return resp
         except Exception as exc:  # noqa: BLE001 — retry loop mirrors E1
@@ -83,17 +104,29 @@ def _entry_url(cfg: WriterConfig, rtype: str, rid: str) -> str:
     return url
 
 
+def _if_none_exist(cfg: WriterConfig, resource: dict, key: str | None) -> str | None:
+    """The conditional-create search for one new resource, or None."""
+    if not cfg.conditional_create:
+        return None
+    ident = (resource.get("identifier") or [{}])[0]
+    if ident.get("system") and ident.get("value"):
+        return f"identifier={ident['system']}|{ident['value']}"
+    return None if key is None else f"identifier={key}"
+
+
 def _bundle_entry(cfg: WriterConfig, row) -> dict:
+    row = row.asDict()
     rtype, action = row["resource_type"], row["action"]
     if action == "insert":
+        resource = json.loads(row["body_json"])
         request = {"method": "POST", "url": rtype}
-        key = row["key"] if "key" in row else None
-        if cfg.conditional_create and key is not None:
-            request["ifNoneExist"] = f"identifier={key}"
-        return {
-            "resource": json.loads(row["body_json"]),
-            "request": request,
-        }
+        cond = _if_none_exist(cfg, resource, row.get("key"))
+        if cond is not None:
+            request["ifNoneExist"] = cond
+        entry = {"resource": resource, "request": request}
+        if row.get(_FULL_URL):
+            entry = {"fullUrl": row[_FULL_URL], **entry}
+        return entry
     if action == "update":
         return {
             "resource": json.loads(row["body_json"]),
@@ -146,25 +179,62 @@ def _post_bundle(session, cfg: WriterConfig, chunk: list, counters) -> None:
         raise RuntimeError(f"bundle entries failed: {bad[:10]}")
 
 
+def group_by_patient(plan: DataFrame) -> DataFrame:
+    """The plan laid out for bundling: each new Patient's insert gets its
+    fullUrl and shares a group, a partition and a contiguous run of rows
+    with every row whose ``subject.reference`` is that fullUrl, the Patient
+    first. Any other row is a group of its own, hashed on (type, action,
+    id, key), so those rows — deletes included — spread over all
+    partitions. Within a partition rows sort on (group, Patient first,
+    type, key). One shuffle."""
+    body = F.col("body_json")
+    new_patient = (F.col("resource_type") == "Patient") & (F.col("action") == "insert")
+    full_url = F.when(
+        new_patient,
+        patient_full_url(
+            F.get_json_object(body, "$.identifier[0].system"),
+            F.get_json_object(body, "$.identifier[0].value"),
+        ),
+    )
+    subject = F.get_json_object(body, "$.subject.reference")
+    group = F.coalesce(
+        F.col(_FULL_URL),
+        F.when(subject.startswith("urn:uuid:"), subject),
+        F.concat_ws("/", "resource_type", "action", "id", "key"),
+    )
+    return (
+        plan.withColumn(_FULL_URL, full_url)
+        .withColumn(_GROUP, group)
+        .repartition(plan.sparkSession.sparkContext.defaultParallelism, _GROUP)
+        .sortWithinPartitions(_GROUP, F.col(_FULL_URL).isNull(), "resource_type", "key")
+    )
+
+
 def write_action_plan(plan: DataFrame, cfg: WriterConfig) -> dict[str, int]:
-    """Execute an action plan against the FHIR endpoint.
+    """Execute an action plan ``(resource_type, action, id, key,
+    body_json)`` against the FHIR endpoint.
 
-    Per-row mode (``bundle_size=0``): insert → POST /{type}; update →
-    PUT /{type}/{id}; delete → DELETE /{type}/{id} (Patient deletes
-    cascade, :333). Bundle mode (``bundle_size=N``): rows are grouped N
-    per ``transaction``/``batch`` Bundle POSTed to the base URL, with a
-    per-entry response-status check.
+    Bundle mode (``bundle_size=N``, the default): ``group_by_patient`` lays
+    the plan out so a new Patient and its dependents are contiguous, and
+    each partition POSTs ``transaction`` Bundles to the base URL, cutting a
+    Bundle once it holds N entries and the next row starts a new group.
+    Every entry's response status is checked. The Patient entry's
+    ``fullUrl`` is the ``urn:uuid:`` its dependents reference, which the
+    server resolves to the id it assigns. Per-row mode (``bundle_size=0``):
+    insert → POST /{type}; update → PUT /{type}/{id}; delete → DELETE
+    /{type}/{id}, in plan order with no Patient-first wave, so a dependent
+    of a Patient created in the same run stores the unresolved
+    ``urn:uuid:`` reference until the next run updates it.
+    Patient deletes cascade in both modes (:333).
 
-    Retry/idempotence: PUT/DELETE replay safely in every mode. Per-row
-    POSTs carry no ``If-None-Exist``, so a replayed partition duplicates
-    the creates that already landed (open: ROADMAP.md Direction 3). POST
-    entries in bundle mode carry ``ifNoneExist: identifier={key}``
-    (conditional create, on by default) so a replayed partition —
-    a ``batch`` bundle that partially applied before an entry failed, or
-    a zombie retry of a committed ``transaction`` — re-creates nothing.
-    With ``conditional_create=False``, ``batch`` bundles are NOT safe
-    under Spark task retry (already-applied POSTs duplicate server-side)
-    — only disable it against a store that rejects ifNoneExist.
+    Retry/idempotence: PUT/DELETE replay safely. Creates are conditional
+    on the resource's identifier system and value (``ifNoneExist`` in a
+    Bundle, ``If-None-Exist`` per row), so a replayed partition — a
+    ``batch`` bundle that partially applied before an entry failed, a
+    zombie retry of a committed ``transaction``, or a per-row partition
+    torn mid-way — re-creates nothing. With ``conditional_create=False``
+    a replay duplicates the creates that already landed — only disable it
+    against a store that rejects conditional creates.
     Accumulator caveat: counters are task-lifetime totals, so a retried
     task re-counts its successful entries; treat counts as at-least-once
     telemetry (the authoritative per-action counts come from
@@ -178,16 +248,16 @@ def write_action_plan(plan: DataFrame, cfg: WriterConfig) -> dict[str, int]:
     headers = dict(cfg.headers)
 
     def run_bundled(rows) -> None:
-        import requests
+        import requests  # deferred: executors need it only when actually writing
 
         session = requests.Session()
         session.headers.update(headers)
         chunk: list = []
         for row in rows:
-            chunk.append(row)
-            if len(chunk) >= cfg.bundle_size:
+            if len(chunk) >= cfg.bundle_size and row[_GROUP] != chunk[-1][_GROUP]:
                 _post_bundle(session, cfg, chunk, counters)
                 chunk = []
+            chunk.append(row)
         if chunk:
             _post_bundle(session, cfg, chunk, counters)
 
@@ -200,7 +270,11 @@ def write_action_plan(plan: DataFrame, cfg: WriterConfig) -> dict[str, int]:
             rtype, action = row["resource_type"], row["action"]
             try:
                 if action == "insert":
-                    _send(session, cfg, "POST", f"{cfg.base_url}/{rtype}", row["body_json"])
+                    cond = _if_none_exist(cfg, json.loads(row["body_json"]), row["key"])
+                    _send(
+                        session, cfg, "POST", f"{cfg.base_url}/{rtype}", row["body_json"],
+                        None if cond is None else {"If-None-Exist": cond},
+                    )
                 elif action == "update":
                     _send(
                         session, cfg, "PUT",
@@ -216,5 +290,8 @@ def write_action_plan(plan: DataFrame, cfg: WriterConfig) -> dict[str, int]:
                 counters["failed"].add(1)
                 raise  # let Spark's task retry handle it (idempotent writes)
 
-    plan.foreachPartition(run_bundled if cfg.bundle_size > 0 else run_partition)
+    if cfg.bundle_size > 0:
+        group_by_patient(plan).foreachPartition(run_bundled)
+    else:
+        plan.foreachPartition(run_partition)
     return {k: v.value for k, v in counters.items()}

@@ -137,9 +137,13 @@ def snapshot_via_http(
     Without shards, one seed → one chain (correct but driver-shaped; fine
     for small stores only)."""
     base = f"{base_url}/{resource_type}?_format=json&_count={page_size}"
-    urls = [(f"{base}&{s}",) for s in shards] if shards else [(base,)]
-    # one task per shard: each walks its own next-chain in parallel
-    seed = spark.createDataFrame(urls, "url string").repartition(len(urls))
+    urls = [f"{base}&{s}" for s in shards] if shards else [base]
+    # one task per shard: each walks its own next-chain in parallel. A
+    # one-row-per-partition range picks its URL in the JVM, so seeding runs
+    # no Python-row RDD and no shuffle.
+    seed = spark.range(0, len(urls), 1, len(urls)).select(
+        F.element_at(F.array(*map(F.lit, urls)), F.col("id").cast("int") + 1).alias("url")
+    )
 
     def fetch(batches: Iterator) -> Iterator:
         import pandas as pd

@@ -125,7 +125,8 @@ def test_run_job_write_readback_converges(spark, bundle_size):
     extract→plan→write→re-read loop, not just the mocked method routing of
     tests/test_writer.py.  Parametrized over both writer transports:
     per-row requests and transaction-Bundle mode (bundle_size=3) — the
-    fixpoint must hold identically under bundled writes."""
+    fixpoint must hold identically under bundled writes, and in bundle mode
+    no placeholder reference is left after the first run."""
     import http.server
     import json as jsonmod
     import threading
@@ -146,18 +147,29 @@ def test_run_job_write_readback_converges(spark, bundle_size):
             self.wfile.write(body)
 
         def _apply_bundle(self, bundle):
-            out = []
-            for ent in bundle["entry"]:
+            """Applies a transaction, first giving every POST entry its id
+            so that references to an entry's ``fullUrl: urn:uuid:`` resolve
+            to it (FHIR R4 bundle.html#references)."""
+            out, ids, refs = [], {}, {}
+            with lock:
+                for i, ent in enumerate(bundle["entry"]):
+                    if ent["request"]["method"] == "POST":
+                        ids[i] = f"srv-{next(seq)}"
+                        if ent.get("fullUrl", "").startswith("urn:uuid:"):
+                            refs[ent["fullUrl"]] = f"{ent['request']['url']}/{ids[i]}"
+            for i, ent in enumerate(bundle["entry"]):
                 req = ent["request"]
                 method, url = req["method"], req["url"].split("?")[0]
+                text = jsonmod.dumps(ent.get("resource"))
+                for full_url, ref in refs.items():
+                    text = text.replace(f'"{full_url}"', f'"{ref}"')
                 with lock:
                     if method == "POST":
-                        rid = f"srv-{next(seq)}"
-                        store[(url, rid)] = jsonmod.dumps(ent["resource"])
+                        store[(url, ids[i])] = text
                         out.append({"response": {"status": "201 Created"}})
                     elif method == "PUT":
                         rtype, rid = url.split("/")
-                        store[(rtype, rid)] = jsonmod.dumps(ent["resource"])
+                        store[(rtype, rid)] = text
                         out.append({"response": {"status": "200 OK"}})
                     elif method == "DELETE":
                         rtype, rid = url.split("/")
@@ -281,8 +293,16 @@ def test_run_job_write_readback_converges(spark, bundle_size):
                 counts[r["action"]] += 1
             return counts
 
+        def placeholders():
+            return [body for body in store.values()
+                    if "urn:uuid:" in body or "urn:pending:" in body]
+
         c1 = run_once()
         assert c1["insert"] >= 3 and c1["delete"] == 1  # 2 patients + 2 dx in; stale out
+        if bundle_size:
+            # each new Patient and its Condition share a transaction whose
+            # urn:uuid: reference the store resolved: none is left after ONE run
+            assert placeholders() == []
 
         c2 = run_once()
         state_after_2 = dict(store)
@@ -290,9 +310,9 @@ def test_run_job_write_readback_converges(spark, bundle_size):
         # unconditional re-PUT updates remain
         assert c2["insert"] == 0 and c2["delete"] == 0
         assert c2["update"] == c1["insert"] + c1["update"]
-        # every update now targets a real server id (no pending placeholders
-        # survive a write+re-read cycle)
-        assert all("urn:pending:" not in body for body in state_after_2.values())
+        # every update now targets a real server id (per-row mode's
+        # unresolved references are gone after a write+re-read cycle)
+        assert placeholders() == []
 
         c3 = run_once()
         assert c3 == c2

@@ -11,7 +11,14 @@ import threading
 
 import pytest
 
-from cnics_to_fhir_spark.load.http_writer import WriterConfig, write_action_plan
+from pyspark.sql import functions as F
+
+from cnics_to_fhir_spark.load.http_writer import (
+    WriterConfig,
+    group_by_patient,
+    patient_full_url,
+    write_action_plan,
+)
 
 requests = pytest.importorskip("requests")
 
@@ -67,8 +74,12 @@ def _plan(spark):
     ).coalesce(1)
 
 
+def _per_row(base_url: str, **kw) -> WriterConfig:
+    return WriterConfig(base_url=base_url, bundle_size=0, **kw)
+
+
 def test_writer_routes_methods(spark, mock_server):
-    counts = write_action_plan(_plan(spark), WriterConfig(base_url=mock_server, retry_sleep_s=0.01))
+    counts = write_action_plan(_plan(spark), _per_row(mock_server, retry_sleep_s=0.01))
     got = set(_Recorder.requests_log)
     assert ("POST", "/Condition") in got
     assert ("PUT", "/Condition/c9") in got
@@ -79,7 +90,7 @@ def test_writer_routes_methods(spark, mock_server):
 
 def test_writer_retries_then_succeeds(spark, mock_server):
     _Recorder.fail_next["PUT /Condition/c9"] = 2  # fail twice, succeed 3rd
-    counts = write_action_plan(_plan(spark), WriterConfig(base_url=mock_server, retry_sleep_s=0.01))
+    counts = write_action_plan(_plan(spark), _per_row(mock_server, retry_sleep_s=0.01))
     assert counts["failed"] == 0
     puts = [p for m, p in _Recorder.requests_log if m == "PUT"]
     assert len(puts) == 3  # two failures + one success
@@ -121,7 +132,7 @@ def test_writer_exhausted_retries_raises(spark, mock_server):
     with pytest.raises(Exception):
         write_action_plan(
             _plan(spark),
-            WriterConfig(base_url=mock_server, retry_sleep_s=0.001, max_retries=2),
+            _per_row(mock_server, retry_sleep_s=0.001, max_retries=2),
         )
 
 
@@ -187,27 +198,113 @@ def bundle_server():
     srv.shutdown()
 
 
-def test_writer_bundle_mode_routes_and_chunks(spark, bundle_server):
-    counts = write_action_plan(
-        _plan(spark),
-        WriterConfig(base_url=bundle_server, retry_sleep_s=0.01, bundle_size=3),
+PAT_SYS = "https://cnics.cirg.washington.edu/site-patient-id/"
+
+
+def _full_url(spark, system: str, value: str) -> str:
+    return spark.range(1).select(patient_full_url(F.lit(system), F.lit(value))).first()[0]
+
+
+def _patient_plan(spark, slices: int | None = None):
+    """Two new patients (uw/p1, ucsd/p1 — same value, different systems)
+    with two Conditions each, an existing patient's update, and deletes;
+    one row per input partition unless ``slices`` says otherwise."""
+    rows = [
+        ("Condition", "update", "c9", "k2", '{"resourceType":"Condition"}'),
+        ("Condition", "delete", "c7", "k3", None),
+        ("Patient", "delete", "p0", "k4", None),
+    ]
+    for site in ("uw", "ucsd"):
+        ref = _full_url(spark, PAT_SYS + site, "p1")
+        for n in (1, 2):
+            rows.append((
+                "Condition", "insert", None, f"{site}-dx{n}",
+                json.dumps({"resourceType": "Condition", "subject": {"reference": ref}}),
+            ))
+        rows.append((
+            "Patient", "insert", None, "p1",
+            json.dumps({"resourceType": "Patient",
+                        "identifier": [{"system": PAT_SYS + site, "value": "p1"}]}),
+        ))
+    rdd = spark.sparkContext.parallelize(rows, slices or len(rows))
+    return spark.createDataFrame(
+        rdd, "resource_type string, action string, id string, key string, body_json string"
     )
-    # 4 rows in one partition, bundle_size=3 → 2 bundles (3 + 1)
-    assert [len(b["entry"]) for b in _BundleRecorder.bundles] == [3, 1]
-    assert set(_BundleRecorder.sub_requests) == {
-        ("POST", "Condition"),
-        ("PUT", "Condition/c9"),
-        ("DELETE", "Condition/c7"),
-        ("DELETE", "Patient/p1?_cascade=delete"),  # cascade survives bundling
-    }
+
+
+def test_writer_bundle_mode_routes_and_chunks(spark, bundle_server):
+    """Bundles are cut only between patients: a new Patient and its
+    dependents share one transaction, the Patient first under a fullUrl the
+    dependents reference, and a bundle passes ``bundle_size`` only to
+    finish the patient it holds."""
+    counts = write_action_plan(
+        _patient_plan(spark),
+        WriterConfig(base_url=bundle_server, retry_sleep_s=0.01, bundle_size=2),
+    )
+    assert sorted(_BundleRecorder.sub_requests) == sorted(
+        [("POST", "Condition")] * 4 + [("POST", "Patient")] * 2 + [
+            ("PUT", "Condition/c9"),
+            ("DELETE", "Condition/c7"),
+            ("DELETE", "Patient/p0?_cascade=delete"),  # cascade survives bundling
+        ]
+    )
+    full_urls = set()
+    for b in _BundleRecorder.bundles:
+        assert b["type"] == "transaction"
+        groups = []  # (group, entries) in bundle order
+        for e in b["entry"]:
+            ref = e.get("resource", {}).get("subject", {}).get("reference")
+            group = e.get("fullUrl") or ref or json.dumps(e["request"])
+            if groups and groups[-1][0] == group:
+                groups[-1][1].append(e)
+            else:
+                groups.append((group, [e]))
+        assert len({g for g, _ in groups}) == len(groups), "a group is split inside a bundle"
+        assert len(b["entry"]) - len(groups[-1][1]) < 2
+        for group, ents in groups:
+            if group.startswith("urn:uuid:"):
+                assert ents[0]["fullUrl"] == group
+                assert ents[0]["request"]["method"] == "POST"
+                assert ents[0]["resource"]["resourceType"] == "Patient"
+                assert len(ents) == 3
+                full_urls.add(group)
+    # both patients bundled whole, under distinct fullUrls despite the
+    # shared SitePatientId
+    assert full_urls == {_full_url(spark, PAT_SYS + s, "p1") for s in ("uw", "ucsd")}
     # insert/update entries carry the parsed resource, deletes none
-    posted = [e for b in _BundleRecorder.bundles for e in b["entry"]]
-    for e in posted:
-        if e["request"]["method"] in ("POST", "PUT"):
-            assert e["resource"]["resourceType"] == "Condition"
-        else:
-            assert "resource" not in e
-    assert counts == {"insert": 1, "update": 1, "delete": 2, "failed": 0}
+    for e in (e for b in _BundleRecorder.bundles for e in b["entry"]):
+        assert ("resource" in e) == (e["request"]["method"] != "DELETE")
+    assert counts == {"insert": 6, "update": 1, "delete": 2, "failed": 0}
+
+
+def test_new_patient_and_dependent_share_one_transaction(spark, bundle_server):
+    """The default writer (no bundle_size given) puts a new Patient and its
+    Condition, read from different input partitions, in one transaction,
+    the Patient first."""
+    write_action_plan(_patient_plan(spark), WriterConfig(base_url=bundle_server))
+    for site in ("uw", "ucsd"):
+        ref = _full_url(spark, PAT_SYS + site, "p1")
+        holding = [
+            b for b in _BundleRecorder.bundles
+            if any(e.get("fullUrl") == ref for e in b["entry"])
+        ]
+        assert len(holding) == 1 and holding[0]["type"] == "transaction"
+        ents = [e for e in holding[0]["entry"]
+                if e.get("fullUrl") == ref
+                or e.get("resource", {}).get("subject", {}).get("reference") == ref]
+        assert [e["resource"]["resourceType"] for e in ents] == [
+            "Patient", "Condition", "Condition"]
+
+
+def test_group_by_patient_spreads_unrelated_rows(spark):
+    """Rows that reference no new Patient spread over the partitions:
+    deletes in particular must not all land in one."""
+    rows = [("Condition", "delete", f"c{i}", f"k{i}", None) for i in range(16)]
+    plan = spark.createDataFrame(
+        rows, "resource_type string, action string, id string, key string, body_json string"
+    )
+    parts = group_by_patient(plan).select(F.spark_partition_id().alias("p"))
+    assert parts.distinct().count() > 1
 
 
 def test_writer_bundle_per_entry_failure_fails_task(spark, bundle_server):
@@ -231,8 +328,14 @@ def test_writer_bundle_envelope_retry(spark, bundle_server):
         _plan(spark),
         WriterConfig(base_url=bundle_server, retry_sleep_s=0.01, bundle_size=10),
     )
-    assert counts["failed"] == 0
-    assert len(_BundleRecorder.bundles) == 1  # the successful third attempt
+    assert counts == {"insert": 1, "update": 1, "delete": 2, "failed": 0}
+    # the two 500s were retried whole: every entry arrived exactly once
+    assert sorted(_BundleRecorder.sub_requests) == sorted([
+        ("POST", "Condition"),
+        ("PUT", "Condition/c9"),
+        ("DELETE", "Condition/c7"),
+        ("DELETE", "Patient/p1?_cascade=delete"),
+    ])
 
 
 def test_writer_bundle_post_carries_conditional_create(spark, bundle_server):
@@ -309,81 +412,125 @@ def test_writer_bundle_transport_failure_counts_failed(spark, bundle_server):
 
 
 class _ConditionalStore(http.server.BaseHTTPRequestHandler):
-    """Stateful bundle mock honoring ifNoneExist: a POST whose condition
-    matches an existing identifier is a 200 no-op, otherwise 201 + store.
-    ``fail_keys_once`` makes the named entry keys 500 on their FIRST
-    appearance — simulating a batch bundle that partially applies before
-    an entry fails, followed by a task retry."""
+    """Stateful mock honoring conditional create, per row (``If-None-Exist``
+    header on POST /{type}) and in bundles (``ifNoneExist``): a POST whose
+    condition names a stored identifier is a 200 no-op, otherwise 201 +
+    store. ``fail_keys_once`` makes the named keys 500 on their FIRST
+    appearance — a partition that partially applies before a create fails,
+    followed by a task retry."""
 
     store: list[str] = []
     failed_once: set[str] = set()
     fail_keys_once: set[str] = set()
 
+    @classmethod
+    def reset(cls, fail_keys_once=()):
+        cls.store, cls.failed_once, cls.fail_keys_once = [], set(), set(fail_keys_once)
+
+    @classmethod
+    def _create(cls, method: str, cond: str) -> str:
+        key = cond.split("=", 1)[1] if "=" in cond else None
+        if key in cls.fail_keys_once and key not in cls.failed_once:
+            cls.failed_once.add(key)
+            return "500 Internal Server Error"
+        if method == "POST" and key is not None and key in cls.store:
+            return "200 OK"  # conditional no-op
+        if method == "POST":
+            cls.store.append(key if key is not None else f"unconditional-{len(cls.store)}")
+            return "201 Created"
+        return "200 OK"
+
     def do_POST(self):
         n = int(self.headers.get("Content-Length") or 0)
         body = json.loads(self.rfile.read(n).decode())
-        out = []
-        for ent in body["entry"]:
-            req = ent["request"]
-            cond = req.get("ifNoneExist", "")
-            key = cond.split("=", 1)[1] if "=" in cond else None
-            if key in _ConditionalStore.fail_keys_once and key not in _ConditionalStore.failed_once:
-                _ConditionalStore.failed_once.add(key)
-                out.append({"response": {"status": "500 Internal Server Error"}})
-            elif req["method"] == "POST" and key is not None and key in _ConditionalStore.store:
-                out.append({"response": {"status": "200 OK"}})  # conditional no-op
-            elif req["method"] == "POST":
-                if key is not None:
-                    _ConditionalStore.store.append(key)
-                else:
-                    _ConditionalStore.store.append(f"unconditional-{len(_ConditionalStore.store)}")
-                out.append({"response": {"status": "201 Created"}})
-            else:
-                out.append({"response": {"status": "200 OK"}})
-        resp = {"resourceType": "Bundle", "type": f"{body['type']}-response", "entry": out}
-        self.send_response(200)
+        if self.path != "/":
+            status = self._create("POST", self.headers.get("If-None-Exist", ""))
+            self.send_response(int(status[:3]))
+            payload = {}
+        else:
+            out = [
+                {"response": {"status": self._create(
+                    ent["request"]["method"], ent["request"].get("ifNoneExist", ""))}}
+                for ent in body["entry"]
+            ]
+            self.send_response(200)
+            payload = {"resourceType": "Bundle", "type": f"{body['type']}-response", "entry": out}
         self.send_header("Content-Type", "application/fhir+json")
         self.end_headers()
-        self.wfile.write(json.dumps(resp).encode())
+        self.wfile.write(json.dumps(payload).encode())
 
     def log_message(self, *args):
         pass
 
 
-def test_writer_torn_batch_retry_does_not_duplicate(spark):
+@pytest.fixture()
+def conditional_store():
+    _ConditionalStore.reset()
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _ConditionalStore)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield f"http://127.0.0.1:{srv.server_address[1]}"
+    srv.shutdown()
+
+
+def _inserts(spark, bodies: list[tuple[str, str]]):
+    return spark.createDataFrame(
+        [("Condition", "insert", None, key, body) for key, body in bodies],
+        "resource_type string, action string, id string, key string, body_json string",
+    ).coalesce(1)
+
+
+def test_writer_torn_batch_retry_does_not_duplicate(spark, conditional_store):
     """Torn-retry idempotence (SURVEY §7.4's exactly-once-ish risk): a
     `batch` bundle applies its first POST, a later entry 500s, the task
     raises, and the retried task re-POSTs the whole partition. With
     conditional create the replayed first POST is a server-side no-op —
-    the store converges to exactly one copy per key."""
-    _ConditionalStore.store = []
-    _ConditionalStore.failed_once = set()
-    _ConditionalStore.fail_keys_once = {"k2"}
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _ConditionalStore)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    try:
-        url = f"http://127.0.0.1:{srv.server_address[1]}"
-        plan = spark.createDataFrame(
-            [
-                ("Condition", "insert", None, "k1", '{"resourceType":"Condition"}'),
-                ("Condition", "insert", None, "k2", '{"resourceType":"Condition"}'),
-                ("Condition", "insert", None, "k3", '{"resourceType":"Condition"}'),
-            ],
-            "resource_type string, action string, id string, key string, body_json string",
-        ).coalesce(1)
-        cfg = WriterConfig(
-            base_url=url, retry_sleep_s=0.01, bundle_size=10,
-            bundle_type="batch", max_retries=1,
-        )
-        # first attempt: k1 applies, k2 fails, task raises mid-partition
-        with pytest.raises(Exception, match="bundle entries failed"):
-            write_action_plan(plan, cfg)
-        assert _ConditionalStore.store == ["k1", "k3"]
-        # simulated task retry replays the whole partition
-        counts = write_action_plan(plan, cfg)
-        assert counts["failed"] == 0
-        # convergence: one copy per key, no duplicates from the replay
-        assert sorted(_ConditionalStore.store) == ["k1", "k2", "k3"]
-    finally:
-        srv.shutdown()
+    the store converges to exactly one copy per key. The three Conditions
+    reference one new Patient, so they travel in one bundle, in key order."""
+    _ConditionalStore.reset(fail_keys_once={"k2"})
+    body = '{"resourceType":"Condition","subject":{"reference":"urn:uuid:p"}}'
+    plan = _inserts(spark, [(k, body) for k in ("k1", "k2", "k3")])
+    cfg = WriterConfig(
+        base_url=conditional_store, retry_sleep_s=0.01, bundle_size=10,
+        bundle_type="batch", max_retries=1,
+    )
+    # first attempt: k1 applies, k2 fails, task raises mid-partition
+    with pytest.raises(Exception, match="bundle entries failed"):
+        write_action_plan(plan, cfg)
+    assert _ConditionalStore.store == ["k1", "k3"]
+    # simulated task retry replays the whole partition
+    counts = write_action_plan(plan, cfg)
+    assert counts["failed"] == 0
+    # convergence: one copy per key, no duplicates from the replay
+    assert sorted(_ConditionalStore.store) == ["k1", "k2", "k3"]
+
+
+def test_writer_torn_per_row_retry_does_not_duplicate(spark, conditional_store):
+    """The per-row form of the torn replay: the partition's second POST
+    fails, the task raises, and the replay re-POSTs the first one. Its
+    ``If-None-Exist`` header makes that a no-op."""
+    _ConditionalStore.reset(fail_keys_once={"k2"})
+    plan = _inserts(spark, [(k, '{"resourceType":"Condition"}') for k in ("k1", "k2", "k3")])
+    cfg = WriterConfig(base_url=conditional_store, retry_sleep_s=0.01, bundle_size=0, max_retries=1)
+    with pytest.raises(Exception):
+        write_action_plan(plan, cfg)
+    assert _ConditionalStore.store == ["k1"]
+    counts = write_action_plan(plan, cfg)
+    assert counts["failed"] == 0
+    assert sorted(_ConditionalStore.store) == ["k1", "k2", "k3"]
+
+
+@pytest.mark.parametrize("bundle_size", [0, 10])
+def test_conditional_create_is_scoped_by_system(spark, conditional_store, bundle_size):
+    """Two sites' Conditions share the record id "dx-1": the condition
+    names system and value, so neither create is mistaken for the other
+    — and a replay still creates nothing new."""
+    bodies = [
+        ("dx-1", json.dumps({"resourceType": "Condition",
+                             "identifier": [{"system": f"urn:dx/{site}", "value": "dx-1"}]}))
+        for site in ("uw", "ucsd")
+    ]
+    cfg = WriterConfig(base_url=conditional_store, retry_sleep_s=0.01, bundle_size=bundle_size)
+    for _ in range(2):
+        counts = write_action_plan(_inserts(spark, bodies), cfg)
+        assert counts["insert"] == 2 and counts["failed"] == 0
+    assert sorted(_ConditionalStore.store) == ["urn:dx/ucsd|dx-1", "urn:dx/uw|dx-1"]
