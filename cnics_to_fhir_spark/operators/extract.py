@@ -31,26 +31,38 @@ def nonblank(col: Column) -> Column:
     return F.length(col) > 0
 
 
+def site_scoped(keys: list[str], *frames: DataFrame) -> list[str]:
+    """Join or grouping keys: ``keys``, plus ``Site`` when every frame
+    carries one. A job reads each source table once for all its sites;
+    when sites read different tables, each row is tagged with its ``Site``
+    (job.run_job), and these keys keep the sites' rows apart."""
+    return [*keys, "Site"] if all("Site" in f.columns for f in frames) else list(keys)
+
+
 def patient_page(
     patient: DataFrame,
     demographic: DataFrame,
-    site: str,
+    sites: list[str],
     limit: int = 100_000,
     randomize: bool = False,
     seed: int = 42,
 ) -> DataFrame:
-    """Entry point 2 (cnics_to_fhir.py:259-266): Patient ⋈ DemographicAltered
-    with a Site filter and LIMIT PatCnt. The disabled ``order by rand()``
-    (:264) is exposed as ``randomize`` with a seed. Returns the distinct
+    """Entry point 2 (cnics_to_fhir.py:259-266) for all of a job's sites
+    at once: Patient ⋈ DemographicAltered with a Site filter and LIMIT
+    PatCnt per site. The reference's LIMIT keeps whichever rows MySQL
+    returns first; here each site keeps its lowest PatientIds, or a seeded
+    random sample with ``randomize`` (the disabled ``order by rand()``,
+    :264). The per-site limit is one row_number over Site, so the page
+    costs the same shuffles for any number of sites. Returns the distinct
     patient identity page (PatientId, SitePatientId, Site)."""
-    base = (
-        patient.filter(F.col("Site") == site)
-        .join(demographic.select("PatientId").distinct(), "PatientId", "inner")
-        .select("PatientId", F.decode("SitePatientId", "UTF-8").alias("SitePatientId"), "Site")
+    base = patient.filter(F.col("Site").isin(*sites)).join(
+        demographic, site_scoped(["PatientId"], patient, demographic), "left_semi"
     )
-    if randomize:
-        base = base.orderBy(F.rand(seed))
-    return base.limit(limit)
+    order = F.rand(seed) if randomize else F.col("PatientId")
+    rank = F.row_number().over(Window.partitionBy("Site").orderBy(order, "SitePatientId"))
+    return base.withColumn("__rn", rank).filter(F.col("__rn") <= limit).select(
+        "PatientId", F.decode("SitePatientId", "UTF-8").alias("SitePatientId"), "Site"
+    )
 
 
 def diagnoses(dx: DataFrame, patient_id_filter: Column | None = None, name_filter_sql: str | None = None) -> DataFrame:
@@ -67,7 +79,7 @@ def diagnoses(dx: DataFrame, patient_id_filter: Column | None = None, name_filte
 def demographics_first_row(demo: DataFrame) -> DataFrame:
     """A3 (cnics_to_fhir.py:440-525): first demographic row per patient wins,
     ordered by DemographicId (:130) — window + row_number, one shuffle."""
-    w = Window.partitionBy("PatientId").orderBy("DemographicId")
+    w = Window.partitionBy(*site_scoped(["PatientId"], demo)).orderBy("DemographicId")
     return (
         demo.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
     )
@@ -85,10 +97,11 @@ def pro_sessions(pro: DataFrame) -> DataFrame:
     """Query shape 4 (cnics_to_fhir.py:141-147): distinct SessionId per
     patient, aggregated to array for the identifier builder (the
     decorrelated form of the per-session append loop :392-395)."""
+    keys = site_scoped(["PatientId"], pro)
     return (
-        pro.select("PatientId", "SessionId")
+        pro.select(*keys, "SessionId")
         .distinct()
-        .groupBy("PatientId")
+        .groupBy(*keys)
         .agg(F.sort_array(F.collect_list("SessionId")).alias("session_ids"))
     )
 
@@ -106,21 +119,19 @@ def pro_identity(pro_patients: DataFrame, pro_sessions_df: DataFrame, session_ke
     for the patient's sessions → unique PatientIDs and MRNs as arrays.
 
     ``session_keys``: (PatientId, SessionId) pairs linking CNICS patients to
-    PRO sessions. Output: (PatientId, pro_patient_ids, pro_mrns)."""
-    joined = (
-        session_keys.join(
-            pro_sessions_df.withColumnRenamed("PatientID", "ProPatientID"),
-            session_keys["SessionId"] == pro_sessions_df["SessionID"],
-            "inner",
-        )
-        .join(
-            pro_patients.withColumnRenamed("PatientID", "ProPatientID2"),
-            F.col("ProPatientID") == F.col("ProPatientID2"),
-            "inner",
-        )
-        .select("PatientId", F.col("ProPatientID").alias("pro_pid"), "MRN")
+    PRO sessions. Output: (PatientId, pro_patient_ids, pro_mrns), plus
+    ``Site`` when an input carries it."""
+    sessions = pro_sessions_df.select(
+        F.col("SessionID").alias("SessionId"),
+        F.col("PatientID").alias("pro_pid"),
+        *site_scoped([], pro_sessions_df),
     )
-    return joined.groupBy("PatientId").agg(
+    patients = pro_patients.select(
+        F.col("PatientID").alias("pro_pid"), "MRN", *site_scoped([], pro_patients)
+    )
+    joined = session_keys.join(sessions, site_scoped(["SessionId"], session_keys, sessions))
+    joined = joined.join(patients, site_scoped(["pro_pid"], joined, patients))
+    return joined.groupBy(*site_scoped(["PatientId"], joined)).agg(
         F.sort_array(F.collect_set(F.col("pro_pid").cast("string"))).alias("pro_patient_ids"),
         F.sort_array(F.collect_set("MRN")).alias("pro_mrns"),
     )

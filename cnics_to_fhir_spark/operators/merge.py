@@ -9,10 +9,11 @@ key (only ``identifier[0].value`` is compared — :556, :652, :736):
   key in current  ∧ key ∉ existing  → insert  (POST /{type})
   key ∉ current   ∧ key in existing → delete  (DELETE /{type}/{server_id})
 
-That is exactly ONE full-outer join per resource type — the engine's central
-IR. Everything upstream (extract + transform + assembly) and downstream (the
-HTTP writer) hangs off this plan DataFrame, which makes the whole pipeline
-testable without a FHIR server and lets the same code run under
+That is exactly ONE full-outer join — the engine's central IR. A FHIR job
+runs one for all its sites and resource types, keyed on (resource_type,
+site, key). Everything upstream (extract + transform + assembly) and
+downstream (the HTTP writer) hangs off this plan DataFrame, which makes the
+whole pipeline testable without a FHIR server and lets the same code run under
 ``foreachBatch`` for incremental mode (SURVEY.md §2.10). The copy-on-write
 sinks (load/table_merge, load/versioned_table, load/corpus_export) apply a
 plan through ``apply_merge``.
@@ -21,8 +22,7 @@ Scale design: both sides are pre-aggregated to one row per key BEFORE the
 join (the reference's loop takes the first key match then breaks — :552-560;
 we take a deterministic min per key), so the full-outer shuffle is on a
 deduplicated high-cardinality key — no skew amplification, map-side partial
-aggregation, and AQE picks the join strategy. When one side is a bounded
-per-site snapshot, Catalyst broadcasts it under the threshold.
+aggregation, and AQE picks the join strategy.
 """
 
 from __future__ import annotations
@@ -39,17 +39,20 @@ ACTIONS = (ACTION_INSERT, ACTION_UPDATE, ACTION_DELETE)
 def merge_plan(
     current: DataFrame,
     existing: DataFrame,
-    key: str = "key",
+    keys: list[str] | None = None,
     existing_id: str = "id",
     payload_cols: list[str] | None = None,
 ) -> DataFrame:
     """Classify every business key into insert/update/delete.
 
-    ``current``  — freshly-extracted target state; ≥1 row per ``key``;
+    ``keys``     — the columns that together form the business key
+                   (default ``["key"]``); a row matches only when every
+                   one is equal and non-NULL.
+    ``current``  — freshly-extracted target state; ≥1 row per key;
                    payload columns are carried through to the writer.
-    ``existing`` — store snapshot with columns ``key`` and ``existing_id``.
+    ``existing`` — store snapshot with the ``keys`` and ``existing_id``.
 
-    Returns: key, action, id (NULL for insert), payload cols (NULL for
+    Returns: the keys, action, id (NULL for insert), payload cols (NULL for
     delete). Duplicate keys on either side collapse to one action row,
     matching the reference's first-match-then-break loop
     (cnics_to_fhir.py:552-560). The reference's "first" is MySQL natural
@@ -67,28 +70,29 @@ def merge_plan(
     both engines — replay with ``min(row(...))`` over the same
     (c IS NULL, c) interleaving, or arg-min with ``ORDER BY c NULLS LAST``.
     """
-    payload_cols = payload_cols or [c for c in current.columns if c != key]
+    keys = keys or ["key"]
+    payload_cols = payload_cols or [c for c in current.columns if c not in keys]
 
     cmp_fields = []
     for i, c in enumerate(payload_cols):
         cmp_fields.append(F.col(c).isNull().alias(f"n{i}"))
         cmp_fields.append(F.col(c).alias(f"v{i}"))
     cur = (
-        current.groupBy(key)
+        current.groupBy(*keys)
         .agg(F.min(F.struct(*cmp_fields)).alias("__p"))
         .select(
-            key,
+            *keys,
             *[F.col(f"__p.v{i}").alias(c) for i, c in enumerate(payload_cols)],
         )
         .withColumn("__in_current", F.lit(True))
     )
     exi = (
-        existing.groupBy(key)
+        existing.groupBy(*keys)
         .agg(F.min(existing_id).alias("__existing_id"))
         .withColumn("__in_existing", F.lit(True))
     )
 
-    joined = cur.join(exi, on=key, how="full_outer")
+    joined = cur.join(exi, on=keys, how="full_outer")
     action = (
         F.when(
             F.coalesce(joined["__in_current"], F.lit(False))
@@ -99,7 +103,7 @@ def merge_plan(
         .otherwise(F.lit(ACTION_DELETE))
     )
     return joined.select(
-        F.col(key),
+        *keys,
         action.alias("action"),
         F.col("__existing_id").alias("id"),
         *[F.col(c) for c in payload_cols],

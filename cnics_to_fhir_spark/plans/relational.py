@@ -410,7 +410,7 @@ def j06_merge_actions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").cast("string").alias("key"),
         F.concat(F.lit("srv-"), F.col("c_custkey").cast("string")).alias("id"),
     )
-    return merge_plan(current, existing, key="key", existing_id="id", payload_cols=["max_price"])
+    return merge_plan(current, existing, keys=["key"], existing_id="id", payload_cols=["max_price"])
 
 
 # --------------------------------------------------------------------------
@@ -467,7 +467,7 @@ def j06b_merge_dup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").cast("string").alias("key"),
         F.concat(F.lit("srv-"), F.col("c_custkey").cast("string")).alias("id"),
     )
-    return merge_plan(current, existing, key="key", existing_id="id", payload_cols=["ord_date", "ord_key"])
+    return merge_plan(current, existing, keys=["key"], existing_id="id", payload_cols=["ord_date", "ord_key"])
 
 
 # --------------------------------------------------------------------------

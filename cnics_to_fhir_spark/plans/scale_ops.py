@@ -5584,7 +5584,7 @@ def j15_merge_table_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         existing = y96.select("key", F.col("key").cast("string").alias("id"))
         plan = merge_plan(
-            current, existing, key="key", payload_cols=["val"]
+            current, existing, keys=["key"], payload_cols=["val"]
         ).withColumn("y", F.lit(1996))
         counts = merge_into_table(
             spark, path, plan, key_col="key", partition_col="y",

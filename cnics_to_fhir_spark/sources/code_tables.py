@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cnics_to_fhir_spark.operators.extract import site_scoped
+
 
 def load_code_table(spark: SparkSession, path: str, col_name: str = "code") -> DataFrame:
     """Quoted one-column CSV → single-column DataFrame, quotes stripped
@@ -31,11 +33,15 @@ def membership_via_join(
     facts: DataFrame, codes: DataFrame, fact_col: str, flag_col: str = "in_standard"
 ) -> DataFrame:
     """The 100 TB-safe membership test: broadcast left join + null probe —
-    the dimension never leaves the executors, the fact table never shuffles."""
-    code_col = codes.columns[0]
-    marked = codes.select(F.col(code_col).alias("__code")).withColumn("__hit", F.lit(True))
+    the dimension never leaves the executors, the fact table never shuffles.
+    A code table tagged with ``Site`` (extract.site_scoped) only marks facts
+    of its own sites."""
+    keys = site_scoped([fact_col], facts, codes)
+    marked = codes.select(
+        F.col(codes.columns[0]).alias(fact_col), *keys[1:], F.lit(True).alias("__hit")
+    )
     return (
-        facts.join(F.broadcast(marked), facts[fact_col] == marked["__code"], "left")
+        facts.join(F.broadcast(marked), keys, "left")
         .withColumn(flag_col, F.coalesce(F.col("__hit"), F.lit(False)))
-        .drop("__code", "__hit")
+        .drop("__hit")
     )

@@ -54,7 +54,7 @@ def reconcile_stream(
         if batch_df.isEmpty():
             return
         plan = merge_plan(
-            batch_df, snapshot_provider(), key=key, payload_cols=payload_cols
+            batch_df, snapshot_provider(), keys=[key], payload_cols=payload_cols
         )
         if not full_state:
             plan = plan.filter(plan["action"] != "delete")

@@ -1,15 +1,32 @@
-"""Config-driven job dispatch (entry point 1): INI parsing semantics and a
-one-site end-to-end run producing the combined action plan."""
+"""Config-driven job dispatch (entry point 1): INI parsing semantics, an
+end-to-end run producing the combined action plan, the write/re-read
+fixpoint, multi-site jobs against a per-site oracle, and the plan's shape."""
 
 from __future__ import annotations
 
 import datetime
+import re
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark import job as jobmod
+from cnics_to_fhir_spark import pipelines
 from cnics_to_fhir_spark.config import JobSpec, parse_job_config, parse_settings
-from cnics_to_fhir_spark.schemas import DEMOGRAPHIC, DIAGNOSIS, FHIR_SNAPSHOT, PRO
+from cnics_to_fhir_spark.operators import extract
+from cnics_to_fhir_spark.schemas import (
+    DEMOGRAPHIC,
+    DIAGNOSIS,
+    FHIR_SNAPSHOT,
+    LAB,
+    MEDICATION,
+    PATIENT,
+    PRO,
+    PRO_PATIENTS,
+    PRO_SESSIONS,
+)
 
 JOB_INI = """
 [JobList]
@@ -113,7 +130,7 @@ def test_run_job_one_site_end_to_end(spark):
 
 
 @pytest.mark.parametrize("bundle_size", [0, 3])
-def test_run_job_write_readback_converges(spark, bundle_size):
+def test_run_job_write_readback_converges(spark, bundle_size, caplog):
     """The reference's implicit convergence contract
     (cnics_to_fhir.py:914-925): extract → plan → WRITE to the store →
     re-snapshot the store → run again.  Run 2 must produce ZERO inserts and
@@ -126,9 +143,11 @@ def test_run_job_write_readback_converges(spark, bundle_size):
     tests/test_writer.py.  Parametrized over both writer transports:
     per-row requests and transaction-Bundle mode (bundle_size=3) — the
     fixpoint must hold identically under bundled writes, and in bundle mode
-    no placeholder reference is left after the first run."""
+    no placeholder reference is left after the first run. Each run logs
+    the writer's counters as one JSON record."""
     import http.server
     import json as jsonmod
+    import logging
     import threading
 
     pytest.importorskip("requests")
@@ -287,10 +306,17 @@ def test_run_job_write_readback_converges(spark, bundle_size):
     cfg = WriterConfig(base_url=base_url, retry_sleep_s=0.01, bundle_size=bundle_size)
     try:
         def run_once():
-            plan = jobmod.run_job(spark, job, settings, tables_for_site, writer_cfg=cfg)
+            caplog.clear()
+            with caplog.at_level(logging.INFO, logger=jobmod.__name__):
+                plan = jobmod.run_job(spark, job, settings, tables_for_site, writer_cfg=cfg)
             counts = {"insert": 0, "update": 0, "delete": 0}
             for r in plan.select("action").collect():
                 counts[r["action"]] += 1
+            [record] = [r for r in caplog.records if r.name == jobmod.__name__]
+            logged = jsonmod.loads(record.getMessage())
+            assert logged["sites"] == ["uw"] and logged["resources"] == ["conditions"]
+            assert logged["counts"] == {**counts, "failed": 0}
+            assert logged["wall_s"] > 0
             return counts
 
         def placeholders():
@@ -319,3 +345,220 @@ def test_run_job_write_readback_converges(spark, bundle_size):
         assert dict(store) == state_after_2  # byte-identical store: converged
     finally:
         srv.shutdown()
+
+
+# --------------------------------------------------------------------------
+# Multi-site jobs: one job-wide plan against a per-site oracle
+# --------------------------------------------------------------------------
+
+CNICS = "https://cnics.cirg.washington.edu"
+PATIENT_SYS = f"{CNICS}/site-patient-id"
+DX_SYS = f"{CNICS}/diagnosis/site-record-id"
+SETTINGS_PATCNT_2 = SETTINGS_INI.replace('PatCnt = "1000"', 'PatCnt = "2"')
+
+
+def _snap(rtype, rid, system, site, value):
+    return (rtype, rid, None, f"{system}/{site}", value, True)
+
+
+def _dx(did, pid, key, name):
+    return (did, None, None, pid, bytearray(key.encode()), datetime.date(2020, 1, 1),
+            "Verified clinical diagnosis", name)
+
+
+def _demo(did, pid, sex):
+    return (did, None, None, pid, None, None, sex, "White", "No")
+
+
+def _source_tables(spark, patients, demo, dx, pro, pro_sessions, pro_patients, crosswalk, codes):
+    return {
+        "Patient": spark.createDataFrame(
+            [(pid, bytearray(sp.encode()), site) for pid, sp, site in patients], PATIENT),
+        "Demographic": spark.createDataFrame(demo, DEMOGRAPHIC),
+        "Diagnosis": spark.createDataFrame(dx, DIAGNOSIS),
+        "Medication": spark.createDataFrame([], MEDICATION),
+        "Lab": spark.createDataFrame([], LAB),
+        "Pro": spark.createDataFrame(pro, PRO),
+        "ProSessions": spark.createDataFrame(pro_sessions, PRO_SESSIONS),
+        "ProPatients": spark.createDataFrame(pro_patients, PRO_PATIENTS),
+        "Crosswalk": spark.createDataFrame(crosswalk, "SitePatientId string, hmrn string, umrn string"),
+        "StandardDiagnoses": spark.createDataFrame([(c,) for c in codes], "code string"),
+    }
+
+
+def _per_site_oracle(spark, job, settings, tables_for_site):
+    """The plan as the reference builds it: every step once per site
+    (cnics_to_fhir.py:257), through the one-site ``pipelines.*_plan``
+    wrappers, results concatenated."""
+    out = []
+    for site in job.sites:
+        t = tables_for_site(site)
+        snapshot = t("Snapshot").filter(F.col("identifier_0_system").endswith(f"/{site}"))
+        page = extract.patient_page(t("Patient"), t("Demographic"), [site], limit=settings.pat_cnt)
+        page = jobmod.resolve_patient_ids(page, snapshot)
+        crosswalk = t("Crosswalk") if site == "uw" else t("Crosswalk").limit(0)
+        session_keys = t("Pro").select("PatientId", "SessionId").distinct()
+        pro_ident = extract.pro_identity(t("ProPatients"), t("ProSessions"), session_keys)
+        plans = [pipelines.patients_plan(
+            page.select("PatientId", "SitePatientId", "Site"), t("Demographic"), t("Pro"),
+            crosswalk, pro_ident, snapshot,
+        )]
+        res_page = page.select("PatientId", "Site", "fhir_patient_id")
+        if "conditions" in job.resources:
+            plans.append(pipelines.conditions_plan(
+                t("Diagnosis"), res_page, snapshot, t("StandardDiagnoses"),
+                name_filter_sql=settings.conditions_filter_sql))
+        if "medicationrequests" in job.resources:
+            plans.append(pipelines.medications_plan(
+                t("Medication"), res_page, snapshot, name_filter_sql=settings.medications_filter_sql))
+        if "observations" in job.resources:
+            plans.append(pipelines.observations_plan(
+                t("Lab"), res_page, snapshot, name_filter_sql=settings.observations_filter_sql))
+        out.append(reduce(DataFrame.unionByName, plans).withColumn("site", F.lit(site)))
+    return reduce(DataFrame.unionByName, out)
+
+
+def _rows(plan):
+    return sorted(
+        (tuple(r) for r in plan.select("resource_type", "action", "id", "key", "body_json", "site")
+         .collect()),
+        key=repr,
+    )
+
+
+SNAPSHOT_ROWS = [
+    _snap("Patient", "p-uw-B", PATIENT_SYS, "uw", "sp-B"),
+    _snap("Patient", "p-ucsd-A", PATIENT_SYS, "ucsd", "sp-A"),
+    _snap("Patient", "p-uw-D", PATIENT_SYS, "uw", "sp-D"),  # cut by PatCnt → delete
+    _snap("Condition", "c-uw-1", DX_SYS, "uw", "dx-1"),
+    _snap("Condition", "c-ucsd-1", DX_SYS, "ucsd", "dx-1"),
+    _snap("Condition", "c-uw-old", DX_SYS, "uw", "dx-old"),  # stale → delete
+    # another site's resources: a uw,ucsd job must never touch them
+    _snap("Patient", "p-jh-99", PATIENT_SYS, "jh", "sp-99"),
+    _snap("Condition", "c-jh-9", DX_SYS, "jh", "dx-9"),
+]
+
+
+def _shared_tables(spark):
+    """One source DB for both sites, as the reference's job config has it."""
+    return _source_tables(
+        spark,
+        patients=[(10, "sp-A", "uw"), (11, "sp-B", "uw"), (12, "sp-D", "uw"),
+                  (20, "sp-A", "ucsd"), (21, "sp-C", "ucsd")],
+        demo=[_demo(1, 10, "Female"), _demo(2, 11, "Male"), _demo(3, 12, "Male"),
+              _demo(4, 20, "Female"), _demo(5, 21, "Male")],
+        # dx-1 is a record key of BOTH sites
+        dx=[_dx(1, 10, "dx-1", "E11.9"), _dx(2, 20, "dx-1", "E11.9"), _dx(3, 11, "dx-2", "COPD")],
+        pro=[("s-1", 10), ("s-2", 20)],
+        pro_sessions=[("s-1", 900)],
+        pro_patients=[(900, "M-900")],
+        crosswalk=[("sp-A", "H-A", "U-A")],  # a uw file; ucsd's sp-A must not match it
+        codes=["COPD"],
+    )
+
+
+def test_run_job_two_sites_match_per_site_oracle(spark):
+    settings = parse_settings(SETTINGS_PATCNT_2)
+    job = JobSpec(sites=("uw", "ucsd"), db_name="cnics_prod", resources=("conditions",))
+    t = {**_shared_tables(spark), "Snapshot": spark.createDataFrame(SNAPSHOT_ROWS, FHIR_SNAPSHOT)}
+
+    def tables_for_site(site):
+        return t.__getitem__
+
+    got = _rows(jobmod.run_job(spark, job, settings, tables_for_site))
+    assert got == _rows(_per_site_oracle(spark, job, settings, tables_for_site))
+
+    by = {(r[0], r[5], r[3]): r for r in got}
+    # one row per site for a key both sites hold, each with its own server id
+    assert by[("Condition", "uw", "dx-1")][1:3] == ("update", "c-uw-1")
+    assert by[("Condition", "ucsd", "dx-1")][1:3] == ("update", "c-ucsd-1")
+    assert by[("Condition", "uw", "dx-old")][1:3] == ("delete", "c-uw-old")
+    # subjects resolve within the site: ucsd's sp-A is stored, uw's is new
+    assert '"Patient/p-ucsd-A"' in by[("Condition", "ucsd", "dx-1")][4]
+    assert '"urn:uuid:' in by[("Condition", "uw", "dx-1")][4]
+    # the jh site's resources are neither updated nor deleted
+    assert not [r for r in got if r[5] not in ("uw", "ucsd") or r[2] in ("p-jh-99", "c-jh-9")]
+    # crosswalk MRNs on uw Patients only
+    assert "H-A" in by[("Patient", "uw", "sp-A")][4]
+    assert "H-A" not in by[("Patient", "ucsd", "sp-A")][4]
+    # PatCnt = 2 limits each site on its own: uw keeps two of its three
+    current = {(r[5], r[3]) for r in got if r[0] == "Patient" and r[1] != "delete"}
+    assert current == {("uw", "sp-A"), ("uw", "sp-B"), ("ucsd", "sp-A"), ("ucsd", "sp-C")}
+    assert by[("Patient", "uw", "sp-D")][1:3] == ("delete", "p-uw-D")
+
+
+def test_run_job_per_site_tables_keep_sites_apart(spark):
+    """Each site's provider returns its own source DB, with the same
+    PatientId values in both: every site sees only its own rows."""
+    settings = parse_settings(SETTINGS_INI)
+    job = JobSpec(sites=("uw", "ucsd"), db_name="cnics_prod", resources=("conditions",))
+    snapshot = spark.createDataFrame(
+        [_snap("Condition", "c-u1", DX_SYS, "uw", "dx-u1"),
+         _snap("Patient", "p-c1", PATIENT_SYS, "ucsd", "sp-c1")],
+        FHIR_SNAPSHOT,
+    )
+    per_site = {
+        "uw": _source_tables(
+            spark,
+            patients=[(1, "sp-u1", "uw"), (2, "sp-u2", "uw")],
+            demo=[_demo(1, 1, "Female"), _demo(2, 2, "Male")],
+            dx=[_dx(1, 1, "dx-u1", "E11.9"), _dx(2, 2, "dx-u2", "COPD")],
+            pro=[("s-u", 1)], pro_sessions=[("s-u", 700)], pro_patients=[(700, "M-u")],
+            crosswalk=[("sp-u2", "H-u2", None)], codes=["COPD"],
+        ),
+        "ucsd": _source_tables(
+            spark,
+            # PatientId 2 has no demographic row here: not on ucsd's page
+            patients=[(1, "sp-c1", "ucsd"), (2, "sp-c2", "ucsd")],
+            demo=[_demo(1, 1, "Male")],
+            dx=[_dx(1, 1, "dx-c1", "COPD"), _dx(2, 2, "dx-c2", "E11.9")],
+            pro=[("s-c", 1)], pro_sessions=[("s-c", 800)], pro_patients=[(800, "M-c")],
+            crosswalk=[("sp-c1", "H-c1", None)], codes=["E11.9"],
+        ),
+    }
+
+    def tables_for_site(site):
+        return {**per_site[site], "Snapshot": snapshot}.__getitem__
+
+    got = _rows(jobmod.run_job(spark, job, settings, tables_for_site))
+    assert got == _rows(_per_site_oracle(spark, job, settings, tables_for_site))
+    keys = {(r[5], r[0], r[3]) for r in got}
+    assert keys == {
+        ("uw", "Patient", "sp-u1"), ("uw", "Patient", "sp-u2"),
+        ("uw", "Condition", "dx-u1"), ("uw", "Condition", "dx-u2"),
+        ("ucsd", "Patient", "sp-c1"), ("ucsd", "Condition", "dx-c1"),
+    }
+    bodies = {(r[5], r[3]): r[4] for r in got}
+    assert "M-u" in bodies[("uw", "sp-u1")] and "M-c" not in bodies[("uw", "sp-u1")]
+    assert "H-u2" in bodies[("uw", "sp-u2")]
+    assert "M-c" in bodies[("ucsd", "sp-c1")] and "M-u" not in bodies[("ucsd", "sp-c1")]
+    assert "H-c1" not in bodies[("ucsd", "sp-c1")]  # the crosswalk is uw's alone
+
+
+def _plan_shape(plan) -> dict[str, int]:
+    """Node counts of the physical plan, read without running an action."""
+    text = plan._jdf.queryExecution().executedPlan().toString()
+    return {
+        "full_outer": text.count("FullOuter"),
+        "exchange": len(re.findall(r"\b(?:Broadcast)?Exchange\b", text)),
+        "broadcast": len(re.findall(r"\bBroadcastExchange\b", text)),
+    }
+
+
+def test_run_job_plan_shape(spark):
+    """One MERGE per job, and a second site adds no exchange."""
+    settings = parse_settings(SETTINGS_PATCNT_2)
+    resources = ("conditions", "medicationrequests", "observations")
+    t = {**_shared_tables(spark), "Snapshot": spark.createDataFrame(SNAPSHOT_ROWS, FHIR_SNAPSHOT)}
+    shapes = {
+        sites: _plan_shape(jobmod.run_job(
+            spark, JobSpec(sites=sites, db_name="cnics_prod", resources=resources),
+            settings, lambda site: t.__getitem__,
+        ))
+        for sites in (("uw",), ("uw", "ucsd"))
+    }
+    one, two = shapes[("uw",)], shapes[("uw", "ucsd")]
+    assert one["full_outer"] == two["full_outer"] == 1
+    assert two["exchange"] <= one["exchange"]
+    assert two["broadcast"] <= one["broadcast"]
+    assert 0 < two["broadcast"] < two["exchange"]

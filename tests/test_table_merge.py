@@ -116,7 +116,7 @@ def test_merge_plan_feeds_table_merge_end_to_end(spark, tmp_path):
         .filter(F.col("day") == 1)
         .select("key", F.concat(F.lit("id"), F.col("key")).alias("id"))
     )
-    plan = merge_plan(current, existing, key="key").withColumn("day", F.lit(1))
+    plan = merge_plan(current, existing, keys=["key"]).withColumn("day", F.lit(1))
     counts = merge_into_table(spark, path, plan, key_col="key", partition_col="day")
     assert counts["inserted"] == 1 and counts["deleted"] == 2
     day1 = {
