@@ -12,12 +12,9 @@ re-GETs its server id before building subject references
 (cnics_to_fhir.py:530-539). Bulk mode resolves ids from the snapshot join
 instead; a patient not yet in the store is referenced by the deterministic
 ``urn:uuid:`` fullUrl of its own create entry (``patient_full_url`` over
-the Patient's identifier system and value). The default writer sends the
-Patient and its dependents in one ``transaction`` Bundle, where the server
-resolves that reference to the id it assigns, so no placeholder survives
-the run. The per-row writer (``bundle_size=0``) has no Patient-first wave:
-there the reference stays unresolved until the next run finds the Patient
-in the snapshot and sends the resource as an update.
+the Patient's identifier system and value). The writer sends the Patient
+and its dependents in one ``transaction`` Bundle, where the server resolves
+that reference to the id it assigns, so no placeholder survives the run.
 """
 
 from __future__ import annotations

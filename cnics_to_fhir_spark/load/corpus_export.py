@@ -74,6 +74,7 @@ from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark.load.versioned_table import ConcurrentCommitError
 from cnics_to_fhir_spark.operators.merge import apply_merge
+from cnics_to_fhir_spark.session import overlap
 
 MANIFEST_FILE = "_export_manifest.json"
 
@@ -252,8 +253,6 @@ def export_shards(
     # task tail leaves idle (guide §2.6).  The manifest deliberately
     # stays INPUT-side (not a read-back of the written files) so a
     # row-dropping writer bug still fails verify_export.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _write():
         (
             df.withColumn("shard", shard)
@@ -269,17 +268,7 @@ def export_shards(
             for r in _shard_stats(df, key_col, content_cols, n_shards).collect()
         }
 
-    # inheritable_thread_target: pool worker threads under pinned-thread
-    # mode do not inherit the submitting thread's JVM-local properties
-    # (job group / description / scheduler pool), so the overlapped jobs
-    # would escape job-group cancellation and UI attribution (ADVICE r12)
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_write = ex.submit(inheritable_thread_target(_write))
-        f_stats = ex.submit(inheritable_thread_target(_stats))
-        f_write.result()
-        stats = f_stats.result()
+    _, stats = overlap(df.sparkSession, _write, _stats)
     manifest = {
         "version": 1,
         "n_shards": n_shards,
@@ -704,15 +693,7 @@ def update_export(
             ).collect()
         }
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target  # see export_shards note
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_write = ex.submit(inheritable_thread_target(_write_staging))
-        f_stats = ex.submit(inheritable_thread_target(_patched_stats))
-        f_write.result()
-        new_stats = f_stats.result()
+    _, new_stats = overlap(spark, _write_staging, _patched_stats)
 
     # COMMIT POINT for exclusivity: claim the next generation before any
     # live shard dir moves.  A racing update that already claimed it makes

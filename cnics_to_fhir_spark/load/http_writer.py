@@ -1,4 +1,4 @@
-"""S7-S9 — the FHIR REST sink as a partition-parallel batched writer.
+"""S7-S9 — the FHIR REST sink as a partition-parallel Bundle writer.
 
 Replaces the reference's one-HTTP-call-per-row loop (cnics_to_fhir.py:531,
 :631, :714, :899 + deletes :333, :564, :660, :744) with
@@ -6,22 +6,21 @@ Replaces the reference's one-HTTP-call-per-row loop (cnics_to_fhir.py:531,
 ``requests.Session`` optimization, :246-247, made per-executor), explicit
 retry with backoff mirroring the 5×5s SQL retry policy (:163-177).
 
-Two transport modes. The default sends FHIR ``transaction`` Bundles of
-about ``WriterConfig.bundle_size`` plan rows each, grouped by patient: a
-new Patient's create and every row whose subject references it travel in
-one transaction, the Patient entry first, under a deterministic
-``fullUrl: urn:uuid:`` that the dependents' ``subject.reference`` already
-holds (``job.resolve_patient_ids``). The server rewrites those references
-to the id it assigns (FHIR R4 bundle.html#references), so no placeholder
-survives one run. ``bundle_size=0`` keeps the reference-parity per-row
-mode (one request per resource); it has no Patient-first wave, so a
-resource created in the same run as its new Patient keeps the ``urn:uuid:``
-reference until the next run sends it as an update.
+Every plan row becomes one entry of a FHIR ``transaction`` Bundle: insert →
+POST {type}, update → PUT {type}/{id}, delete → DELETE {type}/{id}, a
+Patient delete cascading (``?_cascade=delete``, :333). Bundles hold about
+``WriterConfig.bundle_size`` rows each and are grouped by patient: a new
+Patient's create and every row whose subject references it travel in one
+transaction, the Patient entry first, under a deterministic ``fullUrl:
+urn:uuid:`` that the dependents' ``subject.reference`` already holds
+(``job.resolve_patient_ids``). The server rewrites those references to the
+id it assigns (FHIR R4 bundle.html#references), so no placeholder survives
+one run.
 
-Replay safety: PUT/DELETE replay safely. Every create is conditional
-(``ifNoneExist`` on a Bundle entry, the ``If-None-Exist`` header on a
-per-row POST) on the resource's ``identifier[0]`` system and value, so a
-Spark task retry that replays a partition re-creates nothing that landed.
+Replay safety: PUT/DELETE replay safely, and every create is conditional
+(``ifNoneExist``) on the resource's ``identifier[0]`` system and value, so
+a replayed transaction — a Spark task retry, or an envelope retry after a
+committed transaction's response was lost — re-creates nothing that landed.
 
 Counters (A5, :309-320) come back through Spark accumulators and — exactly —
 from ``action_counts`` over the plan itself.
@@ -32,11 +31,12 @@ from __future__ import annotations
 import json
 import time
 from dataclasses import dataclass
+from urllib.parse import quote
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# columns the bundle path adds to the plan: a new Patient's fullUrl, and the
+# columns the writer adds to the plan: a new Patient's fullUrl, and the
 # group a row must share a transaction with
 _FULL_URL = "__full_url"
 _GROUP = "__group"
@@ -49,24 +49,10 @@ class WriterConfig:
     max_retries: int = 5  # cnics_to_fhir.py:163 (5 attempts)
     retry_sleep_s: float = 5.0  # :171 (5 s); scaled down in tests
     timeout_s: float = 30.0
-    cascade_patient_delete: bool = True  # ?_cascade=delete (:333)
-    # bundle_size > 0: FHIR `transaction`/`batch` Bundle POSTs of about this
-    # many entries each, cut only between patients (a new Patient and its
-    # dependents never split), so one bundle exceeds it by at most one
-    # patient's rows. 0 keeps the reference-parity per-row mode
-    # (cnics_to_fhir.py:531-533).
+    # the server's Bundle size limit: transactions hold about this many
+    # entries each, cut only between patients (a new Patient and its
+    # dependents never split), so one exceeds it by at most one patient's rows
     bundle_size: int = 100
-    # "batch" entries are independent: the server resolves no urn:uuid:
-    # reference between them
-    bundle_type: str = "transaction"
-    # Every create carries `identifier=<system>|<value>` from the resource's
-    # identifier[0] (FHIR conditional create; `identifier=<key>` when it has
-    # no identifier), so a Spark task retry that replays a partition cannot
-    # create the same resource twice, and another site's resource with the
-    # same value does not turn a create into a no-op. The plan's `key`
-    # column IS identifier[0].value (operators/merge.py), so the condition
-    # matches exactly what the merge classified on.
-    conditional_create: bool = True
 
 
 def patient_full_url(system: Column, value: Column) -> Column:
@@ -80,47 +66,51 @@ def patient_full_url(system: Column, value: Column) -> Column:
     return F.concat(F.lit("urn:uuid:"), F.concat_ws("-", *parts))
 
 
-def _send(session, cfg: WriterConfig, method: str, url: str, body: str | None,
-          headers: dict[str, str] | None = None):
+def _send(session, cfg: WriterConfig, body: str):
     last_exc: Exception | None = None
-    if body:
-        headers = {"Content-Type": "application/fhir+json;charset=utf-8", **(headers or {})}
+    headers = {"Content-Type": "application/fhir+json;charset=utf-8"}
     for attempt in range(cfg.max_retries):
         try:
-            resp = session.request(method, url, data=body, headers=headers, timeout=cfg.timeout_s)
+            resp = session.post(cfg.base_url, data=body, headers=headers, timeout=cfg.timeout_s)
             resp.raise_for_status()  # E2 (cnics_to_fhir.py:534 etc.)
             return resp
         except Exception as exc:  # noqa: BLE001 — retry loop mirrors E1
             last_exc = exc
             if attempt + 1 < cfg.max_retries:
                 time.sleep(cfg.retry_sleep_s)
-    raise RuntimeError(f"{method} {url} failed after {cfg.max_retries} attempts") from last_exc
+    raise RuntimeError(f"POST {cfg.base_url} failed after {cfg.max_retries} attempts") from last_exc
 
 
-def _entry_url(cfg: WriterConfig, rtype: str, rid: str) -> str:
-    url = f"{rtype}/{rid}"
-    if rtype == "Patient" and cfg.cascade_patient_delete:
-        url += "?_cascade=delete"
-    return url
+def _token(s: str) -> str:
+    """One part of a token search value, escaped (FHIR R4
+    search.html#escaping: ``\\ | , $``) and percent-encoded: the system and
+    value come from the source DB, and an unescaped ``,`` is an OR, a ``|``
+    a new system/value split and an ``&`` a new search parameter."""
+    for c in "\\|,$":
+        s = s.replace(c, "\\" + c)
+    return quote(s, safe="")
 
 
-def _if_none_exist(cfg: WriterConfig, resource: dict, key: str | None) -> str | None:
-    """The conditional-create search for one new resource, or None."""
-    if not cfg.conditional_create:
-        return None
+def _if_none_exist(resource: dict, key: str | None) -> str | None:
+    """The conditional-create search for one new resource: its
+    identifier[0] as ``identifier=<system>|<value>`` — so another site's
+    resource with the same value does not turn the create into a no-op —
+    or ``identifier=<key>`` when it has no identifier. The plan's ``key``
+    column IS identifier[0].value (operators/merge.py), so the condition
+    matches exactly what the merge classified on."""
     ident = (resource.get("identifier") or [{}])[0]
     if ident.get("system") and ident.get("value"):
-        return f"identifier={ident['system']}|{ident['value']}"
-    return None if key is None else f"identifier={key}"
+        return f"identifier={_token(ident['system'])}|{_token(ident['value'])}"
+    return None if key is None else f"identifier={_token(key)}"
 
 
-def _bundle_entry(cfg: WriterConfig, row) -> dict:
+def _bundle_entry(row) -> dict:
     row = row.asDict()
     rtype, action = row["resource_type"], row["action"]
     if action == "insert":
         resource = json.loads(row["body_json"])
         request = {"method": "POST", "url": rtype}
-        cond = _if_none_exist(cfg, resource, row.get("key"))
+        cond = _if_none_exist(resource, row.get("key"))
         if cond is not None:
             request["ifNoneExist"] = cond
         entry = {"resource": resource, "request": request}
@@ -133,25 +123,27 @@ def _bundle_entry(cfg: WriterConfig, row) -> dict:
             "request": {"method": "PUT", "url": f"{rtype}/{row['id']}"},
         }
     if action == "delete":
-        return {"request": {"method": "DELETE", "url": _entry_url(cfg, rtype, row["id"])}}
+        url = f"{rtype}/{row['id']}"
+        if rtype == "Patient":
+            url += "?_cascade=delete"
+        return {"request": {"method": "DELETE", "url": url}}
     raise ValueError(f"unknown action {action!r}")
 
 
 def _post_bundle(session, cfg: WriterConfig, chunk: list, counters) -> None:
-    """POST one transaction/batch Bundle and check EVERY entry's response
-    status — a 200 envelope with a failed entry inside (the `batch` mode
-    contract) must still fail the task, not silently drop writes."""
+    """POST one transaction Bundle and check EVERY entry's response
+    status: the response comes from outside, and a 200 envelope with a
+    failed entry inside must still fail the task, not silently drop
+    writes."""
     bundle = {
         "resourceType": "Bundle",
-        "type": cfg.bundle_type,
-        "entry": [_bundle_entry(cfg, row) for row in chunk],
+        "type": "transaction",
+        "entry": [_bundle_entry(row) for row in chunk],
     }
     try:
-        resp = _send(session, cfg, "POST", cfg.base_url, json.dumps(bundle))
+        resp = _send(session, cfg, json.dumps(bundle))
     except Exception:
-        # transport-level failure counts every entry as failed — parity
-        # with per-row mode, where an exhausted retry still increments
-        # counters["failed"] before the raise
+        # an exhausted retry counts every entry as failed
         counters["failed"].add(len(chunk))
         raise
     body = resp.json()
@@ -214,27 +206,17 @@ def write_action_plan(plan: DataFrame, cfg: WriterConfig) -> dict[str, int]:
     """Execute an action plan ``(resource_type, action, id, key,
     body_json)`` against the FHIR endpoint.
 
-    Bundle mode (``bundle_size=N``, the default): ``group_by_patient`` lays
-    the plan out so a new Patient and its dependents are contiguous, and
-    each partition POSTs ``transaction`` Bundles to the base URL, cutting a
-    Bundle once it holds N entries and the next row starts a new group.
-    Every entry's response status is checked. The Patient entry's
-    ``fullUrl`` is the ``urn:uuid:`` its dependents reference, which the
-    server resolves to the id it assigns. Per-row mode (``bundle_size=0``):
-    insert → POST /{type}; update → PUT /{type}/{id}; delete → DELETE
-    /{type}/{id}, in plan order with no Patient-first wave, so a dependent
-    of a Patient created in the same run stores the unresolved
-    ``urn:uuid:`` reference until the next run updates it.
-    Patient deletes cascade in both modes (:333).
+    ``group_by_patient`` lays the plan out so a new Patient and its
+    dependents are contiguous, and each partition POSTs ``transaction``
+    Bundles to the base URL, cutting a Bundle once it holds
+    ``cfg.bundle_size`` entries and the next row starts a new group. Every
+    entry's response status is checked. The Patient entry's ``fullUrl`` is
+    the ``urn:uuid:`` its dependents reference, which the server resolves
+    to the id it assigns.
 
-    Retry/idempotence: PUT/DELETE replay safely. Creates are conditional
-    on the resource's identifier system and value (``ifNoneExist`` in a
-    Bundle, ``If-None-Exist`` per row), so a replayed partition — a
-    ``batch`` bundle that partially applied before an entry failed, a
-    zombie retry of a committed ``transaction``, or a per-row partition
-    torn mid-way — re-creates nothing. With ``conditional_create=False``
-    a replay duplicates the creates that already landed — only disable it
-    against a store that rejects conditional creates.
+    Retry/idempotence: a failed POST is retried whole; PUT/DELETE replay
+    safely and creates are conditional on the resource's identifier system
+    and value, so a replayed transaction re-creates nothing.
     Accumulator caveat: counters are task-lifetime totals, so a retried
     task re-counts its successful entries; treat counts as at-least-once
     telemetry (the authoritative per-action counts come from
@@ -247,7 +229,7 @@ def write_action_plan(plan: DataFrame, cfg: WriterConfig) -> dict[str, int]:
     }
     headers = dict(cfg.headers)
 
-    def run_bundled(rows) -> None:
+    def post_partition(rows) -> None:
         import requests  # deferred: executors need it only when actually writing
 
         session = requests.Session()
@@ -261,37 +243,5 @@ def write_action_plan(plan: DataFrame, cfg: WriterConfig) -> dict[str, int]:
         if chunk:
             _post_bundle(session, cfg, chunk, counters)
 
-    def run_partition(rows) -> None:
-        import requests
-
-        session = requests.Session()
-        session.headers.update(headers)
-        for row in rows:
-            rtype, action = row["resource_type"], row["action"]
-            try:
-                if action == "insert":
-                    cond = _if_none_exist(cfg, json.loads(row["body_json"]), row["key"])
-                    _send(
-                        session, cfg, "POST", f"{cfg.base_url}/{rtype}", row["body_json"],
-                        None if cond is None else {"If-None-Exist": cond},
-                    )
-                elif action == "update":
-                    _send(
-                        session, cfg, "PUT",
-                        f"{cfg.base_url}/{rtype}/{row['id']}", row["body_json"],
-                    )
-                elif action == "delete":
-                    _send(
-                        session, cfg, "DELETE",
-                        f"{cfg.base_url}/{_entry_url(cfg, rtype, row['id'])}", None,
-                    )
-                counters[action].add(1)
-            except Exception:
-                counters["failed"].add(1)
-                raise  # let Spark's task retry handle it (idempotent writes)
-
-    if cfg.bundle_size > 0:
-        group_by_patient(plan).foreachPartition(run_bundled)
-    else:
-        plan.foreachPartition(run_partition)
+    group_by_patient(plan).foreachPartition(post_partition)
     return {k: v.value for k, v in counters.items()}

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cnics_to_fhir_spark.operators.textanalysis import token_count
+from cnics_to_fhir_spark.session import overlap
 
 
 def _md5_prefix(col, n: int):
@@ -675,8 +676,6 @@ def incremental_split_update(
     on ``id_col``.
 
     → (id, is_new, split, inherited, conflict) for every doc."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from cnics_to_fhir_spark.operators.dedup import (
         incremental_jaccard_pairs,
         ngram_jaccard_pairs,
@@ -701,12 +700,7 @@ def incremental_split_update(
             k=k, block_words=block_words, threshold=threshold,
         ).localCheckpoint(eager=True)
 
-    from pyspark import inheritable_thread_target  # pinned-thread props
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        f_existing = ex.submit(inheritable_thread_target(_phase1))
-        f_inc = ex.submit(inheritable_thread_target(_ingest_pairs))
-        existing, inc = f_existing.result(), f_inc.result()
+    existing, inc = overlap(corpus.sparkSession, _phase1, _ingest_pairs)
 
     batch_ids = batch.select(F.col(id_col).alias("__bid")).distinct()
 

@@ -14,12 +14,15 @@
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from cnics_to_fhir_spark.functions.numeric import stable_round
 from cnics_to_fhir_spark.functions.partitioning import ensure_min_parallelism
+from cnics_to_fhir_spark.session import overlap
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -588,12 +591,9 @@ def pq_adc_topk(
     # subspace's collect latency back-fills another's task tail
     # (guide §2.6).  Results are indexed by subspace, so the trained list
     # and LUT columns are identical to the serial construction.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=min(4, n_sub)) as ex:
-        results = list(ex.map(inheritable_thread_target(_train_sub), range(n_sub)))
+    results = overlap(
+        spark, *(functools.partial(_train_sub, i) for i in range(n_sub)), max_workers=4
+    )
     trained: list[list[tuple[int, list[float]]]] = [r[0] for r in results]
     luts = [r[1] for r in results]
     # encode: every subspace code in one pass over the corpus — a narrow

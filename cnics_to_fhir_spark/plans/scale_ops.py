@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from cnics_to_fhir_spark.operators import dedup, events_windows, similarity, textanalysis
 from cnics_to_fhir_spark.plans.registry import detach_result, query, table
+from cnics_to_fhir_spark.session import overlap
 
 _DEC_RE = r"(-?(0|[1-9][0-9]*)(\.[0-9]+)?([eE][+-]?[0-9]+)?)"
 
@@ -2541,8 +2542,6 @@ def j12_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the two bucketed CTAS writes are independent tables — overlap
         # them on two driver threads so the smaller write back-fills the
         # bigger one's task tail (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
         def _write_orders():
             (o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
               .mode("overwrite").saveAsTable(f"{db}.orders_b"))
@@ -2551,9 +2550,7 @@ def j12_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
               .mode("overwrite").saveAsTable(f"{db}.lineitem_b"))
 
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            fo, fl = ex.submit(_write_orders), ex.submit(_write_lineitem)
-            fo.result(), fl.result()
+        overlap(spark, _write_orders, _write_lineitem)
         ob, lb = spark.table(f"{db}.orders_b"), spark.table(f"{db}.lineitem_b")
         with session_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
             joined = (
@@ -5460,8 +5457,6 @@ def u03_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders = table(spark, sf_dir, "orders")
         # independent generation writes — overlap on two driver threads
         # (guide §2.6; each is a 1-task coalesced write by design)
-        from concurrent.futures import ThreadPoolExecutor
-
         def _gen1():
             (
                 orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -5480,9 +5475,7 @@ def u03_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(os.path.join(path, "gen=2"))
             )
 
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f1, f2 = ex.submit(_gen1), ex.submit(_gen2)
-            f1.result(), f2.result()
+        overlap(spark, _gen1, _gen2)
         merged = spark.read.option("mergeSchema", "true").parquet(
             os.path.join(path, "gen=1"), os.path.join(path, "gen=2")
         )
@@ -6361,8 +6354,6 @@ def u04_rename_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders = table(spark, sf_dir, "orders")
         # independent generation writes — overlap on two driver threads
         # (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
         def _gen1():
             (
                 orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -6385,9 +6376,7 @@ def u04_rename_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(os.path.join(path, "gen=2"))
             )
 
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f1, f2 = ex.submit(_gen1), ex.submit(_gen2)
-            f1.result(), f2.result()
+        overlap(spark, _gen1, _gen2)
         write_name_mapping(path, {"gen=1": {"priority_code": "o_orderpriority"}})
         merged = read_with_name_mapping(spark, path)
         if [f for f in merged.columns if f == "priority_code"]:
@@ -6461,8 +6450,6 @@ def u05_partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the two generation writes are independent — overlap them on two
         # driver threads (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
         def _gen1():
             (
                 orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -6481,9 +6468,7 @@ def u05_partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(os.path.join(path, "gen=2"))
             )
 
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f1, f2 = ex.submit(_gen1), ex.submit(_gen2)
-            f1.result(), f2.result()
+        overlap(spark, _gen1, _gen2)
         write_partition_specs(
             path,
             {
@@ -7166,8 +7151,6 @@ def u06_type_widening_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # independent generation writes — overlap on two driver threads
         # (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
         def _gen1():
             (
                 orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -7185,9 +7168,7 @@ def u06_type_widening_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(os.path.join(path, "gen=2"))
             )
 
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            f1, f2 = ex.submit(_gen1), ex.submit(_gen2)
-            f1.result(), f2.result()
+        overlap(spark, _gen1, _gen2)
         write_type_widening(path, {"gen=1": {"o_custkey": "bigint"}})
         merged = read_with_type_widening(spark, path)
         if dict(merged.dtypes)["o_custkey"] != "bigint":

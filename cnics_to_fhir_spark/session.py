@@ -17,7 +17,10 @@ from __future__ import annotations
 import contextlib
 import os
 import re
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 
@@ -80,6 +83,20 @@ def session_conf(spark: SparkSession, conf: dict[str, str]):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, old)
+
+
+def overlap(spark: SparkSession, *fns: Callable[[], object], max_workers: int | None = None) -> list:
+    """Run independent zero-argument driver functions on concurrent threads
+    (the scheduler interleaves their Spark jobs, so one's task tail or
+    collect latency back-fills another's) and return their results in
+    order. Each thread inherits the caller's job group, description,
+    scheduler pool and session tags: a pool thread under pinned-thread mode
+    starts without them, so its jobs would escape job-group attribution and
+    cancellation. Each function is wrapped on its own, so each gets its own
+    copy of the properties: Spark sets per-execution properties on it."""
+    with ThreadPoolExecutor(max_workers=max_workers or len(fns)) as ex:
+        futures = [ex.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+        return [f.result() for f in futures]
 
 
 def scratch_name(spark: SparkSession, base: str) -> str:

@@ -25,6 +25,7 @@ def _docs(spark, n=200):
     )
 
 
+@pytest.mark.filterwarnings("error:Spark session is not provided")
 def test_roundtrip_and_deterministic_manifest(spark, tmp_path):
     df = _docs(spark)
     m1 = export_shards(df, str(tmp_path / "a"), n_shards=8)
@@ -135,6 +136,7 @@ def test_load_shard_verifies_per_shard(spark, tmp_path):
         load_shard(spark, path, 3)
 
 
+@pytest.mark.filterwarnings("error:Spark session is not provided")
 def test_update_export_incremental_equals_full_reexport(spark, tmp_path):
     """The incremental-update contract: after update_export, the manifest
     (and the artifact) are IDENTICAL to a from-scratch export of the

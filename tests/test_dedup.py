@@ -3,6 +3,7 @@ the xxhash64-based operators the DuckDB oracle can't express."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark.operators import dedup, similarity
@@ -381,6 +382,7 @@ def test_containment_catches_what_jaccard_misses(spark):
     assert (1, 2) not in jac
 
 
+@pytest.mark.filterwarnings("error:Spark session is not provided")
 def test_pq_adc_ranks_identical_vectors_first(spark):
     from cnics_to_fhir_spark.operators.similarity import pq_adc_topk
 

@@ -165,3 +165,31 @@ def test_type_widening_scan_and_refusals(spark, tmp_path):
     write_type_widening(root, {"gen=1": {"ghost": "bigint"}})
     with pytest.raises(ValueError, match="no such column"):
         read_with_type_widening(spark, root)
+
+
+def test_u03_overlapped_writes_keep_the_job_group(spark, tmp_path):
+    """u03 writes its two file generations on concurrent driver threads.
+    Their jobs must inherit the caller's job group, so cancelling the group
+    cancels them: no job of the run lands outside it."""
+    import datetime
+
+    from cnics_to_fhir_spark.plans.scale_ops import u03_schema_evolution_scan
+
+    spark.createDataFrame(
+        [(i, i % 7, "OF"[i % 2], 10.5 * i, datetime.datetime(2020, 1, 1), f"{i % 5}-PRI")
+         for i in range(1, 41)],
+        "o_orderkey long, o_custkey long, o_orderstatus string, o_totalprice double, "
+        "o_orderdate timestamp, o_orderpriority string",
+    ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()  # job ids reach the tracker through it
+    bus.waitUntilEmpty()
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup("u03", "overlapped generation writes")
+    try:
+        assert len(u03_schema_evolution_scan(spark, str(tmp_path)).collect()) == 6
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) == ungrouped
+    assert sc.statusTracker().getJobIdsForGroup("u03")

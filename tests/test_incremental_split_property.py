@@ -9,6 +9,7 @@ from __future__ import annotations
 import hashlib
 import math
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -113,6 +114,7 @@ def _mirror(docs: dict[int, str], batch_ids: set[int]) -> dict[int, tuple]:
     return out
 
 
+@pytest.mark.filterwarnings("error:Spark session is not provided")
 @settings(max_examples=5, deadline=None)
 @given(
     st.lists(

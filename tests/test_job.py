@@ -129,8 +129,7 @@ def test_run_job_one_site_end_to_end(spark):
     assert not [r for r in rows if r["resource_type"] == "MedicationRequest"]
 
 
-@pytest.mark.parametrize("bundle_size", [0, 3])
-def test_run_job_write_readback_converges(spark, bundle_size, caplog):
+def test_run_job_write_readback_converges(spark, caplog):
     """The reference's implicit convergence contract
     (cnics_to_fhir.py:914-925): extract → plan → WRITE to the store →
     re-snapshot the store → run again.  Run 2 must produce ZERO inserts and
@@ -140,11 +139,9 @@ def test_run_job_write_readback_converges(spark, bundle_size, caplog):
     run 3's store state == run 2's.  Uses a STATEFUL in-process mock FHIR
     server (POST assigns ids, PUT/DELETE mutate) — the full
     extract→plan→write→re-read loop, not just the mocked method routing of
-    tests/test_writer.py.  Parametrized over both writer transports:
-    per-row requests and transaction-Bundle mode (bundle_size=3) — the
-    fixpoint must hold identically under bundled writes, and in bundle mode
-    no placeholder reference is left after the first run. Each run logs
-    the writer's counters as one JSON record."""
+    tests/test_writer.py.  Bundles of about 3 rows make one run several
+    transactions, and no placeholder reference is left after the first
+    run. Each run logs the writer's counters as one JSON record."""
     import http.server
     import json as jsonmod
     import logging
@@ -200,32 +197,9 @@ def test_run_job_write_readback_converges(spark, bundle_size, caplog):
 
         def do_POST(self):
             n = int(self.headers.get("Content-Length") or 0)
-            body = self.rfile.read(n).decode()
-            if self.path == "/":
-                parsed = jsonmod.loads(body)
-                assert parsed.get("resourceType") == "Bundle"
-                self._apply_bundle(parsed)
-                return
-            rtype = self.path.strip("/")
-            with lock:
-                rid = f"srv-{next(seq)}"
-                store[(rtype, rid)] = body
-            self._reply({"id": rid})
-
-        def do_PUT(self):
-            n = int(self.headers.get("Content-Length") or 0)
-            body = self.rfile.read(n).decode()
-            rtype, rid = self.path.strip("/").split("/")
-            with lock:
-                store[(rtype, rid)] = body
-            self._reply({"id": rid})
-
-        def do_DELETE(self):
-            path = self.path.split("?")[0]
-            rtype, rid = path.strip("/").split("/")
-            with lock:
-                store.pop((rtype, rid), None)
-            self._reply({})
+            bundle = jsonmod.loads(self.rfile.read(n).decode())
+            assert self.path == "/" and bundle.get("type") == "transaction"
+            self._apply_bundle(bundle)
 
         def log_message(self, *args):
             pass
@@ -303,7 +277,7 @@ def test_run_job_write_readback_converges(spark, bundle_size, caplog):
              "Pro": empty_pro, "Snapshot": snap, **empty}
         return lambda name: t[name]
 
-    cfg = WriterConfig(base_url=base_url, retry_sleep_s=0.01, bundle_size=bundle_size)
+    cfg = WriterConfig(base_url=base_url, retry_sleep_s=0.01, bundle_size=3)
     try:
         def run_once():
             caplog.clear()
@@ -325,10 +299,9 @@ def test_run_job_write_readback_converges(spark, bundle_size, caplog):
 
         c1 = run_once()
         assert c1["insert"] >= 3 and c1["delete"] == 1  # 2 patients + 2 dx in; stale out
-        if bundle_size:
-            # each new Patient and its Condition share a transaction whose
-            # urn:uuid: reference the store resolved: none is left after ONE run
-            assert placeholders() == []
+        # each new Patient and its Condition share a transaction whose
+        # urn:uuid: reference the store resolved: none is left after ONE run
+        assert placeholders() == []
 
         c2 = run_once()
         state_after_2 = dict(store)
@@ -336,8 +309,6 @@ def test_run_job_write_readback_converges(spark, bundle_size, caplog):
         # unconditional re-PUT updates remain
         assert c2["insert"] == 0 and c2["delete"] == 0
         assert c2["update"] == c1["insert"] + c1["update"]
-        # every update now targets a real server id (per-row mode's
-        # unresolved references are gone after a write+re-read cycle)
         assert placeholders() == []
 
         c3 = run_once()

@@ -1,13 +1,16 @@
-"""HTTP writer test against an in-process mock FHIR server: verifies method
-routing (POST/PUT/DELETE), the Patient cascade delete, the E1-style retry,
-and accumulator counters. local[*] executors share the process, so a
-threaded http.server is reachable from foreachPartition."""
+"""HTTP writer tests against in-process mock FHIR servers: transaction
+Bundle routing (POST/PUT/DELETE entries), the Patient cascade delete,
+patient grouping, the E1-style envelope retry, conditional-create replay
+safety and its search escaping, and accumulator counters. local[*]
+executors share the process, so a threaded http.server is reachable from
+foreachPartition."""
 
 from __future__ import annotations
 
 import http.server
 import json
 import threading
+from urllib.parse import parse_qs
 
 import pytest
 
@@ -15,51 +18,13 @@ from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark.load.http_writer import (
     WriterConfig,
+    _if_none_exist,
     group_by_patient,
     patient_full_url,
     write_action_plan,
 )
 
 requests = pytest.importorskip("requests")
-
-
-class _Recorder(http.server.BaseHTTPRequestHandler):
-    requests_log: list[tuple[str, str]] = []
-    fail_next: dict[str, int] = {}
-
-    def _handle(self):
-        key = f"{self.command} {self.path}"
-        _Recorder.requests_log.append((self.command, self.path))
-        remaining = _Recorder.fail_next.get(key, 0)
-        if remaining > 0:
-            _Recorder.fail_next[key] = remaining - 1
-            self.send_response(500)
-            self.end_headers()
-            self.wfile.write(b"{}")
-            return
-        length = int(self.headers.get("Content-Length") or 0)
-        if length:
-            self.rfile.read(length)
-        self.send_response(200)
-        self.send_header("Content-Type", "application/fhir+json")
-        self.end_headers()
-        self.wfile.write(json.dumps({"ok": True}).encode())
-
-    do_GET = do_POST = do_PUT = do_DELETE = _handle
-
-    def log_message(self, *args):  # silence
-        pass
-
-
-@pytest.fixture()
-def mock_server():
-    _Recorder.requests_log = []
-    _Recorder.fail_next = {}
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _Recorder)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    yield f"http://127.0.0.1:{srv.server_address[1]}"
-    srv.shutdown()
 
 
 def _plan(spark):
@@ -74,29 +39,7 @@ def _plan(spark):
     ).coalesce(1)
 
 
-def _per_row(base_url: str, **kw) -> WriterConfig:
-    return WriterConfig(base_url=base_url, bundle_size=0, **kw)
-
-
-def test_writer_routes_methods(spark, mock_server):
-    counts = write_action_plan(_plan(spark), _per_row(mock_server, retry_sleep_s=0.01))
-    got = set(_Recorder.requests_log)
-    assert ("POST", "/Condition") in got
-    assert ("PUT", "/Condition/c9") in got
-    assert ("DELETE", "/Condition/c7") in got
-    assert ("DELETE", "/Patient/p1?_cascade=delete") in got  # :333
-    assert counts == {"insert": 1, "update": 1, "delete": 2, "failed": 0}
-
-
-def test_writer_retries_then_succeeds(spark, mock_server):
-    _Recorder.fail_next["PUT /Condition/c9"] = 2  # fail twice, succeed 3rd
-    counts = write_action_plan(_plan(spark), _per_row(mock_server, retry_sleep_s=0.01))
-    assert counts["failed"] == 0
-    puts = [p for m, p in _Recorder.requests_log if m == "PUT"]
-    assert len(puts) == 3  # two failures + one success
-
-
-def test_auth_token_roundtrip(mock_server):
+def test_auth_token_roundtrip():
     """S12: client-credentials POST → bearer header tuple; AuthError
     fail-fast on failure (E4)."""
     from cnics_to_fhir_spark.load import auth
@@ -127,19 +70,10 @@ def test_auth_token_roundtrip(mock_server):
         srv.shutdown()
 
 
-def test_writer_exhausted_retries_raises(spark, mock_server):
-    _Recorder.fail_next["POST /Condition"] = 99
-    with pytest.raises(Exception):
-        write_action_plan(
-            _plan(spark),
-            _per_row(mock_server, retry_sleep_s=0.001, max_retries=2),
-        )
-
-
 class _BundleRecorder(http.server.BaseHTTPRequestHandler):
-    """Bundle-aware mock: POST / with a transaction/batch Bundle applies
-    each entry, logging the sub-request, and replies with a
-    *-response Bundle carrying one response.status per entry.
+    """Bundle-aware mock: POST / with a transaction Bundle applies each
+    entry, logging the sub-request, and replies with a transaction-response
+    Bundle carrying one response.status per entry.
     ``fail_entries`` forces specific (method, url) entries to 500 —
     exercising the per-entry outcome check under a 200 envelope."""
 
@@ -159,7 +93,7 @@ class _BundleRecorder(http.server.BaseHTTPRequestHandler):
             return
         assert self.path == "/", f"bundles POST to the base, got {self.path}"
         assert body.get("resourceType") == "Bundle"
-        assert body.get("type") in ("transaction", "batch")
+        assert body.get("type") == "transaction"
         _BundleRecorder.bundles.append(body)
         out = []
         for ent in body["entry"]:
@@ -173,7 +107,7 @@ class _BundleRecorder(http.server.BaseHTTPRequestHandler):
                 out.append({"response": {"status": status}})
         resp = {
             "resourceType": "Bundle",
-            "type": f"{body['type']}-response",
+            "type": "transaction-response",
             "entry": out,
         }
         self.send_response(200)
@@ -308,15 +242,15 @@ def test_group_by_patient_spreads_unrelated_rows(spark):
 
 
 def test_writer_bundle_per_entry_failure_fails_task(spark, bundle_server):
-    """A 200 envelope with one failed entry inside must raise (batch
-    semantics) and count the failure — never silently drop a write."""
+    """A 200 envelope with one failed entry inside must raise and count the
+    failure — never silently drop a write."""
     _BundleRecorder.fail_entries = {("PUT", "Condition/c9")}
     with pytest.raises(Exception, match="bundle entries failed"):
         write_action_plan(
             _plan(spark),
             WriterConfig(
                 base_url=bundle_server, retry_sleep_s=0.01,
-                bundle_size=10, bundle_type="batch", max_retries=1,
+                bundle_size=10, max_retries=1,
             ),
         )
 
@@ -351,30 +285,13 @@ def test_writer_bundle_post_carries_conditional_create(spark, bundle_server):
     ]
     # the insert row's key is k1 = identifier[0].value (merge contract)
     assert [e["request"].get("ifNoneExist") for e in posts] == ["identifier=k1"]
-    # and the opt-out drops it
-    _BundleRecorder.bundles = []
-    write_action_plan(
-        _plan(spark),
-        WriterConfig(
-            base_url=bundle_server, retry_sleep_s=0.01,
-            bundle_size=10, conditional_create=False,
-        ),
-    )
-    posts = [
-        e
-        for b in _BundleRecorder.bundles
-        for e in b["entry"]
-        if e["request"]["method"] == "POST"
-    ]
-    assert [("ifNoneExist" in e["request"]) for e in posts] == [False]
 
 
 def test_writer_bundle_transport_failure_counts_failed(spark, bundle_server):
     """An exhausted envelope retry must increment the failed counter for
-    every entry in the chunk — parity with per-row mode."""
+    every entry in the chunk."""
     _BundleRecorder.fail_envelope_next = 10**6  # every attempt 500s
     plan = _plan(spark)
-    counters = {}
     try:
         write_action_plan(
             plan,
@@ -392,13 +309,9 @@ def test_writer_bundle_transport_failure_counts_failed(spark, bundle_server):
     counters = {a: sc.accumulator(0) for a in ("insert", "update", "delete", "failed")}
     from cnics_to_fhir_spark.load.http_writer import _post_bundle
 
-    import requests
-
     session = requests.Session()
     rows = plan.collect()
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="failed after 2 attempts"):
+    with pytest.raises(Exception, match="failed after 2 attempts"):
         _post_bundle(
             session,
             WriterConfig(
@@ -412,49 +325,44 @@ def test_writer_bundle_transport_failure_counts_failed(spark, bundle_server):
 
 
 class _ConditionalStore(http.server.BaseHTTPRequestHandler):
-    """Stateful mock honoring conditional create, per row (``If-None-Exist``
-    header on POST /{type}) and in bundles (``ifNoneExist``): a POST whose
-    condition names a stored identifier is a 200 no-op, otherwise 201 +
-    store. ``fail_keys_once`` makes the named keys 500 on their FIRST
-    appearance — a partition that partially applies before a create fails,
-    followed by a task retry."""
+    """Stateful mock honoring conditional create in transactions: a POST
+    entry whose ``ifNoneExist`` (decoded with ``parse_qs``) names a stored
+    identifier is a 200 no-op, otherwise 201 + store. ``lose_responses``
+    transactions are applied and then answered with a 500, as if the
+    response were lost after the commit."""
 
     store: list[str] = []
-    failed_once: set[str] = set()
-    fail_keys_once: set[str] = set()
+    transactions = 0
+    lose_responses = 0
 
     @classmethod
-    def reset(cls, fail_keys_once=()):
-        cls.store, cls.failed_once, cls.fail_keys_once = [], set(), set(fail_keys_once)
+    def reset(cls, lose_responses=0):
+        cls.store, cls.transactions, cls.lose_responses = [], 0, lose_responses
 
     @classmethod
-    def _create(cls, method: str, cond: str) -> str:
-        key = cond.split("=", 1)[1] if "=" in cond else None
-        if key in cls.fail_keys_once and key not in cls.failed_once:
-            cls.failed_once.add(key)
-            return "500 Internal Server Error"
-        if method == "POST" and key is not None and key in cls.store:
+    def _apply(cls, request: dict) -> str:
+        cond = request.get("ifNoneExist")
+        key = None if cond is None else parse_qs(cond)["identifier"][0]
+        if request["method"] != "POST":
+            return "200 OK"
+        if key is not None and key in cls.store:
             return "200 OK"  # conditional no-op
-        if method == "POST":
-            cls.store.append(key if key is not None else f"unconditional-{len(cls.store)}")
-            return "201 Created"
-        return "200 OK"
+        cls.store.append(key if key is not None else f"unconditional-{len(cls.store)}")
+        return "201 Created"
 
     def do_POST(self):
         n = int(self.headers.get("Content-Length") or 0)
         body = json.loads(self.rfile.read(n).decode())
-        if self.path != "/":
-            status = self._create("POST", self.headers.get("If-None-Exist", ""))
-            self.send_response(int(status[:3]))
+        assert self.path == "/" and body["type"] == "transaction"
+        _ConditionalStore.transactions += 1
+        out = [{"response": {"status": self._apply(ent["request"])}} for ent in body["entry"]]
+        if _ConditionalStore.lose_responses > 0:
+            _ConditionalStore.lose_responses -= 1
+            self.send_response(500)
             payload = {}
         else:
-            out = [
-                {"response": {"status": self._create(
-                    ent["request"]["method"], ent["request"].get("ifNoneExist", ""))}}
-                for ent in body["entry"]
-            ]
             self.send_response(200)
-            payload = {"resourceType": "Bundle", "type": f"{body['type']}-response", "entry": out}
+            payload = {"resourceType": "Bundle", "type": "transaction-response", "entry": out}
         self.send_header("Content-Type", "application/fhir+json")
         self.end_headers()
         self.wfile.write(json.dumps(payload).encode())
@@ -479,48 +387,23 @@ def _inserts(spark, bodies: list[tuple[str, str]]):
     ).coalesce(1)
 
 
-def test_writer_torn_batch_retry_does_not_duplicate(spark, conditional_store):
-    """Torn-retry idempotence (SURVEY §7.4's exactly-once-ish risk): a
-    `batch` bundle applies its first POST, a later entry 500s, the task
-    raises, and the retried task re-POSTs the whole partition. With
-    conditional create the replayed first POST is a server-side no-op —
-    the store converges to exactly one copy per key. The three Conditions
-    reference one new Patient, so they travel in one bundle, in key order."""
-    _ConditionalStore.reset(fail_keys_once={"k2"})
+def test_writer_lost_transaction_response_does_not_duplicate(spark, conditional_store):
+    """Torn-replay idempotence (SURVEY §7.4's exactly-once-ish risk): the
+    store commits a transaction but its response is lost, so the writer's
+    envelope retry replays the whole transaction. Conditional create makes
+    the replayed POSTs no-ops — the store keeps exactly one copy per key.
+    The three Conditions reference one new Patient, so they travel in one
+    transaction."""
+    _ConditionalStore.reset(lose_responses=1)
     body = '{"resourceType":"Condition","subject":{"reference":"urn:uuid:p"}}'
     plan = _inserts(spark, [(k, body) for k in ("k1", "k2", "k3")])
-    cfg = WriterConfig(
-        base_url=conditional_store, retry_sleep_s=0.01, bundle_size=10,
-        bundle_type="batch", max_retries=1,
-    )
-    # first attempt: k1 applies, k2 fails, task raises mid-partition
-    with pytest.raises(Exception, match="bundle entries failed"):
-        write_action_plan(plan, cfg)
-    assert _ConditionalStore.store == ["k1", "k3"]
-    # simulated task retry replays the whole partition
-    counts = write_action_plan(plan, cfg)
-    assert counts["failed"] == 0
-    # convergence: one copy per key, no duplicates from the replay
+    counts = write_action_plan(plan, WriterConfig(base_url=conditional_store, retry_sleep_s=0.01))
+    assert _ConditionalStore.transactions == 2  # the transaction was replayed
+    assert counts == {"insert": 3, "update": 0, "delete": 0, "failed": 0}
     assert sorted(_ConditionalStore.store) == ["k1", "k2", "k3"]
 
 
-def test_writer_torn_per_row_retry_does_not_duplicate(spark, conditional_store):
-    """The per-row form of the torn replay: the partition's second POST
-    fails, the task raises, and the replay re-POSTs the first one. Its
-    ``If-None-Exist`` header makes that a no-op."""
-    _ConditionalStore.reset(fail_keys_once={"k2"})
-    plan = _inserts(spark, [(k, '{"resourceType":"Condition"}') for k in ("k1", "k2", "k3")])
-    cfg = WriterConfig(base_url=conditional_store, retry_sleep_s=0.01, bundle_size=0, max_retries=1)
-    with pytest.raises(Exception):
-        write_action_plan(plan, cfg)
-    assert _ConditionalStore.store == ["k1"]
-    counts = write_action_plan(plan, cfg)
-    assert counts["failed"] == 0
-    assert sorted(_ConditionalStore.store) == ["k1", "k2", "k3"]
-
-
-@pytest.mark.parametrize("bundle_size", [0, 10])
-def test_conditional_create_is_scoped_by_system(spark, conditional_store, bundle_size):
+def test_conditional_create_is_scoped_by_system(spark, conditional_store):
     """Two sites' Conditions share the record id "dx-1": the condition
     names system and value, so neither create is mistaken for the other
     — and a replay still creates nothing new."""
@@ -529,8 +412,31 @@ def test_conditional_create_is_scoped_by_system(spark, conditional_store, bundle
                              "identifier": [{"system": f"urn:dx/{site}", "value": "dx-1"}]}))
         for site in ("uw", "ucsd")
     ]
-    cfg = WriterConfig(base_url=conditional_store, retry_sleep_s=0.01, bundle_size=bundle_size)
+    cfg = WriterConfig(base_url=conditional_store, retry_sleep_s=0.01)
     for _ in range(2):
         counts = write_action_plan(_inserts(spark, bodies), cfg)
         assert counts["insert"] == 2 and counts["failed"] == 0
     assert sorted(_ConditionalStore.store) == ["urn:dx/ucsd|dx-1", "urn:dx/uw|dx-1"]
+
+
+def test_conditional_create_escapes_the_search():
+    """System and value come from the source DB. In a token search an
+    unescaped ``,`` is an OR and ``|`` splits system from value, and in the
+    query string ``&``, ``+`` and ``%`` change the parameters: each is
+    escaped (FHIR R4 search.html#escaping) and percent-encoded, so the
+    condition is exactly one ``identifier`` parameter naming one
+    identifier."""
+    cases = [  # (system, value, the decoded parameter)
+        ("urn:dx/uw", "a,b", r"urn:dx/uw|a\,b"),
+        ("urn:dx/uw", "x&_id=y", "urn:dx/uw|x&_id=y"),
+        ("urn:dx/uw", "a+b", "urn:dx/uw|a+b"),
+        ("urn:dx/uw", "50%", "urn:dx/uw|50%"),
+        ("urn:dx/uw", "p|q", r"urn:dx/uw|p\|q"),
+        ("urn:a|b,c", "v", r"urn:a\|b\,c|v"),
+        ("urn:dx/uw", r"c\d$e", r"urn:dx/uw|c\\d\$e"),
+    ]
+    for system, value, param in cases:
+        cond = _if_none_exist({"identifier": [{"system": system, "value": value}]}, value)
+        assert parse_qs(cond, keep_blank_values=True) == {"identifier": [param]}, cond
+    # no identifier: the condition is the plan key, escaped the same way
+    assert parse_qs(_if_none_exist({}, "a,b&c")) == {"identifier": [r"a\,b&c"]}
