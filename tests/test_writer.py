@@ -329,20 +329,28 @@ class _ConditionalStore(http.server.BaseHTTPRequestHandler):
     entry whose ``ifNoneExist`` (decoded with ``parse_qs``) names a stored
     identifier is a 200 no-op, otherwise 201 + store. ``lose_responses``
     transactions are applied and then answered with a 500, as if the
-    response were lost after the commit."""
+    response were lost after the commit. A transaction creating a key in
+    ``fail_keys_once`` is answered with a 500 and applies nothing (a
+    transaction is all-or-nothing); the key then succeeds."""
 
     store: list[str] = []
     transactions = 0
     lose_responses = 0
+    fail_keys_once: set[str] = set()
 
     @classmethod
-    def reset(cls, lose_responses=0):
+    def reset(cls, lose_responses=0, fail_keys_once=()):
         cls.store, cls.transactions, cls.lose_responses = [], 0, lose_responses
+        cls.fail_keys_once = set(fail_keys_once)
+
+    @staticmethod
+    def _key(request: dict) -> str | None:
+        cond = request.get("ifNoneExist")
+        return None if cond is None else parse_qs(cond)["identifier"][0]
 
     @classmethod
     def _apply(cls, request: dict) -> str:
-        cond = request.get("ifNoneExist")
-        key = None if cond is None else parse_qs(cond)["identifier"][0]
+        key = cls._key(request)
         if request["method"] != "POST":
             return "200 OK"
         if key is not None and key in cls.store:
@@ -355,6 +363,12 @@ class _ConditionalStore(http.server.BaseHTTPRequestHandler):
         body = json.loads(self.rfile.read(n).decode())
         assert self.path == "/" and body["type"] == "transaction"
         _ConditionalStore.transactions += 1
+        failing = {self._key(ent["request"]) for ent in body["entry"]} & _ConditionalStore.fail_keys_once
+        if failing:
+            _ConditionalStore.fail_keys_once -= failing
+            self.send_response(500)
+            self.end_headers()
+            return
         out = [{"response": {"status": self._apply(ent["request"])}} for ent in body["entry"]]
         if _ConditionalStore.lose_responses > 0:
             _ConditionalStore.lose_responses -= 1
@@ -385,6 +399,55 @@ def _inserts(spark, bodies: list[tuple[str, str]]):
         [("Condition", "insert", None, key, body) for key, body in bodies],
         "resource_type string, action string, id string, key string, body_json string",
     ).coalesce(1)
+
+
+def _colocated_keys(spark, n: int) -> list[str]:
+    """``n`` insert keys that ``group_by_patient`` places in one partition,
+    in the order that partition sends them: the torn-replay tests need the
+    committed and the failing transaction in the same task."""
+    plan = _inserts(spark, [(f"k{i}", '{"resourceType":"Condition"}') for i in range(64)])
+    by_part: dict[int, list[str]] = {}
+    for r in group_by_patient(plan).select("key", F.spark_partition_id().alias("p")).collect():
+        by_part.setdefault(r["p"], []).append(r["key"])
+    return next(keys[:n] for keys in by_part.values() if len(keys) >= n)
+
+
+def test_writer_torn_batch_retry_does_not_duplicate(spark, conditional_store):
+    """Torn-retry idempotence (SURVEY §7.4's exactly-once-ish risk): a
+    partition's first two-entry transaction commits, its second fails
+    every attempt, the task raises, and the retried task replays the whole
+    partition. Conditional create makes the replayed first transaction a
+    server-side no-op — the store converges to exactly one copy per key."""
+    keys = _colocated_keys(spark, 4)
+    _ConditionalStore.reset(fail_keys_once={keys[2]})
+    plan = _inserts(spark, [(k, '{"resourceType":"Condition"}') for k in keys])
+    cfg = WriterConfig(base_url=conditional_store, retry_sleep_s=0.01, bundle_size=2, max_retries=1)
+    # first attempt: the first transaction commits, the second rolls back
+    with pytest.raises(Exception):
+        write_action_plan(plan, cfg)
+    assert _ConditionalStore.store == keys[:2]
+    # simulated task retry replays the whole partition
+    counts = write_action_plan(plan, cfg)
+    assert counts["failed"] == 0
+    # convergence: one copy per key, no duplicates from the replay
+    assert sorted(_ConditionalStore.store) == sorted(keys)
+
+
+def test_writer_torn_per_row_retry_does_not_duplicate(spark, conditional_store):
+    """The one-row form of the torn replay: with ``bundle_size=1`` each
+    create is a transaction of its own; the partition's second one fails,
+    the task raises, and the replay re-POSTs the first, whose
+    ``ifNoneExist`` makes it a no-op."""
+    keys = _colocated_keys(spark, 3)
+    _ConditionalStore.reset(fail_keys_once={keys[1]})
+    plan = _inserts(spark, [(k, '{"resourceType":"Condition"}') for k in keys])
+    cfg = WriterConfig(base_url=conditional_store, retry_sleep_s=0.01, bundle_size=1, max_retries=1)
+    with pytest.raises(Exception):
+        write_action_plan(plan, cfg)
+    assert _ConditionalStore.store == keys[:1]
+    counts = write_action_plan(plan, cfg)
+    assert counts["failed"] == 0
+    assert sorted(_ConditionalStore.store) == sorted(keys)
 
 
 def test_writer_lost_transaction_response_does_not_duplicate(spark, conditional_store):
