@@ -31,10 +31,11 @@ from __future__ import annotations
 import json
 import time
 from dataclasses import dataclass
-from urllib.parse import quote
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from cnics_to_fhir_spark.sources.fhir import search_token
 
 # columns the writer adds to the plan: a new Patient's fullUrl, and the
 # group a row must share a transaction with
@@ -81,16 +82,6 @@ def _send(session, cfg: WriterConfig, body: str):
     raise RuntimeError(f"POST {cfg.base_url} failed after {cfg.max_retries} attempts") from last_exc
 
 
-def _token(s: str) -> str:
-    """One part of a token search value, escaped (FHIR R4
-    search.html#escaping: ``\\ | , $``) and percent-encoded: the system and
-    value come from the source DB, and an unescaped ``,`` is an OR, a ``|``
-    a new system/value split and an ``&`` a new search parameter."""
-    for c in "\\|,$":
-        s = s.replace(c, "\\" + c)
-    return quote(s, safe="")
-
-
 def _if_none_exist(resource: dict, key: str | None) -> str | None:
     """The conditional-create search for one new resource: its
     identifier[0] as ``identifier=<system>|<value>`` — so another site's
@@ -100,8 +91,8 @@ def _if_none_exist(resource: dict, key: str | None) -> str | None:
     matches exactly what the merge classified on."""
     ident = (resource.get("identifier") or [{}])[0]
     if ident.get("system") and ident.get("value"):
-        return f"identifier={_token(ident['system'])}|{_token(ident['value'])}"
-    return None if key is None else f"identifier={_token(key)}"
+        return f"identifier={search_token(ident['system'])}|{search_token(ident['value'])}"
+    return None if key is None else f"identifier={search_token(key)}"
 
 
 def _bundle_entry(row) -> dict:
@@ -176,9 +167,10 @@ def group_by_patient(plan: DataFrame) -> DataFrame:
     fullUrl and shares a group, a partition and a contiguous run of rows
     with every row whose ``subject.reference`` is that fullUrl, the Patient
     first. Any other row is a group of its own, hashed on (type, action,
-    id, key), so those rows — deletes included — spread over all
-    partitions. Within a partition rows sort on (group, Patient first,
-    type, key). One shuffle."""
+    key or else id), so those rows — deletes included — spread over all
+    partitions, each placed by what it is and not by the id the server
+    happened to assign it. Within a partition rows sort on (group, Patient
+    first, type, key). One shuffle."""
     body = F.col("body_json")
     new_patient = (F.col("resource_type") == "Patient") & (F.col("action") == "insert")
     full_url = F.when(
@@ -192,7 +184,7 @@ def group_by_patient(plan: DataFrame) -> DataFrame:
     group = F.coalesce(
         F.col(_FULL_URL),
         F.when(subject.startswith("urn:uuid:"), subject),
-        F.concat_ws("/", "resource_type", "action", "id", "key"),
+        F.concat_ws("/", "resource_type", "action", F.coalesce("key", "id")),
     )
     return (
         plan.withColumn(_FULL_URL, full_url)

@@ -2,24 +2,34 @@
 
 The reference issues one GET per patient per resource type (N+1,
 cnics_to_fhir.py:354, :543, :640, :723). The engine replaces that with bulk
-snapshot reads parsed into the FHIR_SNAPSHOT relational shape, so
-reconciliation is one join per resource type.
+snapshot reads in the FHIR_SNAPSHOT relational shape, so reconciliation is
+one join per resource type.
 
 Two paths:
 - ``snapshot_from_bundles``: parse FHIR search-set Bundle JSON documents
   (from files/exports/fixtures) — pure from_json/explode, fully columnar.
-- ``snapshot_via_http``: partition-parallel GET with pagination via
-  mapInPandas (requests gated behind import-try; the 50000-`_count`
-  no-pagination hack at cnics_to_fhir.py:215-217 becomes real paging).
+  It is also the independent reference the HTTP path is tested against.
+- ``snapshot_via_http``: partition-parallel paged GET via mapInPandas; the
+  worker maps each resource straight to the snapshot columns (the
+  50000-`_count` no-pagination hack at cnics_to_fhir.py:215-217 becomes
+  real paging).
+
+The HTTP read lives here once: ``_walk_pages`` walks one ``next``-link
+chain (FHIR R4 http.html#paging) and ``_snapshot_row`` maps one resource to
+a row. ``snapshot_via_http`` and the ``fhir_snapshot`` data source and
+stream (``sources/fhir_datasource.py``) all read through them.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from cnics_to_fhir_spark.schemas import FHIR_SNAPSHOT
 
 # Only the fields reconciliation consumes (identifier[0] + id + subject),
 # mirroring FIXTURES.md §4. Everything else in the bundle is pruned at parse.
@@ -79,14 +89,35 @@ def snapshot_from_bundles(bundles: DataFrame, json_col: str = "bundle_json") -> 
     divergence)."""
     parsed = bundles.select(F.from_json(F.col(json_col), BUNDLE_SCHEMA).alias("b"))
     entries = parsed.select(F.explode("b.entry").alias("e")).select("e.resource.*")
+    # get() is NULL past the end: ANSI getItem(0) fails on `identifier: []`
+    first = F.get(F.col("identifier"), 0)
     return entries.select(
         F.col("resourceType").alias("resource_type"),
         F.col("id"),
         F.col("subject.reference").alias("subject_ref"),
-        F.col("identifier").getItem(0).getField("system").alias("identifier_0_system"),
-        F.col("identifier").getItem(0).getField("value").alias("identifier_0_value"),
+        first.getField("system").alias("identifier_0_system"),
+        first.getField("value").alias("identifier_0_value"),
         F.col("identifier").isNotNull().alias("has_identifier"),
     )
+
+
+# ``_snapshot_row``'s columns: FHIR_SNAPSHOT's, all nullable (a searchset
+# entry may lack any of them), then meta.lastUpdated — which the data source
+# keeps as its streaming cursor and ``snapshot_via_http`` drops.
+SNAPSHOT_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType) for f in FHIR_SNAPSHOT]
+    + [T.StructField("last_updated", T.StringType())]
+)
+
+
+def search_token(s: str) -> str:
+    """One part of a token search value, escaped (FHIR R4
+    search.html#escaping: ``\\ | , $``) and percent-encoded: an unescaped
+    ``,`` is an OR, a ``|`` a new system/value split and an ``&`` a new
+    search parameter."""
+    for c in "\\|,$":
+        s = s.replace(c, "\\" + c)
+    return quote(s, safe="")
 
 
 def lastupdated_shards(boundaries: list[str]) -> list[str]:
@@ -108,10 +139,71 @@ def lastupdated_shards(boundaries: list[str]) -> list[str]:
     return shards
 
 
-def site_shards(sites: list[str], system: str) -> list[str]:
-    """One identifier-system shard per site — the reference's per-site
-    databases (cnics_to_fhir.py:85-104) become disjoint search shards."""
-    return [f"identifier={system}%7C{site}*" for site in sites]
+def site_shards(sites: list[str], system_base: str) -> list[str]:
+    """One shard per site — the reference's per-site databases
+    (cnics_to_fhir.py:85-104) become disjoint searches. The site is the
+    tail of the identifier SYSTEM (``assembly.resources.site_patient_system``),
+    so each shard is the ``[system]|`` token form, which matches any value
+    in that system (FHIR R4 search.html#token)."""
+    return [f"identifier={search_token(system_base + site.lower())}|" for site in sites]
+
+
+def search_url(base_url: str, resource_type: str, page_size: int) -> str:
+    """The first page of a JSON search over one resource type."""
+    return f"{base_url.rstrip('/')}/{resource_type}?_format=json&_count={page_size}"
+
+
+def _walk_pages(url: str, headers: dict[str, str] | None, max_pages: int) -> Iterator[dict]:
+    """Yield each searchset Bundle of the ``next``-link chain that starts at
+    ``url``, over one ``requests.Session``. Raises when it stops at
+    ``max_pages`` with a ``next`` link still pending: a truncated snapshot
+    would read as resources missing from the store."""
+    try:
+        import requests
+    except ImportError as e:  # pragma: no cover
+        raise NotImplementedError(
+            "the FHIR snapshot read needs the 'requests' package on executors; "
+            "use snapshot_from_bundles over an exported bundle instead"
+        ) from e
+
+    with requests.Session() as session:
+        if headers:
+            session.headers.update(headers)
+        for _ in range(max_pages):
+            resp = session.get(url)
+            resp.raise_for_status()
+            bundle = resp.json()
+            yield bundle
+            url = next(
+                (l.get("url") for l in bundle.get("link") or [] if l.get("relation") == "next"),
+                None,
+            )
+            if not url:
+                return
+    raise RuntimeError(f"stopped after max_pages={max_pages} pages with a next link pending: {url}")
+
+
+def _snapshot_row(resource: dict) -> tuple:
+    """One resource → the FHIR_SNAPSHOT columns plus ``meta.lastUpdated``,
+    with the same identifier[0] quirk parity as ``snapshot_from_bundles``."""
+    ident = resource.get("identifier")
+    first = (ident[0] if ident else None) or {}
+    return (
+        resource.get("resourceType"),
+        resource.get("id"),
+        (resource.get("subject") or {}).get("reference"),
+        first.get("system"),
+        first.get("value"),
+        ident is not None,
+        (resource.get("meta") or {}).get("lastUpdated"),
+    )
+
+
+def _snapshot_rows(url: str, headers: dict[str, str] | None, max_pages: int) -> Iterator[tuple]:
+    """Every searchset entry of one page chain as a ``_snapshot_row``."""
+    for bundle in _walk_pages(url, headers, max_pages):
+        for entry in bundle.get("entry") or []:
+            yield _snapshot_row((entry or {}).get("resource") or {})
 
 
 def snapshot_via_http(
@@ -122,7 +214,6 @@ def snapshot_via_http(
     headers: dict[str, str] | None = None,
     max_pages: int = 10_000,
     shards: list[str] | None = None,
-    trace_tasks: bool = False,
 ) -> DataFrame:
     """Partition-parallel paged GET → FHIR_SNAPSHOT. Requires ``requests``
     at runtime on executors; import is deferred so environments without it
@@ -136,7 +227,7 @@ def snapshot_via_http(
     (the ``_count=50000`` no-pagination hack, cnics_to_fhir.py:215-217).
     Without shards, one seed → one chain (correct but driver-shaped; fine
     for small stores only)."""
-    base = f"{base_url}/{resource_type}?_format=json&_count={page_size}"
+    base = search_url(base_url, resource_type, page_size)
     urls = [f"{base}&{s}" for s in shards] if shards else [base]
     # one task per shard: each walks its own next-chain in parallel. A
     # one-row-per-partition range picks its URL in the JVM, so seeding runs
@@ -144,45 +235,13 @@ def snapshot_via_http(
     seed = spark.range(0, len(urls), 1, len(urls)).select(
         F.element_at(F.array(*map(F.lit, urls)), F.col("id").cast("int") + 1).alias("url")
     )
+    columns = SNAPSHOT_SCHEMA.fieldNames()
 
     def fetch(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        try:
-            import requests
-        except ImportError as e:  # pragma: no cover
-            raise NotImplementedError(
-                "snapshot_via_http needs the 'requests' package on executors; "
-                "use snapshot_from_bundles over an exported bundle instead"
-            ) from e
-
-        from pyspark import TaskContext
-
-        session = requests.Session()
-        if headers:
-            session.headers.update(headers)
-        # opt-in debug header tracing which task fetched each chain (the
-        # test suite uses it to prove shard-parallelism); OFF by default so
-        # production fetches send nothing nonstandard to real servers
-        if trace_tasks:
-            tc = TaskContext.get()
-            if tc is not None:
-                session.headers["X-Task-Partition"] = str(tc.partitionId())
         for pdf in batches:
-            out = []
-            for url in pdf["url"]:
-                next_url, pages = url, 0
-                while next_url and pages < max_pages:
-                    resp = session.get(next_url)
-                    resp.raise_for_status()
-                    bundle = resp.json()
-                    out.append(__import__("json").dumps(bundle))
-                    pages += 1
-                    next_url = next(
-                        (l.get("url") for l in bundle.get("link", []) if l.get("relation") == "next"),
-                        None,
-                    )
-            yield pd.DataFrame({"bundle_json": out})
+            rows = [row for url in pdf["url"] for row in _snapshot_rows(url, headers, max_pages)]
+            yield pd.DataFrame.from_records(rows, columns=columns)
 
-    bundles = seed.mapInPandas(fetch, schema="bundle_json string")
-    return snapshot_from_bundles(bundles)
+    return seed.mapInPandas(fetch, schema=SNAPSHOT_SCHEMA).drop("last_updated")

@@ -2,27 +2,28 @@
 work ("a DataSourceV2 FHIR connector with filter pushdown"), built on
 PySpark 4's Python Data Source API instead of a JVM DSv2 shim.
 
-``spark.read.format("fhir_snapshot")`` returns the same FHIR_SNAPSHOT
-relational shape as :func:`cnics_to_fhir_spark.sources.fhir.snapshot_from_bundles`
-(same columns, same identifier[0] quirk parity), with two scale levers the
-mapInPandas path exposes only by hand:
+``spark.read.format("fhir_snapshot")`` returns the rows of
+:func:`cnics_to_fhir_spark.sources.fhir.snapshot_via_http` plus
+``meta.lastUpdated``: both read through ``sources.fhir``'s one page walk and
+one resource→row mapping. Two scale levers on top:
 
 - **Partition planning**: the ``shards`` option (comma-separated FHIR
   search fragments, built with ``lastupdated_shards``/``site_shards``)
   becomes one InputPartition per shard — Spark schedules each shard's
   ``next``-link page chain as its own task, so a 1000-executor cluster
   walks 1000 chains concurrently.
-- **Filter pushdown**: with ``spark.sql.python.filterPushdown.enabled``,
-  equality predicates on ``subject_ref`` / ``identifier_0_value`` / ``id``
-  translate into FHIR search parameters (``subject=`` / ``identifier=`` /
-  ``_id=``) and are REMOVED from Spark's residual — the server sends only
-  matching resources, which at reconciliation scale turns "download the
-  store" into "download the delta".  Every other filter is returned to
-  Spark untouched and still applied engine-side, so an untranslatable
-  predicate degrades to correct-but-unpruned.  Spark refuses (loudly) to
-  plan a pushFilters-bearing reader while the conf is off — environments
-  that keep it off opt out with ``option("pushdown", "false")``, which
-  selects a reader variant with no pushFilters at all.
+- **Filter pushdown (prune and recheck)**: with
+  ``spark.sql.python.filterPushdown.enabled``, equality predicates on
+  ``subject_ref`` / ``identifier_0_value`` / ``id`` become escaped FHIR
+  search parameters (``subject=`` / ``identifier=`` / ``_id=``), so the
+  server sends only candidate resources. FHIR's ``identifier=v`` matches
+  ANY identifier of a resource, not just identifier[0], so every filter —
+  pushed or not — is also yielded back to Spark and applied after
+  transfer: a pushed parameter only prunes what is transferred, never
+  decides the result. Spark refuses (loudly) to plan a
+  pushFilters-bearing reader while the conf is off — environments that
+  keep it off opt out with ``option("pushdown", "false")``, which selects
+  a reader variant with no pushFilters at all.
 
 The reference's shape this replaces: one GET per patient per resource type
 (cnics_to_fhir.py:354, :543, :640, :723) under a ``_count=50000``
@@ -42,14 +43,11 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-# One schema serves spark.read AND spark.readStream (a DataSource has a
-# single schema()): the batch columns of snapshot_from_bundles plus
-# meta.lastUpdated — in batch it seeds lastupdated_shards / a resume
-# cursor; in streaming it IS the offset.
-SNAPSHOT_DDL = (
-    "resource_type string, id string, subject_ref string, "
-    "identifier_0_system string, identifier_0_value string, "
-    "has_identifier boolean, last_updated string"
+from cnics_to_fhir_spark.sources.fhir import (
+    SNAPSHOT_SCHEMA,
+    _snapshot_rows,
+    search_token,
+    search_url,
 )
 
 # snapshot column -> FHIR search parameter (equality pushdown map)
@@ -58,6 +56,18 @@ _PUSHABLE = {
     ("identifier_0_value",): "identifier",
     ("id",): "_id",
 }
+
+
+def _search_options(options, what: str) -> tuple[str, int]:
+    """(first-page search URL, max pages) from the ``url``,
+    ``resourceType``, ``pageSize`` and ``maxPages`` options."""
+    url = options.get("url")
+    if not url:
+        raise ValueError(f"{what} requires the 'url' option (store base URL)")
+    search = search_url(
+        url, options.get("resourcetype", "Condition"), int(options.get("pagesize", "1000"))
+    )
+    return search, int(options.get("maxpages", "10000"))
 
 
 class _Shard(InputPartition):
@@ -74,63 +84,18 @@ class PlainFhirSnapshotReader(DataSourceReader):
     after transfer."""
 
     def __init__(self, options):
-        url = options.get("url")
-        if not url:
-            raise ValueError("fhir_snapshot requires the 'url' option (store base URL)")
-        self.base_url = url.rstrip("/")
-        self.resource_type = options.get("resourcetype", "Condition")
-        self.page_size = int(options.get("pagesize", "1000"))
-        self.max_pages = int(options.get("maxpages", "10000"))
+        self.search, self.max_pages = _search_options(options, "fhir_snapshot")
         self.shards = [s for s in (options.get("shards") or "").split(",") if s]
         self.pushed: list[str] = []
 
     def partitions(self):
-        base = (
-            f"{self.base_url}/{self.resource_type}"
-            f"?_format=json&_count={self.page_size}"
-        )
         extra = "".join(f"&{p}" for p in self.pushed)
         if self.shards:
-            return [_Shard(f"{base}&{s}{extra}") for s in self.shards]
-        return [_Shard(base + extra)]
+            return [_Shard(f"{self.search}&{s}{extra}") for s in self.shards]
+        return [_Shard(self.search + extra)]
 
     def read(self, partition: _Shard):
-        try:
-            import requests
-        except ImportError as e:  # pragma: no cover
-            raise NotImplementedError(
-                "fhir_snapshot needs the 'requests' package on executors; "
-                "use sources.fhir.snapshot_from_bundles over an export instead"
-            ) from e
-
-        session = requests.Session()
-        next_url, pages = partition.url, 0
-        while next_url and pages < self.max_pages:
-            resp = session.get(next_url)
-            resp.raise_for_status()
-            bundle = resp.json()
-            for entry in bundle.get("entry") or []:
-                r = entry.get("resource") or {}
-                ident = r.get("identifier")
-                first = ident[0] if ident else {}
-                yield (
-                    r.get("resourceType"),
-                    r.get("id"),
-                    (r.get("subject") or {}).get("reference"),
-                    first.get("system"),
-                    first.get("value"),
-                    ident is not None,
-                    (r.get("meta") or {}).get("lastUpdated"),
-                )
-            pages += 1
-            next_url = next(
-                (
-                    link.get("url")
-                    for link in bundle.get("link") or []
-                    if link.get("relation") == "next"
-                ),
-                None,
-            )
+        return _snapshot_rows(partition.url, None, self.max_pages)
 
 
 class FhirSnapshotReader(PlainFhirSnapshotReader):
@@ -139,21 +104,19 @@ class FhirSnapshotReader(PlainFhirSnapshotReader):
     pushFilters-bearing reader otherwise — by design, loudly)."""
 
     def pushFilters(self, filters: Sequence[Filter]) -> Iterator[Filter]:
-        """Accept equality filters on the _PUSHABLE columns as FHIR search
-        params; yield everything else back for Spark to evaluate.  A yielded
-        filter costs transfer, never correctness."""
+        """Send equality filters on the _PUSHABLE columns as escaped FHIR
+        search params, and yield EVERY filter back for Spark to evaluate:
+        a token search matches any identifier of a resource, so a pushed
+        param prunes the transfer but cannot decide the rows."""
         for f in filters:
             if (
                 isinstance(f, EqualTo)
                 and tuple(f.attribute) in _PUSHABLE
                 and isinstance(f.value, str)
             ):
-                from urllib.parse import quote
-
                 param = _PUSHABLE[tuple(f.attribute)]
-                self.pushed.append(f"{param}={quote(f.value, safe='')}")
-            else:
-                yield f
+                self.pushed.append(f"{param}={search_token(f.value)}")
+            yield f
 
 
 class FhirSnapshotDataSource(DataSource):
@@ -161,8 +124,8 @@ class FhirSnapshotDataSource(DataSource):
     def name(cls) -> str:
         return "fhir_snapshot"
 
-    def schema(self) -> str:
-        return SNAPSHOT_DDL
+    def schema(self):
+        return SNAPSHOT_SCHEMA
 
     def reader(self, schema) -> PlainFhirSnapshotReader:
         if (self.options.get("pushdown") or "true").lower() == "false":
@@ -191,68 +154,23 @@ class FhirUpdatesStreamReader(SimpleDataSourceStreamReader):
     source of truth for the replay, which is exactly how a _lastUpdated
     cursor is meant to be used.  SimpleDataSourceStreamReader fetches on
     the DRIVER: right for delta-sized polls (the backfill path is the
-    sharded batch reader above).  Known cursor hazard, documented not
-    hidden: a resource committed server-side with a lastUpdated equal to
-    an already-advanced cursor is skipped (the strict-gt boundary); real
-    deployments poll with a lag watermark (the ``since`` option) behind
-    the server clock, the same discipline as any timestamp-cursor CDC."""
+    sharded batch reader above).  A poll that would need more than
+    ``maxPages`` pages fails rather than advance the cursor past what it
+    never read.  Known cursor hazard, documented not hidden: a resource
+    committed server-side with a lastUpdated equal to an already-advanced
+    cursor is skipped (the strict-gt boundary); real deployments poll with
+    a lag watermark (the ``since`` option) behind the server clock, the
+    same discipline as any timestamp-cursor CDC."""
 
     def __init__(self, options):
-        url = options.get("url")
-        if not url:
-            raise ValueError("fhir_snapshot stream requires the 'url' option")
-        self.base_url = url.rstrip("/")
-        self.resource_type = options.get("resourcetype", "Condition")
-        self.page_size = int(options.get("pagesize", "1000"))
-        self.max_pages = int(options.get("maxpages", "10000"))
+        self.search, self.max_pages = _search_options(options, "fhir_snapshot stream")
         self.since = options.get("since", "1970-01-01T00:00:00Z")
 
     def initialOffset(self) -> dict:
         return {"last_updated": self.since}
 
     def _fetch(self, fragment: str) -> list[tuple]:
-        try:
-            import requests
-        except ImportError as e:  # pragma: no cover
-            raise NotImplementedError(
-                "fhir_snapshot streaming needs the 'requests' package"
-            ) from e
-
-        session = requests.Session()
-        next_url = (
-            f"{self.base_url}/{self.resource_type}"
-            f"?_format=json&_count={self.page_size}&{fragment}"
-        )
-        rows, pages = [], 0
-        while next_url and pages < self.max_pages:
-            resp = session.get(next_url)
-            resp.raise_for_status()
-            bundle = resp.json()
-            for entry in bundle.get("entry") or []:
-                r = entry.get("resource") or {}
-                ident = r.get("identifier")
-                first = ident[0] if ident else {}
-                rows.append(
-                    (
-                        r.get("resourceType"),
-                        r.get("id"),
-                        (r.get("subject") or {}).get("reference"),
-                        first.get("system"),
-                        first.get("value"),
-                        ident is not None,
-                        (r.get("meta") or {}).get("lastUpdated"),
-                    )
-                )
-            pages += 1
-            next_url = next(
-                (
-                    link.get("url")
-                    for link in bundle.get("link") or []
-                    if link.get("relation") == "next"
-                ),
-                None,
-            )
-        return rows
+        return list(_snapshot_rows(f"{self.search}&{fragment}", None, self.max_pages))
 
     def read(self, start: dict):
         rows = self._fetch(f"_lastUpdated=gt{start['last_updated']}")

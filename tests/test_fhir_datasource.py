@@ -31,21 +31,41 @@ DATASET = [
 ]
 
 
+def _token_values(param: str) -> list[str]:
+    """A FHIR search parameter's OR alternatives: an unescaped ``,``
+    separates them, and ``\\`` escapes the next character
+    (search.html#escaping)."""
+    alts, cur, chars = [], "", iter(param)
+    for c in chars:
+        if c == "\\":
+            cur += next(chars, "")
+        elif c == ",":
+            alts.append(cur)
+            cur = ""
+        else:
+            cur += c
+    return alts + [cur]
+
+
 class _FilteringHandler(http.server.BaseHTTPRequestHandler):
     base_url: str = ""
+    dataset: list[dict] = DATASET
     requests_seen: list[str] = []
     entries_served: int = 0
 
     def do_GET(self):
         q = parse_qs(urlparse(self.path).query)
         _FilteringHandler.requests_seen.append(self.path)
-        rows = DATASET
+        rows = _FilteringHandler.dataset
         if "site" in q:
             rows = [r for r in rows if r["_site"] == q["site"][0]]
         if "subject" in q:
-            rows = [r for r in rows if r["subject"]["reference"] == q["subject"][0]]
+            refs = _token_values(q["subject"][0])
+            rows = [r for r in rows if r["subject"]["reference"] in refs]
         if "identifier" in q:
-            rows = [r for r in rows if r["identifier"][0]["value"] == q["identifier"][0]]
+            # a token search matches ANY identifier of the resource
+            values = _token_values(q["identifier"][0])
+            rows = [r for r in rows if any(i["value"] in values for i in r["identifier"])]
         count = int(q.get("_count", ["5"])[0])
         offset = int(q.get("_offset", ["0"])[0])
         page = rows[offset : offset + count]
@@ -81,6 +101,7 @@ def mock_store():
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _FilteringHandler)
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     _FilteringHandler.base_url = base
+    _FilteringHandler.dataset = DATASET
     _FilteringHandler.requests_seen = []
     _FilteringHandler.entries_served = 0
     t = threading.Thread(target=srv.serve_forever, daemon=True)
@@ -173,3 +194,26 @@ def test_pushdown_composes_with_shards(spark, mock_store, fhir_format):
     assert [r["id"] for r in out] == ["c4"]
     both = [p for p in _FilteringHandler.requests_seen if "subject=" in p and "site=" in p]
     assert len(both) >= 2  # every shard pushed the param
+
+
+def test_pushed_identifier_only_prunes(spark, mock_store, fhir_format):
+    """FHIR ``identifier=v`` matches ANY identifier of a resource, and an
+    unescaped ``,`` is an OR: the pushed search is escaped and only prunes
+    the transfer, while Spark still decides which rows match identifier[0]."""
+    _FilteringHandler.dataset = DATASET + [
+        {"resourceType": "Condition", "id": "x1", "subject": {"reference": "Patient/x1"},
+         "identifier": [{"system": "urn:cnics", "value": "x-1"},
+                        {"system": "urn:other", "value": "a-3"}],
+         "_site": "a"},
+        {"resourceType": "Condition", "id": "x2", "subject": {"reference": "Patient/x2"},
+         "identifier": [{"system": "urn:cnics", "value": "a-5,a-7"}],
+         "_site": "b"},
+    ]
+    out = _read(spark, mock_store).filter(F.col("identifier_0_value") == "a-3").collect()
+    assert [r["id"] for r in out] == ["c3"]
+    assert _FilteringHandler.entries_served == 2  # c3 and x1: pruned, then rechecked
+    _FilteringHandler.entries_served = 0
+    out = _read(spark, mock_store).filter(F.col("identifier_0_value") == "a-5,a-7").collect()
+    assert [r["id"] for r in out] == ["x2"]
+    assert any("identifier=a-5%5C%2Ca-7" in p for p in _FilteringHandler.requests_seen)
+    assert _FilteringHandler.entries_served == 1

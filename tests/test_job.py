@@ -27,6 +27,7 @@ from cnics_to_fhir_spark.schemas import (
     PRO_PATIENTS,
     PRO_SESSIONS,
 )
+from cnics_to_fhir_spark.sources.fhir import _snapshot_row
 
 JOB_INI = """
 [JobList]
@@ -211,22 +212,12 @@ def test_run_job_write_readback_converges(spark, caplog):
     def snapshot_from_store():
         """Re-read the store into the FHIR_SNAPSHOT shape (the bulk-scan
         S5 path's output, parsed from the stored resource bodies)."""
-        rows = []
         with lock:
             items = list(store.items())
-        for (rtype, rid), body in items:
-            res = jsonmod.loads(body)
-            ident = res.get("identifier") or []
-            rows.append(
-                (
-                    rtype,
-                    rid,
-                    (res.get("subject") or {}).get("reference"),
-                    ident[0]["system"] if ident else None,
-                    ident[0]["value"] if ident else None,
-                    bool(ident),
-                )
-            )
+        rows = [
+            _snapshot_row({**jsonmod.loads(body), "id": rid})[: len(FHIR_SNAPSHOT.fields)]
+            for (_, rid), body in items
+        ]
         return spark.createDataFrame(rows, FHIR_SNAPSHOT)
 
     settings = parse_settings(SETTINGS_INI)

@@ -241,6 +241,28 @@ def test_group_by_patient_spreads_unrelated_rows(spark):
     assert parts.distinct().count() > 1
 
 
+def test_group_by_patient_places_rows_by_key_not_server_id(spark):
+    """Update and delete rows are placed by (type, action, key), not by the
+    id the server happened to assign: the same plan with its server ids
+    permuted lands every key in the same partition, so the Bundle cuts are
+    a function of the inputs."""
+    def placement(ids):
+        rows = [
+            ("Condition", "update", sid, f"k{i}", '{"resourceType":"Condition"}')
+            if i % 2 else ("Condition", "delete", sid, f"k{i}", None)
+            for i, sid in enumerate(ids)
+        ]
+        plan = spark.createDataFrame(
+            rows, "resource_type string, action string, id string, key string, body_json string"
+        )
+        laid_out = group_by_patient(plan).select("key", F.spark_partition_id().alias("p"))
+        return {r["key"]: r["p"] for r in laid_out.collect()}
+
+    ids = [f"srv-{i}" for i in range(16)]
+    permuted = ids[5:] + ids[:5]
+    assert placement(ids) == placement(permuted)
+
+
 def test_writer_bundle_per_entry_failure_fails_task(spark, bundle_server):
     """A 200 envelope with one failed entry inside must raise and count the
     failure — never silently drop a write."""
