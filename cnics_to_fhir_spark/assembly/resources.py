@@ -2,10 +2,11 @@
 
 Each builder returns one struct Column; ``F.to_json`` (ignoreNullFields=true,
 the default) serializes it with every NULL field dropped — which is exactly
-how the reference handles conditional keys (``id`` only on update,
-``recordedDate`` only when the date exists, exactly one ``value[x]`` variant,
-extensions only when mapped: cnics_to_fhir.py:367-527, :586-625, :681-708,
-:766-893).
+how the reference handles conditional keys (``recordedDate`` only when the
+date exists, exactly one ``value[x]`` variant, extensions only when mapped:
+cnics_to_fhir.py:367-527, :586-625, :681-708, :766-893). A body carries no
+``id``: the writer sets it on each update, from the server id the MERGE
+matched (load/http_writer.py), as the reference does on its PUTs.
 
 Key order inside objects follows struct field order and may differ from the
 reference's dict-insertion order; JSON object semantics are order-free and
@@ -120,7 +121,6 @@ def patient_resource(
     race: Column,
     hispanic: Column,
     sex: Column,
-    server_id: Column | None = None,
 ) -> Column:
     """B1 — Patient (cnics_to_fhir.py:367-527).
 
@@ -181,7 +181,6 @@ def patient_resource(
 
     fields = [
         F.lit("Patient").alias("resourceType"),
-        (server_id if server_id is not None else F.lit(None).cast("string")).alias("id"),
         _meta("us-core-patient"),
         F.struct(
             F.lit("generated").alias("status"), F.lit(NARRATIVE_DIV).alias("div")
@@ -201,13 +200,11 @@ def condition_resource(
     diagnosis_date: Column,
     site_record_id: Column,
     in_standard: Column,
-    server_id: Column | None = None,
 ) -> Column:
     """B2 — Condition (cnics_to_fhir.py:586-625)."""
     category_code = coding.dx_category(diagnosis_type)
     return F.struct(
         F.lit("Condition").alias("resourceType"),
-        (server_id if server_id is not None else F.lit(None).cast("string")).alias("id"),
         _meta("us-core-condition"),
         F.struct(
             F.array(
@@ -254,12 +251,10 @@ def medication_request_resource(
     end_date: Column,
     end_type: Column,
     site_record_id: Column,
-    server_id: Column | None = None,
 ) -> Column:
     """B3 — MedicationRequest (cnics_to_fhir.py:681-708)."""
     return F.struct(
         F.lit("MedicationRequest").alias("resourceType"),
-        (server_id if server_id is not None else F.lit(None).cast("string")).alias("id"),
         _meta("us-core-medicationrequest"),
         F.lit("order").alias("intent"),
         medications.med_status(start_date, end_date, end_type).alias("status"),
@@ -356,7 +351,6 @@ def observation_resource(
     ref_range_low: Column,
     ref_range_high: Column,
     site_record_id: Column,
-    server_id: Column | None = None,
 ) -> Column:
     """B4 — Observation with variant value[x] (cnics_to_fhir.py:766-893).
 
@@ -372,7 +366,6 @@ def observation_resource(
     rng_low, rng_high = v["value_range_low"], v["value_range_high"]
     return F.struct(
         F.lit("Observation").alias("resourceType"),
-        (server_id if server_id is not None else F.lit(None).cast("string")).alias("id"),
         _meta("us-core-observation-lab"),
         F.lit("final").alias("status"),
         F.array(

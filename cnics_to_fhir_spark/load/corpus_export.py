@@ -24,6 +24,12 @@ Design:
   leaves data files without a manifest — an incomplete export is
   DETECTABLY incomplete, never silently short.
 
+- One verifier: ``verify_shards`` re-reads a list of shard directories
+  and recomputes their stats grouped by the PHYSICAL shard column.
+  ``verify_export`` (every shard, plus no data outside the manifest),
+  ``load_shard`` (one shard) and ``stream_verified_shards`` (each
+  micro-batch's announced shards) all call it.
+
 Scale shape: one corpus shuffle on the shard id, one map-side-combinable
 keyed aggregation for the manifest; verification re-reads the export
 with the same aggregation.  The manifest is O(shards) driver metadata.
@@ -182,23 +188,11 @@ def _row_hash(key_col: str, content_cols: list[str]) -> Column:
 
 
 def _shard_stats(
-    df: DataFrame,
-    key_col: str,
-    content_cols: list[str],
-    n_shards: int,
-    use_physical_shard: bool = False,
+    df: DataFrame, shard: Column, key_col: str, content_cols: list[str]
 ) -> DataFrame:
-    from cnics_to_fhir_spark.operators.dedup import portable_hash
-
-    # verification groups by the PHYSICAL shard column read from the
-    # directory layout — a row misfiled into the wrong shard dir then
-    # shows up as TWO mismatched shards instead of silently re-bucketing
-    # to where it should have been
-    shard = (
-        F.col("shard").cast("int")
-        if use_physical_shard
-        else (portable_hash(F.col(key_col).cast("string")) % n_shards).cast("int")
-    )
+    """Per-shard row count and checksum, grouped by the ``shard`` Column:
+    the key hash on the input side, the physical ``shard`` directory
+    column when verifying files."""
     return (
         df.select(
             shard.alias("shard"),
@@ -215,13 +209,18 @@ def _shard_stats(
     )
 
 
+def _has_data(shard_dir: str) -> bool:
+    return os.path.isdir(shard_dir) and any(
+        not f.startswith((".", "_")) for f in os.listdir(shard_dir)
+    )
+
+
 def export_shards(
     df: DataFrame,
     path: str,
     n_shards: int,
     key_col: str = "doc_id",
     content_cols: list[str] | None = None,
-    persisted: bool = False,
 ) -> dict:
     """Write ``df`` as ``n_shards`` deterministic parquet shards under
     ``path`` plus the verification manifest.  Returns the manifest.
@@ -231,9 +230,7 @@ def export_shards(
     bug must fail ``verify_export``, and a nondeterministic upstream can't
     make the manifest describe data the write didn't see), so it is
     materialized once with an eager ``localCheckpoint`` up front: the
-    upstream DAG executes exactly once, both passes read frozen rows.
-    Callers that already persisted/checkpointed ``df`` pass
-    ``persisted=True`` to skip the second materialization."""
+    upstream DAG executes exactly once, both passes read frozen rows."""
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
     if os.path.exists(os.path.join(path, MANIFEST_FILE)):
@@ -241,8 +238,7 @@ def export_shards(
     content_cols = content_cols or [
         c for c in df.columns if c != key_col
     ]
-    if not persisted:
-        df = df.localCheckpoint(eager=True)
+    df = df.localCheckpoint(eager=True)
     from cnics_to_fhir_spark.operators.dedup import portable_hash
 
     shard = (portable_hash(F.col(key_col).cast("string")) % n_shards).cast("int")
@@ -265,7 +261,7 @@ def export_shards(
     def _stats():
         return {
             r["shard"]: {"n_rows": r["n_rows"], "checksum": r["checksum"]}
-            for r in _shard_stats(df, key_col, content_cols, n_shards).collect()
+            for r in _shard_stats(df, shard, key_col, content_cols).collect()
         }
 
     _, stats = overlap(df.sparkSession, _write, _stats)
@@ -296,34 +292,27 @@ def export_shards(
 
 
 def verify_export(spark: SparkSession, path: str) -> dict:
-    """Re-read the export and recompute every shard's row count and
-    checksum against the manifest; raises on ANY mismatch (missing
-    shard, truncated shard, drifted content, extra rows).  Returns the
-    verified manifest — consumers call this before training."""
+    """Verify EVERY shard of the export against the manifest
+    (``verify_shards`` over the manifest's shard list), after checking
+    that no ``shard=*`` directory missing from the manifest holds data;
+    raises on ANY mismatch (missing shard, truncated shard, drifted
+    content, extra rows, unexpected shard).  Returns the verified
+    manifest — consumers call this before training."""
     with open(os.path.join(path, MANIFEST_FILE)) as f:
         manifest = json.load(f)
-    df = spark.read.parquet(path)
-    got = {
-        r["shard"]: {"n_rows": r["n_rows"], "checksum": r["checksum"]}
-        for r in _shard_stats(
-            df,
-            manifest["key_col"],
-            manifest["content_cols"],
-            manifest["n_shards"],
-            use_physical_shard=True,
-        ).collect()
-    }
-    want = {int(k): v for k, v in manifest["shards"].items()}
-    if got != want:
-        missing = sorted(set(want) - set(got))
-        extra = sorted(set(got) - set(want))
-        wrong = sorted(
-            k for k in set(got) & set(want) if got[k] != want[k]
-        )
+    unexpected = sorted(
+        int(d[len("shard="):])
+        for d in os.listdir(path)
+        if d.startswith("shard=")
+        and d[len("shard="):] not in manifest["shards"]
+        and _has_data(os.path.join(path, d))
+    )
+    if unexpected:
         raise ValueError(
-            f"export at {path} failed verification: missing shards {missing},"
-            f" unexpected shards {extra}, mismatched shards {wrong}"
+            f"unexpected shards {unexpected} at {path} failed verification: "
+            "shard directory holds data but is not in the manifest"
         )
+    verify_shards(spark, path, [int(k) for k in manifest["shards"]], manifest)
     return manifest
 
 
@@ -336,13 +325,19 @@ def verify_shards(
 ) -> dict[int, dict]:
     """Verify a LIST of shards against the manifest in
     ``ceil(n / max_shards_per_scan)`` pruned multi-shard scans with ONE
-    shard-keyed aggregation each — the batch path ``stream_verified_shards``
-    uses, so verifying a 10⁴-shard announcement costs ~10⁴/64 Spark jobs,
-    not 10⁴ driver-serialized ones.  Raises ``ValueError`` on ANY unknown
-    shard id, missing/empty shard directory, or count/checksum drift —
-    naming EVERY offending shard, not just the first.  Returns
-    ``{shard: {n_rows, checksum}}`` recomputed FROM THE FILES READ (not
-    echoed from the manifest).
+    shard-keyed aggregation each — the one verifier behind
+    ``verify_export``, ``load_shard`` and ``stream_verified_shards``, so
+    verifying a 10⁴-shard announcement costs ~10⁴/64 Spark jobs, not 10⁴
+    driver-serialized ones.  Raises ``ValueError`` on ANY unknown shard
+    id, missing/empty shard directory, or count/checksum drift — naming
+    EVERY offending shard, not just the first.  Returns ``{shard:
+    {n_rows, checksum}}`` recomputed FROM THE FILES READ (not echoed from
+    the manifest).
+
+    The stats group by the PHYSICAL shard column read from the directory
+    layout — a row misfiled into the wrong shard dir then shows up as TWO
+    mismatched shards instead of silently re-bucketing to where it should
+    have been.
 
     ``max_shards_per_scan`` bounds the size of each verification job (and
     its collected stats) regardless of how many shards were announced at
@@ -360,15 +355,7 @@ def verify_shards(
             f"shards {unknown} are not in the manifest at {path} "
             f"(known: {sorted(int(k) for k in manifest['shards'])})"
         )
-    missing = [
-        s
-        for s in ids
-        if not os.path.isdir(os.path.join(path, f"shard={s}"))
-        or not any(
-            not f.startswith((".", "_"))
-            for f in os.listdir(os.path.join(path, f"shard={s}"))
-        )
-    ]
+    missing = [s for s in ids if not _has_data(os.path.join(path, f"shard={s}"))]
     if missing:
         # manifest entries whose files are gone are a truncated artifact —
         # the same failure class as a short shard, reported the same way
@@ -382,24 +369,21 @@ def verify_shards(
         df = spark.read.option("basePath", path).parquet(
             *[os.path.join(path, f"shard={s}") for s in chunk]
         )
+        stats = _shard_stats(
+            df, F.col("shard").cast("int"), manifest["key_col"], manifest["content_cols"]
+        )
         got.update(
             {
                 int(r["shard"]): {"n_rows": r["n_rows"], "checksum": r["checksum"]}
-                for r in _shard_stats(
-                    df,
-                    manifest["key_col"],
-                    manifest["content_cols"],
-                    manifest["n_shards"],
-                    use_physical_shard=True,
-                ).collect()
+                for r in stats.collect()
             }
         )
     want = {s: manifest["shards"][str(s)] for s in ids}
     if got != want:
         wrong = sorted(s for s in ids if got.get(s) != want[s])
         raise ValueError(
-            f"shards {wrong} at {path} failed verification: expected "
-            f"{ {s: want[s] for s in wrong} }, read "
+            f"mismatched shards {wrong} at {path} failed verification: "
+            f"expected { {s: want[s] for s in wrong} }, read "
             f"{ {s: got.get(s) for s in wrong} }"
         )
     return got
@@ -409,51 +393,20 @@ def load_shard(spark: SparkSession, path: str, shard: int) -> DataFrame:
     """Read ONE shard of an export, verifying its row count and checksum
     against the manifest before returning — the CONSUMER half of the
     export contract for streaming loaders: a training job that opens
-    shards one at a time verifies shard ``k`` as it loads it, paying one
-    shard-sized verification pass instead of ``verify_export``'s
-    all-or-nothing sweep over the whole artifact.  Raises on an unknown
-    shard id, a missing shard directory, a truncated shard, or drifted
-    content; returns the shard's rows (with the physical ``shard``
-    column).
+    shards one at a time verifies shard ``k`` as it loads it
+    (``verify_shards`` over ``[k]``), paying one shard-sized verification
+    pass instead of ``verify_export``'s all-or-nothing sweep over the
+    whole artifact.  Raises on an unknown shard id, a missing shard
+    directory, a truncated shard, or drifted content; returns the shard's
+    rows (with the physical ``shard`` column).
 
     Scale shape: one pruned scan of one shard directory + one keyed
     aggregation over that shard — the verification cost rides inside the
     read the consumer was doing anyway."""
-    with open(os.path.join(path, MANIFEST_FILE)) as f:
-        manifest = json.load(f)
-    want = manifest["shards"].get(str(int(shard)))
-    if want is None:
-        raise ValueError(
-            f"shard {shard} is not in the manifest at {path} "
-            f"(known: {sorted(int(k) for k in manifest['shards'])})"
-        )
-    shard_dir = os.path.join(path, f"shard={int(shard)}")
-    if not os.path.isdir(shard_dir) or not any(
-        not f.startswith((".", "_")) for f in os.listdir(shard_dir)
-    ):
-        # a manifest entry whose files are gone is a truncated artifact —
-        # the same failure class as a short shard, reported the same way
-        raise ValueError(
-            f"shard {shard} at {path} failed verification: expected "
-            f"{want}, but the shard directory is missing or empty"
-        )
-    df = spark.read.option("basePath", path).parquet(shard_dir)
-    got = {
-        r["shard"]: {"n_rows": r["n_rows"], "checksum": r["checksum"]}
-        for r in _shard_stats(
-            df,
-            manifest["key_col"],
-            manifest["content_cols"],
-            manifest["n_shards"],
-            use_physical_shard=True,
-        ).collect()
-    }
-    if got != {int(shard): want}:
-        raise ValueError(
-            f"shard {shard} at {path} failed verification: "
-            f"expected {want}, read {got}"
-        )
-    return df
+    verify_shards(spark, path, [shard])
+    return spark.read.option("basePath", path).parquet(
+        os.path.join(path, f"shard={int(shard)}")
+    )
 
 
 def stream_verified_shards(
@@ -689,7 +642,7 @@ def update_export(
         return {
             r["shard"]: {"n_rows": r["n_rows"], "checksum": r["checksum"]}
             for r in _shard_stats(
-                merged, key_col, content_cols, n_shards, use_physical_shard=True
+                merged, F.col("shard"), key_col, content_cols
             ).collect()
         }
 

@@ -7,7 +7,8 @@ Replaces the reference's one-HTTP-call-per-row loop (cnics_to_fhir.py:531,
 retry with backoff mirroring the 5×5s SQL retry policy (:163-177).
 
 Every plan row becomes one entry of a FHIR ``transaction`` Bundle: insert →
-POST {type}, update → PUT {type}/{id}, delete → DELETE {type}/{id}, a
+POST {type}, update → PUT {type}/{id} with that ``id`` in the body (FHIR R4
+http.html#update), delete → DELETE {type}/{id}, a
 Patient delete cascading (``?_cascade=delete``, :333). Bundles hold about
 ``WriterConfig.bundle_size`` rows each and are grouped by patient: a new
 Patient's create and every row whose subject references it travel in one
@@ -109,8 +110,10 @@ def _bundle_entry(row) -> dict:
             entry = {"fullUrl": row[_FULL_URL], **entry}
         return entry
     if action == "update":
+        # FHIR R4 http.html#update: the body's id SHALL equal the URL's
+        resource = {**json.loads(row["body_json"]), "id": row["id"]}
         return {
-            "resource": json.loads(row["body_json"]),
+            "resource": resource,
             "request": {"method": "PUT", "url": f"{rtype}/{row['id']}"},
         }
     if action == "delete":

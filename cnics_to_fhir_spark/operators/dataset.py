@@ -1,5 +1,6 @@
 """Training-dataset assembly operators: sequence packing, stratified
-sampling (dataset mixing), and deterministic global shuffle.
+sampling and epoch mixtures (dataset mixing), and deterministic global
+shuffle.
 
 These are the last-mile ops of an LLM data pipeline, downstream of dedup /
 quality filtering (operators/dedup.py, operators/textanalysis.py): decide
@@ -17,6 +18,10 @@ Scale design (100 TB):
   (window cumsum inside codegen); exact greedy packing is the one
   genuinely sequential recurrence here, so it uses Arrow-batched
   ``applyInPandas`` per shard — never a driver-side loop.
+- Mixtures replicate or drop rows per document with one epoch step
+  (``_explode_epochs``): ``epoch_upsample`` feeds it an explicit weight
+  recipe as a literal CASE, ``temperature_mixture`` feeds it τ=2 weights
+  computed in the plan from the source counts — no driver collect.
 - The shuffle materializes (bucket, rank-in-bucket) rather than a global
   row_number: a single total-order window would serialize onto one task,
   while 256 md5 buckets ≡ range partitions that sort in parallel; global
@@ -26,7 +31,7 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -308,6 +313,28 @@ def hash_split(
     )
 
 
+def _explode_epochs(df: DataFrame, weight: Column, key_col: str) -> DataFrame:
+    """The per-doc epoch step both mixtures share: ``weight`` is in
+    integer HUNDREDTHS of an epoch (250 ⇒ 2.5 epochs). The fractional
+    epoch is decided per row by the engine-portable 60-bit md5 hash:
+    ``n = w div 100 + (hash(key) mod 100 < w mod 100)``, so the step is
+    exact integer arithmetic — deterministic across reruns, partitionings
+    and engines, and a given doc always gets the same epoch count. Rows
+    explode over ``sequence(1, n)``; n = 0 drops the row. Appends
+    (n_epochs, epoch), one row per (doc, epoch)."""
+    from cnics_to_fhir_spark.operators.dedup import portable_hash
+
+    frac_hit = (portable_hash(F.col(key_col).cast("string")) % 100) < (weight % 100)
+    n = (weight.cast("long") / F.lit(100)).cast("long") + frac_hit.cast("long")
+    return (
+        df.select("*", n.alias("n_epochs"))
+        .filter(F.col("n_epochs") > 0)
+        .select(
+            "*", F.explode(F.sequence(F.lit(1).cast("long"), F.col("n_epochs"))).alias("epoch")
+        )
+    )
+
+
 def epoch_upsample(
     df: DataFrame,
     weights: dict[str, int],
@@ -319,116 +346,16 @@ def epoch_upsample(
     ``weight/100`` times (weights are integer HUNDREDTHS — 250 ⇒ 2.5
     epochs), the standard upsampling step when a mixture recipe weights a
     small high-quality source above 1.0 epoch (and downsamples others
-    below it).
-
-    The fractional epoch is decided per row by the engine-portable 60-bit
-    md5 hash: ``n = w div 100 + (hash(key) mod 100 < w mod 100)``, so the
-    whole operator is exact integer arithmetic — deterministic across
-    reruns, partitionings, and engines, and any given doc always gets the
-    same epoch count.  Rows explode over ``sequence(1, n)``; a weight
-    below 100 can drop a row entirely (n = 0 ⇒ no output), which makes
+    below it). A weight below 100 can drop a row entirely, which makes
     this the one mixture op covering both up- AND down-sampling.
 
-    Scale shape: pure per-row scan arithmetic + explode — NO shuffle, no
-    collected state; the weights map is a literal CASE in the plan.
-    Output: input columns + (n_epochs, epoch), one row per (doc, epoch).
-    """
+    Scale shape: pure per-row scan arithmetic + explode (``_explode_epochs``)
+    — NO shuffle, no collected state; the weights map is a literal CASE in
+    the plan. Output: input columns + (n_epochs, epoch)."""
     w = F.lit(default_weight)
     for src, wt in weights.items():
         w = F.when(F.col(source_col) == src, F.lit(int(wt))).otherwise(w)
-    from cnics_to_fhir_spark.operators.dedup import portable_hash
-
-    frac_hit = (portable_hash(F.col(key_col).cast("string")) % 100) < (w % 100)
-    n = (w.cast("long") / F.lit(100)).cast("long") + frac_hit.cast("long")
-    return (
-        df.select("*", n.alias("n_epochs"))
-        .filter(F.col("n_epochs") > 0)
-        .select(
-            "*", F.explode(F.sequence(F.lit(1).cast("long"), F.col("n_epochs"))).alias("epoch")
-        )
-    )
-
-
-def temperature_weights(
-    df: DataFrame,
-    source_col: str = "source",
-    scale: int = 100,
-) -> dict[str, int]:
-    """Mixture weights from the data itself: temperature sampling at
-    τ = 2.  Moving the sampling distribution from p_s ∝ n_s to
-    q_s ∝ n_s^(1/τ) means each doc of source s is seen q_s/p_s ∝
-    n_s^(1/τ−1) = sqrt(n_max/n_s) times (normalized so the LARGEST
-    source stays at 1.0 epoch) — the mT5/XLM-R recipe that upsamples
-    small sources toward balance.  w_s = floor(scale · sqrt(n_max/n_s))
-    in integer hundredths; sqrt is IEEE correctly-rounded in every
-    engine, so the quantized weights are bit-identical wherever they're
-    computed — no float-divergence risk (unlike a general pow).
-
-    One (source)-keyed count aggregation; the weight map that returns to
-    the driver is bounded by the NUMBER OF SOURCES (tens), the same
-    bounded-round-trip class as the k-means centroids.  Feed the result
-    to ``epoch_upsample``."""
-    counts = df.groupBy(source_col).agg(F.count(F.lit(1)).alias("n")).collect()
-    n_max = max(r["n"] for r in counts)
-    import math
-
-    return {
-        r[source_col]: int(math.floor(scale * math.sqrt(n_max / r["n"])))
-        for r in counts
-    }
-
-
-def temperature_mixture_join(
-    df: DataFrame,
-    source_col: str = "source",
-    key_col: str = "doc_id",
-    scale: int = 100,
-) -> DataFrame:
-    """Join-based τ=2 temperature mixture: identical semantics (and bit-
-    identical output) to ``temperature_mixture``, but the weight table
-    NEVER rides the driver — counts, n_max, and w_s = floor(scale·
-    sqrt(n_max/n_s)) all stay DataFrame-side, and the per-doc epoch count
-    comes from a (source)-keyed join instead of a literal CASE ladder.
-
-    Use this variant when source cardinality is unbounded (per-domain or
-    per-URL-prefix mixing — millions of 'sources'): the dict variant's
-    O(sources) collect and CASE-expression plan both stop scaling there.
-    The n_max scalar broadcasts (one row); the weight join is left to AQE,
-    which broadcasts it while it fits and shuffle-joins past that — the
-    corpus side shuffles AT MOST once, on the same key the weights were
-    aggregated on.
-
-    Scale shape: one (source)-keyed count, one scalar max, one keyed join,
-    then epoch_upsample's shuffle-free integer explode arithmetic.
-    Output: input columns + (n_epochs, epoch), exactly like
-    ``epoch_upsample``."""
-    from cnics_to_fhir_spark.operators.dedup import portable_hash
-
-    counts = df.groupBy(source_col).agg(F.count(F.lit(1)).cast("long").alias("__n"))
-    mx = counts.agg(F.max("__n").alias("__n_max"))
-    w = counts.crossJoin(F.broadcast(mx)).select(
-        source_col,
-        F.floor(
-            F.lit(int(scale)) * F.sqrt(F.col("__n_max").cast("double") / F.col("__n"))
-        )
-        .cast("long")
-        .alias("__wt"),
-    )
-    joined = df.join(w, source_col)
-    frac_hit = (portable_hash(F.col(key_col).cast("string")) % 100) < (
-        F.col("__wt") % 100
-    )
-    n = (F.col("__wt") / F.lit(100)).cast("long") + frac_hit.cast("long")
-    return (
-        joined.select(*df.columns, n.alias("n_epochs"))
-        .filter(F.col("n_epochs") > 0)
-        .select(
-            "*",
-            F.explode(
-                F.sequence(F.lit(1).cast("long"), F.col("n_epochs"))
-            ).alias("epoch"),
-        )
-    )
+    return _explode_epochs(df, w, key_col)
 
 
 def temperature_mixture(
@@ -436,12 +363,37 @@ def temperature_mixture(
     source_col: str = "source",
     key_col: str = "doc_id",
 ) -> DataFrame:
-    """τ=2 temperature-balanced mixture epochs: derive weights from the
-    source counts, then replicate/drop per doc with ``epoch_upsample``'s
-    exact integer arithmetic. On equal-sized sources this is a no-op
-    (all weights = 100); skewed corpora upsample the tail."""
-    w = temperature_weights(df, source_col)
-    return epoch_upsample(df, w, source_col=source_col, key_col=key_col, default_weight=100)
+    """Mixture weights from the data itself: temperature sampling at
+    τ = 2.  Moving the sampling distribution from p_s ∝ n_s to
+    q_s ∝ n_s^(1/τ) means each doc of source s is seen q_s/p_s ∝
+    n_s^(1/τ−1) = sqrt(n_max/n_s) times (normalized so the LARGEST
+    source stays at 1.0 epoch) — the mT5/XLM-R recipe that upsamples
+    small sources toward balance.  w_s = floor(100 · sqrt(n_max/n_s)) in
+    integer hundredths; sqrt is IEEE correctly-rounded in every engine,
+    so the quantized weights are bit-identical wherever they're computed
+    — no float-divergence risk (unlike a general pow).  On equal-sized
+    sources this is a no-op (all weights = 100).
+
+    The weight table never rides the driver: the counts, n_max and w_s
+    stay in the plan and reach each doc through a (source)-keyed join, so
+    source cardinality is unbounded (per-domain or per-URL-prefix mixing).
+    The n_max scalar broadcasts (one row); the weight join is left to AQE,
+    which broadcasts it while it fits and shuffle-joins past that.
+
+    Scale shape: one (source)-keyed count, one scalar max, one keyed join,
+    then ``_explode_epochs``' shuffle-free integer arithmetic.
+    Output: input columns + (n_epochs, epoch), exactly like
+    ``epoch_upsample``."""
+    counts = df.groupBy(source_col).agg(F.count(F.lit(1)).cast("long").alias("__n"))
+    mx = counts.agg(F.max("__n").alias("__n_max"))
+    w = counts.crossJoin(F.broadcast(mx)).select(
+        source_col,
+        F.floor(F.lit(100) * F.sqrt(F.col("__n_max").cast("double") / F.col("__n")))
+        .cast("long")
+        .alias("__wt"),
+    )
+    joined = df.join(w, source_col).select(*df.columns, "__wt")
+    return _explode_epochs(joined, F.col("__wt"), key_col).drop("__wt")
 
 
 # ---------------------------------------------------------------------------

@@ -260,12 +260,6 @@ def portable_hash(col: Column, seed: int | None = None) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
-def minhash_signature(text: Column, num_hashes: int = 32, k: int = 3) -> Column:
-    """array<long> MinHash signature: sig[j] = min over shingles of
-    xxhash64(j, shingle). Pure codegen — no UDF, no shuffle."""
-    return minhash_from_shingles(F.array_distinct(word_shingles(text, k)), num_hashes)
-
-
 def _min_hash_at(shingles: Column, j: int, portable: bool) -> Column:
     """min over shingles of hash_j(shingle), with ``j`` captured by a real
     closure. NEVER write ``lambda s, j=j: ...`` here: pyspark's transform
@@ -341,7 +335,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     k: int = 3,
     threshold: float = 0.5,
-    persist_shingles: bool = True,
     portable: bool = False,
     materialize: bool = False,
 ) -> DataFrame:
@@ -363,26 +356,22 @@ def minhash_lsh_pairs(
     rows = num_hashes // bands
     # The band join + pair dedup run over (id, band_id, band_hash) rows only
     # (~24 B each); the 8-way band explode never amplifies shingle arrays.
-    # Shingles are used 3× (banding + both sides of the verify join);
-    # persist_shingles caches them MEMORY_AND_DISK (~25 % wall-clock at
-    # sf0.1). On a storage-tight cluster set False: re-computation is two
-    # extra codegen'd scans, still never shuffling the shingle corpus 8×.
+    # Shingles are used 3× (banding + both sides of the verify join), so
+    # they are cached MEMORY_AND_DISK (~25 % wall-clock at sf0.1).
     df = ensure_min_parallelism(df, id_col)
     shingled = df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(word_shingles(F.col(text_col), k)).alias("shingles"),
     )
-    if persist_shingles:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
+    shingled = shingled.persist(StorageLevel.MEMORY_AND_DISK)
     candidates = _lsh_candidates(shingled, num_hashes, bands, portable)
     out = _verify_jaccard(candidates, shingled, threshold)
     if materialize:
         pair_rows = out.collect()
         schema = out.schema
-        if persist_shingles:
-            shingled.unpersist()
+        shingled.unpersist()
         return df.sparkSession.createDataFrame(pair_rows, schema)
     return out
 

@@ -44,35 +44,30 @@ def patient_page(
     demographic: DataFrame,
     sites: list[str],
     limit: int = 100_000,
-    randomize: bool = False,
-    seed: int = 42,
 ) -> DataFrame:
     """Entry point 2 (cnics_to_fhir.py:259-266) for all of a job's sites
     at once: Patient ⋈ DemographicAltered with a Site filter and LIMIT
     PatCnt per site. The reference's LIMIT keeps whichever rows MySQL
-    returns first; here each site keeps its lowest PatientIds, or a seeded
-    random sample with ``randomize`` (the disabled ``order by rand()``,
-    :264). The per-site limit is one row_number over Site, so the page
-    costs the same shuffles for any number of sites. Returns the distinct
-    patient identity page (PatientId, SitePatientId, Site)."""
+    returns first; here each site keeps its lowest PatientIds (the
+    reference's ``order by rand()``, :264, is disabled). The per-site
+    limit is one row_number over Site, so the page costs the same shuffles
+    for any number of sites. Returns the distinct patient identity page
+    (PatientId, SitePatientId, Site)."""
     base = patient.filter(F.col("Site").isin(*sites)).join(
         demographic, site_scoped(["PatientId"], patient, demographic), "left_semi"
     )
-    order = F.rand(seed) if randomize else F.col("PatientId")
-    rank = F.row_number().over(Window.partitionBy("Site").orderBy(order, "SitePatientId"))
+    rank = F.row_number().over(Window.partitionBy("Site").orderBy("PatientId", "SitePatientId"))
     return base.withColumn("__rn", rank).filter(F.col("__rn") <= limit).select(
         "PatientId", F.decode("SitePatientId", "UTF-8").alias("SitePatientId"), "Site"
     )
 
 
-def diagnoses(dx: DataFrame, patient_id_filter: Column | None = None, name_filter_sql: str | None = None) -> DataFrame:
+def diagnoses(dx: DataFrame, name_filter_sql: str | None = None) -> DataFrame:
     """Query shape 1 (cnics_to_fhir.py:115-123): Historical + length +
     config IN/LIKE filters; bulk, not per-patient."""
     out = dx.filter(not_historical(F.col("Historical")) & nonblank(F.col("DiagnosisName")))
     if name_filter_sql:
         out = out.filter(F.expr(name_filter_sql))
-    if patient_id_filter is not None:
-        out = out.filter(patient_id_filter)
     return out
 
 

@@ -5,9 +5,9 @@ over FHIR GET responses (cnics_to_fhir.py:548-570 conditions, :645-666 meds,
 :728-750 labs, :328-337 patient anti-join delete). Net semantics per business
 key (only ``identifier[0].value`` is compared — :556, :652, :736):
 
-  key in current  ∧ key in existing → update  (PUT  /{type}/{server_id})
+  key in current  ∧ key in existing → update  (PUT  /{type}/{id})
   key in current  ∧ key ∉ existing  → insert  (POST /{type})
-  key ∉ current   ∧ key in existing → delete  (DELETE /{type}/{server_id})
+  key ∉ current   ∧ key in existing → delete  (DELETE /{type}/{id})
 
 That is exactly ONE full-outer join — the engine's central IR. A FHIR job
 runs one for all its sites and resource types, keyed on (resource_type,

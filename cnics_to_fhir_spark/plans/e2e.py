@@ -1091,23 +1091,19 @@ def e2e10_pretraining_data_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph over the survivors → leakage-safe train/val/test split (near-dup
     CLUSTERS never straddle — ds13's guarantee, now downstream of dedup
     exactly where a real build runs it) → τ=2 temperature mixture over
-    the TRAIN split only (data-derived integer weights, epoch_upsample's
-    exact arithmetic; eval splits are never upsampled — duplicated eval
-    rows would double-count errors).  A bug in ANY stage — keeper choice,
+    the TRAIN split only (data-derived integer weights computed in the
+    plan, exact epoch arithmetic; eval splits are never upsampled —
+    duplicated eval rows would double-count errors).  A bug in ANY stage — keeper choice,
     component closure, bucket rule, weight quantization, epoch explode —
     breaks one hash.
 
     Scale shape is the sum of its parts, all previously probed sub-linear:
     one content-hash aggregation, the pair-graph contraction (pairs, not
-    corpus), one ids-keyed split join, a bounded-by-sources weight
-    round-trip, and a shuffle-free epoch explode.  Output: (doc_id,
+    corpus), one ids-keyed split join, a source-keyed weight join, and a
+    shuffle-free epoch explode.  Output: (doc_id,
     source, split, n_epochs, epoch) — train rows replicated per epoch,
     val/test exactly once."""
-    from cnics_to_fhir_spark.operators.dataset import (
-        epoch_upsample,
-        leakage_safe_split,
-        temperature_weights,
-    )
+    from cnics_to_fhir_spark.operators.dataset import leakage_safe_split, temperature_mixture
     from cnics_to_fhir_spark.operators.dedup import drop_exact_dups, ngram_jaccard_pairs
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text", "source")
@@ -1118,8 +1114,7 @@ def e2e10_pretraining_data_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         split.select("doc_id", "split"), "doc_id"
     )
     train = assign.filter(F.col("split") == "train")
-    weights = temperature_weights(train, "source")
-    mixed = epoch_upsample(train, weights).select(
+    mixed = temperature_mixture(train).select(
         "doc_id", "source", "split", "n_epochs", "epoch"
     )
     rest = assign.filter(F.col("split") != "train").select(

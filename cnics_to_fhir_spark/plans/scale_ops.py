@@ -2796,9 +2796,9 @@ def ds09_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the largest source stays at 1.0 epoch, the cut tail lands at ~1.7) —
     sqrt is IEEE correctly-rounded in both engines, so the quantized
     weights are bit-identical and the whole mixture replays under the
-    oracle.  The weight map's driver round-trip is bounded by the number
-    of SOURCES (the k-means-centroid class), and the replication itself
-    is epoch_upsample's zero-shuffle integer arithmetic."""
+    oracle.  The weights stay in the plan (a source-keyed join), and the
+    replication itself is the zero-shuffle integer epoch arithmetic
+    ds08 uses (operators/dataset.py temperature_mixture)."""
     from cnics_to_fhir_spark.operators.dataset import temperature_mixture
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "source")
@@ -2839,22 +2839,18 @@ def ds09_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ds14_temperature_mixture_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ds09's mixture with the driver round-trip REMOVED: the weight table
+    """ds09's mixture under the join-shape tag (J1): the weight table
     (counts → scalar n_max broadcast → w_s = floor(100·sqrt(n_max/n_s)))
     stays DataFrame-side and reaches each doc through a (source)-keyed
     join, so source cardinality is unbounded — per-domain or per-URL-
-    prefix mixing with millions of 'sources' breaks the dict variant's
-    O(sources) collect and its CASE-ladder plan, not this one.  Same
-    deterministic integer epoch arithmetic, same oracle shape as ds09;
-    the two entries' identical hashes pin that the join variant changes
-    the PLAN, never the mixture (operators/dataset.py
-    temperature_mixture_join)."""
-    from cnics_to_fhir_spark.operators.dataset import temperature_mixture_join
+    prefix mixing with millions of 'sources'.  Same operator, same oracle
+    as ds09 (operators/dataset.py temperature_mixture)."""
+    from cnics_to_fhir_spark.operators.dataset import temperature_mixture
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "source")
     tail = F.col("source").rlike("^src1[0-9]$")
     skewed = docs.filter(~tail | (F.col("doc_id") % 3 == 0))
-    return temperature_mixture_join(skewed)
+    return temperature_mixture(skewed)
 
 
 # ---------------------------------------------------------------------------

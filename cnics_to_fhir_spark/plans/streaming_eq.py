@@ -1314,8 +1314,8 @@ def st12_stream_verified_loader(spark: SparkSession, sf_dir: str) -> DataFrame:
             # the consumer's own aggregation over the rows it was handed —
             # evidence of what was read, not an echo of the manifest
             r = _shard_stats(
-                rows, manifest["key_col"], manifest["content_cols"],
-                manifest["n_shards"], use_physical_shard=True,
+                rows, F.col("shard").cast("int"),
+                manifest["key_col"], manifest["content_cols"],
             ).collect()[0]
             loaded.append((int(r["shard"]), int(r["n_rows"]), r["checksum"]))
 

@@ -107,11 +107,3 @@ def scratch_name(spark: SparkSession, base: str) -> str:
     [A-Za-z0-9_] so it is valid as both a database and a view name."""
     app = re.sub(r"[^A-Za-z0-9_]", "_", spark.sparkContext.applicationId)
     return f"{base}_{app}"
-
-
-def get_or_create(spark: SparkSession | None = None) -> SparkSession:
-    """Reuse an active session (the driver passes one in) or build ours."""
-    if spark is not None:
-        return spark
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session()

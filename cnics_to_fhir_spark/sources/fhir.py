@@ -126,16 +126,19 @@ def lastupdated_shards(boundaries: list[str]) -> list[str]:
     ``["2020-01-01", "2021-01-01", "2022-01-01"]`` → two shards covering
     [2020, 2021) and [2021, 2022), plus open-ended head/tail shards so the
     union is exactly the full corpus regardless of data outside the range.
+    Each date is percent-encoded: a ``+00:00`` offset must not reach the
+    server as a space.
     """
     if not boundaries:
         raise ValueError(
             "lastupdated_shards: boundaries must be non-empty "
             "(a dynamically-built empty list would otherwise IndexError)"
         )
-    shards = [f"_lastUpdated=lt{boundaries[0]}"]
-    for lo, hi in zip(boundaries, boundaries[1:]):
+    b = [quote(v, safe="") for v in boundaries]
+    shards = [f"_lastUpdated=lt{b[0]}"]
+    for lo, hi in zip(b, b[1:]):
         shards.append(f"_lastUpdated=ge{lo}&_lastUpdated=lt{hi}")
-    shards.append(f"_lastUpdated=ge{boundaries[-1]}")
+    shards.append(f"_lastUpdated=ge{b[-1]}")
     return shards
 
 

@@ -33,6 +33,7 @@ no-pagination hack (:215-217).
 from __future__ import annotations
 
 from typing import Iterator, Sequence
+from urllib.parse import quote
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -173,7 +174,7 @@ class FhirUpdatesStreamReader(SimpleDataSourceStreamReader):
         return list(_snapshot_rows(f"{self.search}&{fragment}", None, self.max_pages))
 
     def read(self, start: dict):
-        rows = self._fetch(f"_lastUpdated=gt{start['last_updated']}")
+        rows = self._fetch(f"_lastUpdated=gt{quote(start['last_updated'], safe='')}")
         # a poll can return entries that all lack meta.lastUpdated (a
         # server that strips meta): hold the cursor rather than letting
         # max() over an empty generator kill the stream
@@ -185,7 +186,7 @@ class FhirUpdatesStreamReader(SimpleDataSourceStreamReader):
     def readBetweenOffsets(self, start: dict, end: dict):
         return iter(
             self._fetch(
-                f"_lastUpdated=gt{start['last_updated']}"
-                f"&_lastUpdated=le{end['last_updated']}"
+                f"_lastUpdated=gt{quote(start['last_updated'], safe='')}"
+                f"&_lastUpdated=le{quote(end['last_updated'], safe='')}"
             )
         )

@@ -210,40 +210,53 @@ def test_epoch_upsample_integer_exact(spark):
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
-def test_temperature_weights_balance_direction(spark):
+def _python_temperature_weights(rows) -> dict[str, int]:
+    """The τ=2 weights computed outside Spark: floor(100·sqrt(n_max/n_s))."""
+    import math
+    from collections import Counter
+
+    n = Counter(src for _, src in rows)
+    n_max = max(n.values())
+    return {s: math.floor(100 * math.sqrt(n_max / c)) for s, c in n.items()}
+
+
+def _mixture_matches_reference(spark, rows):
+    df = spark.createDataFrame(rows, ["doc_id", "source"])
+    w = _python_temperature_weights(rows)
+    got = sorted(map(tuple, dataset.temperature_mixture(df).collect()))
+    assert got == sorted(map(tuple, dataset.epoch_upsample(df, w).collect()))
+    return w, got
+
+
+def test_temperature_mixture_balance_direction(spark):
     # 100-doc source vs 25-doc source: tail weight = floor(100*sqrt(4)) = 200
     rows = [(i, "big" if i < 100 else "small") for i in range(125)]
-    df = spark.createDataFrame(rows, ["doc_id", "source"])
-    w = dataset.temperature_weights(df)
+    w, out = _mixture_matches_reference(spark, rows)
     assert w == {"big": 100, "small": 200}
-    out = dataset.temperature_mixture(df).collect()
-    n_big = sum(1 for r in out if r["source"] == "big")
-    n_small = sum(1 for r in out if r["source"] == "small")
+    n_big = sum(1 for r in out if r[1] == "big")
+    n_small = sum(1 for r in out if r[1] == "small")
     assert n_big == 100            # largest source: exactly 1 epoch each
     assert n_small == 50           # exact doubling: 2 epochs per doc
     # equal-sized sources -> identity mixture
-    eq = spark.createDataFrame([(i, f"s{i%2}") for i in range(40)], ["doc_id", "source"])
-    assert dataset.temperature_weights(eq) == {"s0": 100, "s1": 100}
-    assert dataset.temperature_mixture(eq).count() == 40
+    eq = [(i, f"s{i%2}") for i in range(40)]
+    w, out = _mixture_matches_reference(spark, eq)
+    assert w == {"s0": 100, "s1": 100}
+    assert len(out) == 40
 
 
-def test_temperature_mixture_join_matches_dict_variant(spark):
-    """The join-based variant must be BIT-identical to the collect-based
-    one on any input — it changes the plan (weights never ride the
-    driver), never the mixture. Includes a fractional-weight source so
-    the per-doc hash coin is exercised, and a 1-doc source (max weight)."""
+def test_temperature_mixture_matches_python_weights(spark):
+    """The in-plan weights must give exactly the mixture that
+    ``epoch_upsample`` gives for weights computed in plain Python.
+    Includes a fractional-weight source so the per-doc hash coin is
+    exercised, and a 1-doc source (max weight)."""
     rows = [(i, "big") for i in range(100)] + [
         (i, "mid") for i in range(100, 140)
     ] + [(999, "solo")]
-    df = spark.createDataFrame(rows, ["doc_id", "source"])
-    a = sorted(map(tuple, dataset.temperature_mixture(df).collect()))
-    b = sorted(map(tuple, dataset.temperature_mixture_join(df).collect()))
-    assert a == b
-    # weight sanity via the dict variant: mid = floor(100*sqrt(2.5)) = 158,
-    # solo = floor(100*sqrt(100)) = 1000 -> exactly 10 epochs
-    w = dataset.temperature_weights(df)
+    w, out = _mixture_matches_reference(spark, rows)
+    # mid = floor(100*sqrt(2.5)) = 158, solo = floor(100*sqrt(100)) = 1000
+    # -> exactly 10 epochs
     assert w == {"big": 100, "mid": 158, "solo": 1000}
-    assert sum(1 for r in b if r[1] == "solo") == 10
+    assert sum(1 for r in out if r[1] == "solo") == 10
 
 
 def test_global_rank_is_exact_total_order(spark):

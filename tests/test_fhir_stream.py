@@ -35,9 +35,11 @@ def _rows(start: int, n: int, t0: int):
 class _StreamHandler(http.server.BaseHTTPRequestHandler):
     base_url: str = ""
     dataset: list = []
+    seen: list = []  # the _lastUpdated values of each request, as parsed
 
     def do_GET(self):
         q = parse_qs(urlparse(self.path).query)
+        _StreamHandler.seen.append(q.get("_lastUpdated", []))
         rows = _StreamHandler.dataset
         for cond in q.get("_lastUpdated", []):
             if cond.startswith("gt"):
@@ -78,6 +80,7 @@ def stream_store():
     base = f"http://127.0.0.1:{srv.server_address[1]}"
     _StreamHandler.base_url = base
     _StreamHandler.dataset = []
+    _StreamHandler.seen = []
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     yield base
@@ -257,3 +260,22 @@ def test_poll_without_lastupdated_holds_cursor():
     rdr._fetch = lambda q: mixed
     _, off2 = rdr.read({"last_updated": "2024-01-01T00:00:00Z"})
     assert off2 == {"last_updated": "2024-01-02T00:00:00Z"}
+
+
+def test_lastupdated_values_are_percent_encoded(stream_store):
+    """A stamp with a ``+00:00`` offset must reach the server as that
+    value: an unencoded ``+`` in a query string parses as a space. Covers
+    the stream's poll, its replay range and the batch reader's shards."""
+    from cnics_to_fhir_spark.sources.fhir import lastupdated_shards
+    from cnics_to_fhir_spark.sources.fhir_datasource import (
+        FhirUpdatesStreamReader,
+    )
+
+    lo, hi = "2024-01-01T00:00:00+00:00", "2024-01-02T00:00:00+01:00"
+    rdr = FhirUpdatesStreamReader({"url": stream_store})
+    rdr.read({"last_updated": lo})
+    list(rdr.readBetweenOffsets({"last_updated": lo}, {"last_updated": hi}))
+    assert _StreamHandler.seen == [[f"gt{lo}"], [f"gt{lo}", f"le{hi}"]]
+    assert [parse_qs(s)["_lastUpdated"] for s in lastupdated_shards([lo, hi])] == [
+        [f"lt{lo}"], [f"ge{lo}", f"lt{hi}"], [f"ge{hi}"]
+    ]

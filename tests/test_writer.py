@@ -208,6 +208,9 @@ def test_writer_bundle_mode_routes_and_chunks(spark, bundle_server):
     # insert/update entries carry the parsed resource, deletes none
     for e in (e for b in _BundleRecorder.bundles for e in b["entry"]):
         assert ("resource" in e) == (e["request"]["method"] != "DELETE")
+        # FHIR R4 http.html#update: a PUT body's id equals the URL's
+        if e["request"]["method"] == "PUT":
+            assert e["resource"]["id"] == e["request"]["url"].split("/")[1]
     assert counts == {"insert": 6, "update": 1, "delete": 2, "failed": 0}
 
 
