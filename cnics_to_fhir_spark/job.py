@@ -58,7 +58,7 @@ def resolve_patient_ids(page: DataFrame, snapshot: DataFrame) -> DataFrame:
         "fhir_patient_id",
         F.coalesce(
             F.col("__srv_id"),
-            patient_full_url(site_patient_system(F.col("Site")), F.col("SitePatientId")),
+            patient_full_url(site_patient_system("Site"), F.col("SitePatientId")),
         ),
     ).drop("__srv_id")
 

@@ -79,16 +79,11 @@ def conditions_current(
     cur = _page_join(extract.diagnoses(dx, name_filter_sql=name_filter_sql), patient_page)
     cur = cur.withColumn("__dx_key", F.decode("SiteRecordId", "UTF-8"))
     cur = membership_via_join(cur, standard_codes, "DiagnosisName", "in_standard")
-    body = condition_resource(
-        F.col("Site"),
-        F.col("fhir_patient_id"),
-        F.col("DiagnosisName"),
-        F.col("DiagnosisType"),
-        F.col("DiagnosisDate"),
-        F.col("__dx_key"),
-        in_standard=F.col("in_standard"),
+    cur = condition_resource(
+        cur, "Site", "fhir_patient_id", "DiagnosisName", "DiagnosisType", "DiagnosisDate",
+        "__dx_key", in_standard="in_standard",
     )
-    return cur.select("Site", F.col("__dx_key").alias("key"), F.to_json(body).alias("body_json"))
+    return cur.select("Site", F.col("__dx_key").alias("key"), "body_json")
 
 
 def conditions_plan(
@@ -110,16 +105,11 @@ def medications_current(
     cur = _page_join(
         extract.medications_extract(med, name_filter_sql=name_filter_sql), patient_page
     ).withColumn("__med_key", F.decode("SiteRecordId", "UTF-8"))
-    body = medication_request_resource(
-        F.col("Site"),
-        F.col("fhir_patient_id"),
-        F.col("MedicationName"),
-        F.col("StartDate"),
-        F.col("EndDate"),
-        F.col("EndType"),
-        F.col("__med_key"),
+    cur = medication_request_resource(
+        cur, "Site", "fhir_patient_id", "MedicationName", "StartDate", "EndDate", "EndType",
+        "__med_key",
     )
-    return cur.select("Site", F.col("__med_key").alias("key"), F.to_json(body).alias("body_json"))
+    return cur.select("Site", F.col("__med_key").alias("key"), "body_json")
 
 
 def medications_plan(
@@ -138,19 +128,13 @@ def observations_current(
     name_filter_sql: str | None = None,
 ) -> DataFrame:
     cur = _page_join(extract.labs_extract(lab, name_filter_sql=name_filter_sql), patient_page)
-    body = observation_resource(
-        F.col("Site"),
-        F.col("fhir_patient_id"),
-        F.col("TestName"),
-        F.col("Result"),
-        F.col("Units"),
-        F.col("CollectionDate"),
-        F.col("RefRangeLow"),
-        F.col("RefRangeHigh"),
+    cur = observation_resource(
+        cur, "Site", "fhir_patient_id", "TestName", "Result", "Units", "CollectionDate",
+        "RefRangeLow", "RefRangeHigh",
         # lab record id is ALREADY a string (cnics_to_fhir.py:736, :892)
-        F.col("SiteRecordId"),
+        "SiteRecordId",
     )
-    return cur.select("Site", F.col("SiteRecordId").alias("key"), F.to_json(body).alias("body_json"))
+    return cur.select("Site", F.col("SiteRecordId").alias("key"), "body_json")
 
 
 def observations_plan(
@@ -184,19 +168,11 @@ def patients_current(
     )
     for side in (sessions, pro_identity, demo1):
         cur = cur.join(side, site_scoped(["PatientId"], cur, side), "left")
-    body = patient_resource(
-        F.col("Site"),
-        F.col("SitePatientId"),
-        F.col("session_ids"),
-        F.col("hmrn"),
-        F.col("umrn"),
-        F.col("pro_patient_ids"),
-        F.col("pro_mrns"),
-        F.col("Race"),
-        F.col("Hispanic"),
-        F.col("Sex"),
+    cur = patient_resource(
+        cur, "Site", "SitePatientId", "session_ids", "hmrn", "umrn", "pro_patient_ids",
+        "pro_mrns", "Race", "Hispanic", "Sex",
     )
-    return cur.select("Site", F.col("SitePatientId").alias("key"), F.to_json(body).alias("body_json"))
+    return cur.select("Site", F.col("SitePatientId").alias("key"), "body_json")
 
 
 def patients_plan(

@@ -10,6 +10,25 @@ right defaults on a real cluster at 100 TB:
 - UTC session timezone so timestamp semantics match the DuckDB oracle and
   are deployment-independent.
 - Arrow enabled for any pandas-UDF path (similarity / multimodal operators).
+- Codegen cache of 2,000 classes (``spark.sql.codegen.cache.maxEntries``,
+  default 100). One write of a FHIR job's plan compiles ~120 generated
+  classes, so at 100 entries each is evicted before its next use and every
+  run recompiles all of them (115-123 compilations of 13-18 ms each per
+  write); at 2,000 a repeat write compiles 0-12. A cached class holds ~2.7 KB
+  of bytecode plus ~7.4 KB of source, so the full cache costs tens of MB of
+  driver heap. The conf is static: it applies only when ``build_session``
+  starts the JVM. A session started elsewhere (the vanilla driver session
+  that imports ``__spark_entry__.py``) keeps 100 even if it later calls
+  ``build_session``, which then returns that session.
+- No DataFrame call-site capture
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With capture on,
+  every wrapped DataFrame/Column/functions call walks the Python stack and
+  makes extra py4j round trips to record its origin: a FHIR job's plan
+  build sent ~8,100 py4j commands with it and ~3,200 without. The cost: an
+  analysis or runtime error names the failing expression but no longer the
+  Python file and line of the DataFrame call that built it. PySpark reads
+  the conf once per process, from the first session active when a wrapped
+  call runs; set it back to ``true`` through ``extra_conf`` to debug.
 """
 
 from __future__ import annotations
@@ -52,6 +71,8 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -209,6 +209,31 @@ def _snapshot_rows(url: str, headers: dict[str, str] | None, max_pages: int) -> 
             yield _snapshot_row((entry or {}).get("resource") or {})
 
 
+def _url_seed(spark: SparkSession, urls: list[str]) -> DataFrame:
+    """One ``url`` row per partition, one partition per URL: a ``UNION
+    ALL`` of one-row ``SELECT``s, each URL bound as a named parameter. One
+    parse, no Python-row RDD, no shuffle. The unions nest as a balanced
+    tree: a flat chain of a thousand fails to parse as too complex.
+
+    Each child reports unknown partitioning, so a union of seeds (the
+    per-type reads of one snapshot) keeps one task per URL. A one-slice
+    ``spark.range`` seed reports ``SinglePartition``, and under
+    ``spark.sql.unionOutputPartitioning`` a union of those runs as ONE task
+    that walks every chain in turn. The seed also has small size statistics
+    for the optimizer's broadcast and runtime-filter choices; an RDD-backed
+    seed has none and reads as ``spark.sql.defaultSizeInBytes``. A
+    ``VALUES`` or Arrow ``createDataFrame`` seed packs URLs beyond
+    ``defaultParallelism`` into shared partitions."""
+
+    def union(lo: int, hi: int) -> str:
+        if hi - lo == 1:
+            return f"SELECT :u{lo} AS url"
+        mid = (lo + hi) // 2
+        return f"({union(lo, mid)}) UNION ALL ({union(mid, hi)})"
+
+    return spark.sql(union(0, len(urls)), args={f"u{i}": url for i, url in enumerate(urls)})
+
+
 def snapshot_via_http(
     spark: SparkSession,
     base_url: str,
@@ -229,15 +254,12 @@ def snapshot_via_http(
     chains concurrently instead of the reference's one serial cursor
     (the ``_count=50000`` no-pagination hack, cnics_to_fhir.py:215-217).
     Without shards, one seed → one chain (correct but driver-shaped; fine
-    for small stores only)."""
+    for small stores only). Each URL keeps its own task in a union too: the
+    per-type frames of one snapshot walk their chains concurrently
+    (``_url_seed``)."""
     base = search_url(base_url, resource_type, page_size)
     urls = [f"{base}&{s}" for s in shards] if shards else [base]
-    # one task per shard: each walks its own next-chain in parallel. A
-    # one-row-per-partition range picks its URL in the JVM, so seeding runs
-    # no Python-row RDD and no shuffle.
-    seed = spark.range(0, len(urls), 1, len(urls)).select(
-        F.element_at(F.array(*map(F.lit, urls)), F.col("id").cast("int") + 1).alias("url")
-    )
+    seed = _url_seed(spark, urls)
     columns = SNAPSHOT_SCHEMA.fieldNames()
 
     def fetch(batches: Iterator) -> Iterator:

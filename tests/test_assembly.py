@@ -22,8 +22,8 @@ from cnics_to_fhir_spark.functions import coding
 US_CORE = "http://hl7.org/fhir/us/core/StructureDefinition/"
 
 
-def _one_json(df, col):
-    return json.loads(df.select(F.to_json(col).alias("j")).collect()[0]["j"])
+def _one_json(df):
+    return json.loads(df.select("body_json").collect()[0]["body_json"])
 
 
 def test_condition_golden(spark):
@@ -32,13 +32,9 @@ def test_condition_golden(spark):
           datetime.date(2020, 3, 14), "rec-77")],
         ["site", "pat", "dx", "dxtype", "dxdate", "rid"],
     )
+    df = df.withColumn("in_std", coding.standard_membership(F.col("dx"), ["COPD"]))
     got = _one_json(
-        df,
-        condition_resource(
-            F.col("site"), F.col("pat"), F.col("dx"), F.col("dxtype"),
-            F.col("dxdate"), F.col("rid"),
-            in_standard=coding.standard_membership(F.col("dx"), ["COPD"]),
-        ),
+        condition_resource(df, "site", "pat", "dx", "dxtype", "dxdate", "rid", in_standard="in_std")
     )
     assert got == {
         "resourceType": "Condition",
@@ -78,13 +74,9 @@ def test_condition_null_date_drops_recorded(spark):
         [("uw", "p", "COPD", "Source unknown", None, "r1")],
         "site string, pat string, dx string, dxtype string, dxdate date, rid string",
     )
+    df = df.withColumn("in_std", coding.standard_membership(F.col("dx"), ["COPD"]))
     got = _one_json(
-        df,
-        condition_resource(
-            F.col("site"), F.col("pat"), F.col("dx"), F.col("dxtype"),
-            F.col("dxdate"), F.col("rid"),
-            in_standard=coding.standard_membership(F.col("dx"), ["COPD"]),
-        ),
+        condition_resource(df, "site", "pat", "dx", "dxtype", "dxdate", "rid", in_standard="in_std")
     )
     assert "recordedDate" not in got  # cnics_to_fhir.py:613-614
     assert got["code"]["coding"][0]["system"] == coding.CNICS_DX_SYSTEM
@@ -99,11 +91,7 @@ def test_medication_request_golden(spark):
         ["site", "pat", "med", "start", "end", "endtype", "rid"],
     )
     got = _one_json(
-        df,
-        medication_request_resource(
-            F.col("site"), F.col("pat"), F.col("med"), F.col("start"),
-            F.col("end"), F.col("endtype"), F.col("rid"),
-        ),
+        medication_request_resource(df, "site", "pat", "med", "start", "end", "endtype", "rid")
     )
     assert got == {
         "resourceType": "MedicationRequest",
@@ -134,11 +122,9 @@ def _obs(spark, result, units, lo, hi):
         " cdate timestamp, lo string, hi string, rid string",
     )
     return _one_json(
-        df,
         observation_resource(
-            F.col("site"), F.col("pat"), F.col("test"), F.col("result"),
-            F.col("units"), F.col("cdate"), F.col("lo"), F.col("hi"), F.col("rid"),
-        ),
+            df, "site", "pat", "test", "result", "units", "cdate", "lo", "hi", "rid"
+        )
     )
 
 
@@ -201,12 +187,10 @@ def test_patient_golden_crosswalk_precedence(spark):
         " race string, hispanic string, sex string",
     )
     got = _one_json(
-        df,
         patient_resource(
-            F.col("site"), F.col("spid"), F.col("sessions"), F.col("hmrn"),
-            F.col("umrn"), F.col("proids"), F.col("promrns"),
-            F.col("race"), F.col("hispanic"), F.col("sex"),
-        ),
+            df, "site", "spid", "sessions", "hmrn", "umrn", "proids", "promrns",
+            "race", "hispanic", "sex",
+        )
     )
     systems = [i["system"] for i in got["identifier"]]
     values = [i["value"] for i in got["identifier"]]
@@ -233,12 +217,10 @@ def test_patient_pro_fallback_and_empty_arrays(spark):
         " race string, hispanic string, sex string",
     )
     got = _one_json(
-        df,
         patient_resource(
-            F.col("site"), F.col("spid"), F.col("sessions"), F.col("hmrn"),
-            F.col("umrn"), F.col("proids"), F.col("promrns"),
-            F.col("race"), F.col("hispanic"), F.col("sex"),
-        ),
+            df, "site", "spid", "sessions", "hmrn", "umrn", "proids", "promrns",
+            "race", "hispanic", "sex",
+        )
     )
     values = [i["value"] for i in got["identifier"]]
     assert values == ["sp-2", "77", "M-1"]  # PRO fallback used (:410-435)

@@ -17,9 +17,11 @@ import json
 import re
 import threading
 from collections import Counter
+from functools import reduce
 from urllib.parse import parse_qs, quote, urlparse
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark.sources.fhir import (
@@ -135,6 +137,31 @@ def test_shards_fetch_on_separate_tasks(spark, mock_fhir):
     # 19 + 18 rows at page size 5: 4 pages per site, each GET served once
     assert len(_PagingHandler.gets) == 8
     assert set(_PagingHandler.gets.values()) == {1}
+
+
+def test_snapshot_union_keeps_one_task_per_url(spark, mock_fhir):
+    """The per-type frames of one snapshot walk their chains concurrently:
+    a union of one-URL frames keeps one non-empty partition per URL (under
+    ``spark.sql.unionOutputPartitioning`` a union of frames that each
+    report ``SinglePartition`` runs as one task), and a sharded frame keeps
+    one partition per shard, an empty shard included, up to a thousand."""
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    serial = snapshot_via_http(spark, mock_fhir, "Condition", page_size=5)
+    union = reduce(DataFrame.unionByName, [
+        snapshot_via_http(spark, mock_fhir, "Condition", page_size=5, shards=[f"site={s}"])
+        for s in ("a", "b")
+    ])
+    assert [len(p) for p in union.rdd.glom().collect()] == [18, 19]
+    assert rows(union) == rows(serial)
+    three = snapshot_via_http(
+        spark, mock_fhir, "Condition", page_size=5, shards=["site=a", "site=b", "site=c"]
+    )
+    assert three.rdd.getNumPartitions() == 3
+    assert rows(three) == rows(serial)
+    many = [f"site={i}" for i in range(1000)]  # planned only, never fetched
+    assert snapshot_via_http(spark, mock_fhir, "Condition", shards=many).rdd.getNumPartitions() == 1000
 
 
 def test_pagination_walks_all_next_links(spark, mock_fhir):

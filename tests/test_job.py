@@ -524,3 +524,56 @@ def test_run_job_plan_shape(spark):
     assert two["exchange"] <= one["exchange"]
     assert two["broadcast"] <= one["broadcast"]
     assert 0 < two["broadcast"] < two["exchange"]
+
+
+def _all_resources_job(spark):
+    settings = parse_settings(SETTINGS_PATCNT_2)
+    job = JobSpec(sites=("uw", "ucsd"), db_name="cnics_prod",
+                  resources=("conditions", "medicationrequests", "observations"))
+    t = {**_shared_tables(spark), "Snapshot": spark.createDataFrame(SNAPSHOT_ROWS, FHIR_SNAPSHOT)}
+    return lambda: jobmod.run_job(spark, job, settings, lambda site: t.__getitem__)
+
+
+def test_run_job_build_py4j_commands(spark, monkeypatch):
+    """Plan-build cost gate: building a FHIR job's plan is a fixed per-run
+    cost paid in py4j round trips (one per DataFrame/Column call with
+    call-site capture off, two to three with it on). Counts every command
+    except py4j's ``m`` object-release messages, whose number follows
+    Python GC timing. This build measured 1,860 commands: 3,225 with the
+    resource skeletons built from Column calls, 8,145 with call-site
+    capture on as well. The ceiling is the measured count plus ~7%."""
+    from py4j.clientserver import ClientServerConnection
+
+    build = _all_resources_job(spark)
+    build()  # first build: one-time class and function lookups
+    sent = []
+    original = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            sent.append(command)
+        return original(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    build()
+    monkeypatch.undo()
+    assert len(sent) <= 2_000, f"{len(sent)} py4j commands to build one job's plan"
+
+
+def test_run_job_plan_reuses_compiled_classes(spark):
+    """A second execution of a plan compiles no class: the session's
+    codegen cache (``session.build_session``) holds every class one
+    execution generates. At Spark's default of 100 entries each is evicted
+    before its next use, and every execution of this plan recompiled
+    ~135. AQE is off so that both executions run one physical plan: under
+    AQE the final plan depends on which query stages finish first, and an
+    alternate plan compiles its own classes once."""
+    from cnics_to_fhir_spark.session import session_conf
+
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    with session_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        plan = _all_resources_job(spark)()
+        plan.write.format("noop").mode("overwrite").save()
+        before = compilations.getCount()
+        plan.write.format("noop").mode("overwrite").save()
+        assert compilations.getCount() - before == 0

@@ -16,8 +16,8 @@ comparison.
 Without ``--trace`` both sides run untraced (``--trace 0``) and the metrics
 are ``wall_s`` and ``setup_s``. With ``--trace`` both run traced
 (``--trace 1``) and the metrics are the iteration wall time and the layer
-counts that do not drift with the host: Spark jobs and stages, plus the
-plan-build and write-window seconds.
+counts that do not drift with the host: Spark jobs, stages and tasks, plus
+the snapshot, plan-build and write-window seconds.
 """
 
 from __future__ import annotations
@@ -36,7 +36,8 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 METRICS = ("wall_s", "setup_s")
-TRACE_METRICS = ("trace.wall_s", "spark.jobs", "spark.stages", "plan_build.s", "write.window_s")
+TRACE_METRICS = ("trace.wall_s", "spark.jobs", "spark.stages", "spark.tasks", "snapshot.s",
+                 "plan_build.s", "write.window_s")
 
 
 def run_bench(tree: str, workload: str, seed: int, seconds: float,
