@@ -8,8 +8,7 @@ than plumbing. Strategy:
 - **Pure-stdlib PNG codec otherwise** — zlib + struct are always present,
   and non-interlaced 8-bit PNG (grey/RGB/RGBA, the overwhelming majority
   of ML-corpus thumbnails) decodes in ~60 lines. Encoder included so
-  resize can re-encode and tests can build fixtures without binary
-  checkins.
+  catalog entries and tests can build fixtures without binary checkins.
 - **Pure-stdlib WAV parse** — header + PCM frames via ``wave``/``struct``.
 
 Everything here runs inside Arrow-batched mapInPandas workers; per-image
@@ -147,18 +146,6 @@ def decode_image(data: bytes) -> tuple[int, int, int, bytes]:
         "decoding non-PNG images requires the optional 'Pillow' package; "
         "PNG decodes via the built-in stdlib codec"
     )
-
-
-def resize_nearest(
-    pixels: bytes, width: int, height: int, channels: int, new_w: int, new_h: int
-) -> bytes:
-    """Nearest-neighbor resample on raw 8-bit pixels (numpy, vectorized)."""
-    import numpy as np
-
-    arr = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width, channels)
-    ys = (np.arange(new_h) * height) // new_h
-    xs = (np.arange(new_w) * width) // new_w
-    return arr[ys][:, xs].tobytes()
 
 
 def decode_wav(data: bytes) -> tuple[int, int, int, int, bytes]:

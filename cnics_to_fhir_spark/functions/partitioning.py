@@ -19,9 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_min_parallelism(df: DataFrame, *key_cols: str, target: int | None = None) -> DataFrame:
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
+def ensure_min_parallelism(df: DataFrame, *key_cols: str) -> DataFrame:
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, *key_cols) if key_cols else df.repartition(target)

@@ -23,8 +23,11 @@ Replay safety: PUT/DELETE replay safely, and every create is conditional
 a replayed transaction — a Spark task retry, or an envelope retry after a
 committed transaction's response was lost — re-creates nothing that landed.
 
-Counters (A5, :309-320) come back through Spark accumulators and — exactly —
-from ``action_counts`` over the plan itself.
+Counters (A5, :309-320) come back through Spark accumulators, and they are
+exact: Spark applies an action's accumulator updates once per successful
+task and drops those of a failed attempt, so a retried task counts each
+entry once, from the attempt that succeeded.  ``action_counts`` over the
+plan gives the same per-action numbers without a write.
 """
 
 from __future__ import annotations
@@ -212,11 +215,12 @@ def write_action_plan(plan: DataFrame, cfg: WriterConfig) -> dict[str, int]:
     Retry/idempotence: a failed POST is retried whole; PUT/DELETE replay
     safely and creates are conditional on the resource's identifier system
     and value, so a replayed transaction re-creates nothing.
-    Accumulator caveat: counters are task-lifetime totals, so a retried
-    task re-counts its successful entries; treat counts as at-least-once
-    telemetry (the authoritative per-action counts come from
-    ``action_counts`` over the plan itself).
-    Returns {action: count} gathered via accumulators.
+    Returns {action: count} gathered via accumulators.  The counts are
+    exact: Spark applies the updates of the successful attempt of each
+    task only.  ``failed`` is 0 in every returned dict — the updates of a
+    failing attempt are dropped, and a write whose retries run out raises
+    instead of returning.  Failures reach no record yet; ROADMAP
+    Direction 1 replaces the accumulators with per-entry outcome rows.
     """
     sc = plan.sparkSession.sparkContext
     counters = {

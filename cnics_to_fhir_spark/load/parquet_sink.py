@@ -15,7 +15,7 @@ kill the driver's file listing. High-cardinality co-location belongs to
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -95,13 +95,6 @@ def write_partitioned(
         .partitionBy(*partition_cols)
         .parquet(path)
     )
-
-
-def read_pruned(spark: SparkSession, path: str) -> DataFrame:
-    """Read back a partitioned dataset; filters on partition columns become
-    PartitionFilters (directory skip), filters on sort columns hit row-group
-    min/max stats via PushedFilters."""
-    return spark.read.parquet(path)
 
 
 _MATERIALIZE_SEQ = iter(range(1, 1 << 30))

@@ -21,10 +21,10 @@ shape a lakehouse lands on:
   fanned out on a thread pool.  A merge touching 1,000 partitions costs
   ~3 jobs + 1,000 concurrent renames, not ~5,000 sequential driver jobs.
 - **Crash-safe swaps**: each rewritten partition lands via the
-  rename-aside swap (maintenance._swap_aside) and inherits its recovery
-  story (recover_compaction_leftovers rolls back or finishes interrupted
-  swaps; the shared ``__merging`` scratch root is judged against the table
-  root, which a mid-batch crash always leaves live partition-by-partition).
+  rename-aside swap (``_swap_aside``); ``recover_merge_swap`` rolls back or
+  finishes interrupted swaps (the shared ``__merging`` scratch root is
+  judged against the table root, which a mid-batch crash always leaves
+  live partition-by-partition).
 - **Same honesty rules as the HTTP path**: unknown action labels and
   inserts of a key already in its partition fail loudly; returned counts
   state exactly what was applied and what was skipped (a delete/update
@@ -32,9 +32,9 @@ shape a lakehouse lands on:
   never silently dropped).
 
 NOT a transaction log: concurrent WRITERS to the same partition race, as
-everywhere else in the plain-parquet layer — the module docstring of
-load/maintenance.py states the same boundary.  Readers are safe up to the
-single metadata-op window of each partition swap.
+everywhere else in the plain-parquet layer — a production deployment puts
+a table format (Iceberg/Delta) in front of this.  Readers are safe up to
+the single metadata-op window of each partition swap.
 """
 
 from __future__ import annotations
@@ -48,6 +48,29 @@ from cnics_to_fhir_spark.load.versioned_table import cluster_for_write
 from cnics_to_fhir_spark.operators.merge import apply_merge
 
 _SWAP_THREADS = 16
+
+
+def _swap_aside(fs, jvm, tmp: str, dest: str, prev: str) -> None:
+    """Rename-aside swap: ``dest -> prev``, ``tmp -> dest``, delete
+    ``prev``.  Nothing is deleted until the new tree is live at ``dest``,
+    so a crash at ANY point leaves the full old data at ``dest`` or
+    ``prev`` and/or the full new data at ``tmp`` — always recoverable,
+    never stranded.  ``dest`` is only absent for the instant between the
+    two renames — both pure metadata operations."""
+    p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
+    p_dest = jvm.org.apache.hadoop.fs.Path(dest)
+    p_prev = jvm.org.apache.hadoop.fs.Path(prev)
+    # stale prev from a run that crashed after its new tree went live but
+    # before cleanup: finish that cleanup now so the aside-rename can land
+    if fs.exists(p_prev) and fs.exists(p_dest):
+        fs.delete(p_prev, True)
+    if fs.exists(p_dest) and not fs.rename(p_dest, p_prev):
+        raise IOError(f"merge swap failed: rename-aside {dest} -> {prev}")
+    if not fs.rename(p_tmp, p_dest):
+        # roll the old tree back into place so dest never dangles
+        fs.rename(p_prev, p_dest)
+        raise IOError(f"merge swap failed: rename {tmp} -> {dest}")
+    fs.delete(p_prev, True)
 
 
 def merge_into_table(
@@ -71,8 +94,8 @@ def merge_into_table(
     many files (rows are spread across them by key hash); without it each
     rewritten partition lands as ONE file (the rewrite repartitions on the
     partition column, so a task owns whole partitions — no 32-task-file
-    fragmentation for compaction to undo).  Size it to partition_bytes /
-    target_file_bytes at scale.
+    fragmentation).  Size it to partition_bytes / target_file_bytes at
+    scale.
 
     ``probe_via_listing`` replaces the per-touched-partition ``fs.exists``
     probe (one filesystem RPC per touched partition — fine for the
@@ -93,8 +116,6 @@ def merge_into_table(
 
     def hpath(s: str):
         return jvm.org.apache.hadoop.fs.Path(s)
-
-    from cnics_to_fhir_spark.load.maintenance import _swap_aside
 
     table = table.rstrip("/")
     payload_cols = [
@@ -169,7 +190,7 @@ def merge_into_table(
 
     # ONE partitioned write into a shared scratch root (a sibling of the
     # table, so partition discovery on the table never sees it; its name
-    # maps back to the table root for recover_compaction_leftovers).  The
+    # maps back to the table root for recover_merge_swap).  The
     # repartition keys whole partitions (plus a bounded key-hash salt when
     # files_per_partition is set) to one task each — no small-file spray.
     scratch_root = f"{table}__merging"
@@ -204,3 +225,66 @@ def merge_into_table(
         list(ex.map(_go_live, sorted(parts, key=str)))
     fs.delete(hpath(scratch_root), True)
     return counts
+
+
+def recover_merge_swap(spark: SparkSession, table: str) -> dict[str, list[str]]:
+    """Crash recovery + GC for the leftovers of ``merge_into_table``'s
+    partition swaps.
+
+    ``_swap_aside`` guarantees a crash never LOSES bytes, but it can leave
+    them parked: ``{table}__prev_{col}={val}`` trees (crash after the new
+    partition went live but before cleanup — or mid-swap, with the
+    partition missing at its path) and the ``{table}__merging`` scratch
+    root (crash before or during the go-live step).  This sweep finishes
+    what the crashed run could not, in the only safe order:
+
+    - ``__prev_…`` with the partition PRESENT → the new tree is live; the
+      parked old tree is garbage → delete it (finishing the crashed run's
+      last step).
+    - ``__prev_…`` with the partition ABSENT → the crash hit between the
+      two renames; the parked tree IS the partition → rename it back
+      (rollback, zero data loss).
+    - ``__merging`` with the table root present → every partition is live
+      (old or new) at its path; the scratch is garbage → delete it.  With
+      the table root absent (a first merge that crashed before the root
+      was created) the scratch is the only copy: it is NOT deleted —
+      reported under ``kept`` for operator attention instead.
+
+    Run it before the next merge into the same table — never concurrently
+    with one (it would mistake a live run's scratch for a leftover).
+    Returns {rolled_back, cleaned, kept} path lists so the caller's logs
+    state exactly what happened."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    base = table.rstrip("/")
+    p_base = jvm.org.apache.hadoop.fs.Path(base)
+    fs = p_base.getFileSystem(conf)
+    prev_prefix = p_base.getName() + "__prev_"
+    p_scratch = jvm.org.apache.hadoop.fs.Path(f"{base}__merging")
+
+    report: dict[str, list[str]] = {"rolled_back": [], "cleaned": [], "kept": []}
+    if not fs.exists(p_base.getParent()):
+        return report
+    # all rollbacks FIRST: a mid-swap crash leaves both a parked partition
+    # and the scratch root, and the scratch's fate (garbage vs only-copy)
+    # depends on the rollback having restored the table before it is judged
+    for status in fs.listStatus(p_base.getParent()):
+        p = status.getPath()
+        if not p.getName().startswith(prev_prefix):
+            continue
+        dest = f"{base}/{p.getName()[len(prev_prefix):]}"
+        p_dest = jvm.org.apache.hadoop.fs.Path(dest)
+        if fs.exists(p_dest):
+            fs.delete(p, True)
+            report["cleaned"].append(p.toString())
+        else:
+            if not fs.rename(p, p_dest):
+                raise IOError(f"recovery rollback failed: {p} -> {dest}")
+            report["rolled_back"].append(dest)
+    if fs.exists(p_scratch):
+        if fs.exists(p_base):
+            fs.delete(p_scratch, True)
+            report["cleaned"].append(fs.makeQualified(p_scratch).toString())
+        else:
+            report["kept"].append(fs.makeQualified(p_scratch).toString())
+    return report

@@ -186,7 +186,7 @@ def _write_commit(
     version: int,
     partition_col: str,
     files_per_partition: int | None,
-    salt_col: str | None = None,
+    salt_col: str | None,
 ) -> list[dict]:
     commit_dir = os.path.join(table, DATA_DIR, f"commit-{version:08d}")
     df = cluster_for_write(df, partition_col, files_per_partition, salt_col)
@@ -215,15 +215,11 @@ def create_table(
     table: str,
     df: DataFrame,
     partition_col: str,
-    files_per_partition: int | None = None,
-    salt_col: str | None = None,
 ) -> int:
-    """Version 0: the seed snapshot.  ``files_per_partition`` bounds the
-    seed commit's files per partition (requires ``salt_col`` — the column
-    whose hash spreads rows across the files)."""
+    """Version 0: the seed snapshot, one file per partition."""
     if current_version(table) is not None:
         raise ValueError(f"versioned table already exists at {table}")
-    entries = _write_commit(df, table, 0, partition_col, files_per_partition, salt_col)
+    entries = _write_commit(df, table, 0, partition_col, None, None)
     _write_manifest(
         table,
         0,
@@ -327,7 +323,7 @@ def merge_versioned(
     counts.update(partitions_rewritten=len(parts), version=version)
 
     new_entries = _write_commit(
-        merged, table, version, partition_col, files_per_partition, salt_col=key_col
+        merged, table, version, partition_col, files_per_partition, key_col
     )
     _write_manifest(
         table,
@@ -343,36 +339,26 @@ def merge_versioned(
     return counts
 
 
-def compact_versioned(
-    spark: SparkSession,
-    table: str,
-    files_per_partition: int = 1,
-    key_col: str | None = None,
-) -> dict[str, int]:
+def compact_versioned(spark: SparkSession, table: str) -> dict[str, int]:
     """Small-file compaction as a NEW VERSION — the maintenance op every
     log-structured table needs once merges with ``files_per_partition``
     have fragmented partitions: partitions whose manifest lists more than
-    ``files_per_partition`` files are rewritten into bounded files in a
-    fresh commit; already-compact partitions carry their entries forward
-    untouched.  Because compaction is just another version, readers keep
-    snapshot isolation through it, prior versions stay time-travelable,
+    one file are rewritten into one file each in a fresh commit;
+    already-compact partitions carry their entries forward untouched.
+    Because compaction is just another version, readers keep snapshot
+    isolation through it, prior versions stay time-travelable,
     and the change data feed between the pre- and post-compaction
     versions is EMPTY by row content (read_changes drops identical
     payloads) — compaction moves bytes, never data.  Old fragments
     become unreferenced once the pre-compaction manifests age out and
     vacuum sweeps them.
 
-    ``key_col`` is required for ``files_per_partition > 1`` (its hash
-    spreads rows across the bounded files).  Returns counts; when nothing
-    is fragmented, returns without creating a version.
+    Returns counts; when nothing is fragmented, returns without creating
+    a version.
 
     Scale shape: reads ONLY fragmented partitions' files (manifest-
     scoped), one partitioned write, O(files) driver metadata — the
     table is never scanned to decide what to compact."""
-    if files_per_partition < 1:
-        raise ValueError("files_per_partition must be >= 1")
-    if files_per_partition > 1 and key_col is None:
-        raise ValueError("files_per_partition > 1 requires key_col for salting")
     parent = current_version(table)
     if parent is None:
         raise ValueError(f"no versioned table at {table}")
@@ -381,7 +367,7 @@ def compact_versioned(
     by_part: dict[str, list[dict]] = {}
     for e in man["entries"]:
         by_part.setdefault(e["partition"], []).append(e)
-    frag = {p: es for p, es in by_part.items() if len(es) > files_per_partition}
+    frag = {p: es for p, es in by_part.items() if len(es) > 1}
     if not frag:
         return {
             "version": parent, "partitions_compacted": 0,
@@ -390,11 +376,7 @@ def compact_versioned(
     touched_paths = [e["path"] for es in frag.values() for e in es]
     df = _read_entry_paths(spark, table, sorted(touched_paths))
     version = parent + 1
-    new_entries = _write_commit(
-        df, table, version, partition_col,
-        files_per_partition if files_per_partition > 1 else None,
-        salt_col=key_col,
-    )
+    new_entries = _write_commit(df, table, version, partition_col, None, None)
     carried = [
         e for p, es in by_part.items() if p not in frag for e in es
     ]

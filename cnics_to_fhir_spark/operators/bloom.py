@@ -115,7 +115,6 @@ def bloom_semi_join(
     fact_key: str,
     dim_key: str | None = None,
     m_bits: int = 1 << 16,
-    k: int = 3,
 ) -> DataFrame:
     """Semi-join ``fact`` to ``dim_keys`` with a Bloom pre-filter on the scan.
 
@@ -126,8 +125,8 @@ def bloom_semi_join(
     """
     dim_key = dim_key or fact_key
     keys = dim_keys.select(F.col(dim_key).alias("__k")).dropDuplicates()
-    bitmap = build_bloom(keys, "__k", m_bits, k)
-    pruned = fact.filter(bloom_probe(F.col(fact_key), bitmap, m_bits, k))
+    bitmap = build_bloom(keys, "__k", m_bits)
+    pruned = fact.filter(bloom_probe(F.col(fact_key), bitmap, m_bits))
     return pruned.join(
         keys.withColumnRenamed("__k", fact_key), on=fact_key, how="left_semi"
     )

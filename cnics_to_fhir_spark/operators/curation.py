@@ -176,7 +176,6 @@ def domain_cap(
     cap: int,
     domain_col: str = "source",
     id_col: str = "doc_id",
-    seed: int = 73,
 ) -> DataFrame:
     """Exact per-domain document cap (C4/RefinedWeb-style head-domain
     suppression): keep at most ``cap`` docs per domain, selected
@@ -207,7 +206,7 @@ def domain_cap(
     from cnics_to_fhir_spark.operators.dedup import portable_hash
     from pyspark.sql.window import Window
 
-    h = portable_hash(F.col(id_col).cast("string"), seed=seed)
+    h = portable_hash(F.col(id_col).cast("string"), seed=73)
     rows = df.select(
         F.col(id_col).alias("__id"),
         F.col(domain_col).alias("__dom"),
@@ -320,7 +319,6 @@ def l_diversify(
     l: int,  # noqa: E741 — the literature's name
     id_col: str = "doc_id",
     token: str = "*",
-    broadcast_counts: bool = True,
 ) -> DataFrame:
     """l-diversity — the homogeneity-attack gate k-anonymity misses: a
     quasi-identifier group can be large (perfectly k-anonymous) while
@@ -340,18 +338,17 @@ def l_diversify(
 
     Scale shape: dc04's exactly — one map-side-combinable groupBy builds
     (quasi tuple → n_group, n_distinct sensitive), each row then takes a
-    lookup join on ITS tuple (broadcast at dimension cardinality;
-    ``broadcast_counts=False`` shuffles both sides once on the tuple for
-    high-cardinality quasi keys).  Null-safe join equality so NULL quasi
-    groups match their count row (dc04's invariant: no rows vanish)."""
+    lookup join on ITS tuple, broadcast at dimension cardinality.
+    Null-safe join equality so NULL quasi groups match their count row
+    (dc04's invariant: no rows vanish)."""
     if l < 1:
         raise ValueError(f"l must be >= 1, got {l}")
-    counts = df.groupBy(*quasi_cols).agg(
-        F.count(F.lit(1)).cast("long").alias("n_group"),
-        F.countDistinct(sensitive_col).cast("long").alias("n_sensitive"),
+    counts = F.broadcast(
+        df.groupBy(*quasi_cols).agg(
+            F.count(F.lit(1)).cast("long").alias("n_group"),
+            F.countDistinct(sensitive_col).cast("long").alias("n_sensitive"),
+        )
     )
-    if broadcast_counts:
-        counts = F.broadcast(counts)
     left = df.alias("__l")
     right = counts.alias("__r")
     cond = None

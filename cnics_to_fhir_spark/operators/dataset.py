@@ -94,7 +94,6 @@ def pack_chunked(
 
 def curate_corpus(
     df: DataFrame,
-    budget: int = 256,
     quality_min: float = 0.65,
     rates: dict[str, str] | None = None,
     default_rate: str = "20",
@@ -104,7 +103,8 @@ def curate_corpus(
 ) -> DataFrame:
     """End-to-end corpus curation in ONE DataFrame DAG: exact dedup (keep
     the lowest id per normalized-text fingerprint) → quality gate →
-    stratified language mixing → chunked sequence packing.
+    stratified language mixing → chunked sequence packing into 256-token
+    bins.
 
     Shuffle budget: one hash partition on the fingerprint (dedup window) and
     one on the shard key (packing window); the quality gate and the sampler
@@ -128,7 +128,7 @@ def curate_corpus(
     )
     kept = stratified_sample(kept, rates, shard_col, id_col, default_rate)
     return pack_chunked(
-        kept, budget, text_col=text_col, id_col=id_col, shard_col=shard_col,
+        kept, 256, text_col=text_col, id_col=id_col, shard_col=shard_col,
         extra_cols=("quality",),
     )
 
@@ -236,11 +236,10 @@ def weighted_priority_sample(
     k: int,
     weight: "F.Column | None" = None,
     key_col: str = "doc_id",
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Deterministic weighted bottom-k sample (priority sampling).
 
-    Each row gets an integer priority ``(hash32 * scale) div weight`` where
+    Each row gets an integer priority ``(hash32 * 10⁶) div weight`` where
     ``hash32`` is the first 8 hex chars of ``md5(key)`` as an integer —
     a fixed uniform draw in [0, 2^32). Dividing by the weight shrinks the
     priority of heavy rows, so the global bottom-k by (priority, key) is a
@@ -250,7 +249,7 @@ def weighted_priority_sample(
 
     Scale shape: priorities are per-row scan expressions; the bottom-k is
     TakeOrderedAndProject — per-partition top-k heaps merged on the driver,
-    never a global sort. With hash32 < 2^32 and scale = 1e6 the product
+    never a global sort. With hash32 < 2^32 the product
     stays < 2^52, well inside BIGINT.
 
     ``weight`` defaults to the document's token count (longer docs more
@@ -265,23 +264,23 @@ def weighted_priority_sample(
     )
     # integer `div` keeps both engines exact; `/` would widen to double.
     prepared = prepared.select(
-        "*", F.expr(f"(__h32 * {scale}) div weight").alias("priority")
+        "*", F.expr("(__h32 * 1000000) div weight").alias("priority")
     )
     return prepared.orderBy("priority", key_col).limit(k).drop("__h32")
 
 
-def deterministic_shuffle(df: DataFrame, key_col: str, n_hex: int = 2) -> DataFrame:
+def deterministic_shuffle(df: DataFrame, key_col: str) -> DataFrame:
     """Reproducible pseudo-random training order: ``bucket`` = first
-    ``n_hex`` md5 hex chars of the key (256 range partitions at the
-    default), ``rank`` = position within the bucket by full md5 (key as
-    tiebreak). Global order is (bucket, rank); each bucket sorts in
-    parallel — no single-task total-order window.
+    2 md5 hex chars of the key (256 range partitions), ``rank`` =
+    position within the bucket by full md5 (key as tiebreak). Global
+    order is (bucket, rank); each bucket sorts in parallel — no
+    single-task total-order window.
     """
     h = F.md5(F.col(key_col).cast("string"))
     w = Window.partitionBy("bucket").orderBy("h", key_col)
     return (
         df.withColumn("h", h)
-        .withColumn("bucket", F.substring(F.col("h"), 1, n_hex))
+        .withColumn("bucket", F.substring(F.col("h"), 1, 2))
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .drop("h")
     )
@@ -290,12 +289,10 @@ def deterministic_shuffle(df: DataFrame, key_col: str, n_hex: int = 2) -> DataFr
 def hash_split(
     df: DataFrame,
     key_col: str = "doc_id",
-    train_pct: int = 90,
-    val_pct: int = 5,
 ) -> DataFrame:
-    """Deterministic train/val/test assignment: ``bucket`` = engine-portable
-    60-bit md5 hash of the key, mod 100; train < train_pct ≤ val <
-    train_pct+val_pct ≤ test. Pure per-row arithmetic — no shuffle, no
+    """Deterministic 90/5/5 train/val/test assignment: ``bucket`` =
+    engine-portable 60-bit md5 hash of the key, mod 100; train < 90 ≤
+    val < 95 ≤ test. Pure per-row arithmetic — no shuffle, no
     sampling state, stable across reruns/engines/partitionings, and any
     future doc keeps landing in the same split (the property leakage-safe
     eval demands). Input columns pass through; ``bucket``/``split`` append. DuckDB mirror of the hash:
@@ -306,8 +303,8 @@ def hash_split(
     return df.select(
         "*",
         bucket.cast("long").alias("bucket"),
-        F.when(bucket < train_pct, "train")
-        .when(bucket < train_pct + val_pct, "val")
+        F.when(bucket < 90, "train")
+        .when(bucket < 95, "val")
         .otherwise("test")
         .alias("split"),
     )
@@ -340,7 +337,6 @@ def epoch_upsample(
     weights: dict[str, int],
     source_col: str = "source",
     key_col: str = "doc_id",
-    default_weight: int = 100,
 ) -> DataFrame:
     """Source-weighted mixture with epochs: replicate each document
     ``weight/100`` times (weights are integer HUNDREDTHS — 250 ⇒ 2.5
@@ -351,8 +347,9 @@ def epoch_upsample(
 
     Scale shape: pure per-row scan arithmetic + explode (``_explode_epochs``)
     — NO shuffle, no collected state; the weights map is a literal CASE in
-    the plan. Output: input columns + (n_epochs, epoch)."""
-    w = F.lit(default_weight)
+    the plan; a source not in ``weights`` gets 100 (one epoch). Output:
+    input columns + (n_epochs, epoch)."""
+    w = F.lit(100)
     for src, wt in weights.items():
         w = F.when(F.col(source_col) == src, F.lit(int(wt))).otherwise(w)
     return _explode_epochs(df, w, key_col)
@@ -548,11 +545,13 @@ def global_ntile(
     return ranked.withColumn(bucket_col, bucket.cast("long")).drop("__rank")
 
 
+_SPLIT_BOUNDS = ("c0", "e0")
+
+
 def leakage_safe_split(
     df: DataFrame,
     dup_pairs: DataFrame,
     id_col: str = "doc_id",
-    bounds: tuple[str, str] = ("c0", "e0"),
 ) -> DataFrame:
     """Train/val/test assignment that near-duplicates CANNOT straddle —
     the split-leakage guard a plain hash split (ds07) lacks: if two
@@ -563,7 +562,7 @@ def leakage_safe_split(
     representative's md5 bucket, singletons are their own representative —
     so by construction every edge's endpoints share a split.
 
-    ``bounds`` are 2-hex-digit md5-prefix boundaries (default: 75% train /
+    ``_SPLIT_BOUNDS`` are 2-hex-digit md5-prefix boundaries (75% train /
     12.5% val / 12.5% test); lowercase-hex lexicographic order equals
     numeric order, so the predicate replays engine-portably (ds01's
     convention).
@@ -586,7 +585,7 @@ def leakage_safe_split(
         )
     )
     bucket = _md5_prefix(F.col("rep"), 2)
-    lo, hi = bounds
+    lo, hi = _SPLIT_BOUNDS
     return assign.select(
         F.col("__id").alias(id_col),
         "rep",
@@ -605,7 +604,6 @@ def incremental_split_update(
     k: int = 3,
     block_words: int = 4,
     threshold: float = 0.5,
-    bounds: tuple[str, str] = ("c0", "e0"),
 ) -> DataFrame:
     """Split-stable incremental corpus update — the operator under
     e2e11: ``corpus`` already carries a leakage-safe split (recomputed
@@ -643,7 +641,7 @@ def incremental_split_update(
             k=k, block_words=block_words, threshold=threshold,
         )
         return leakage_safe_split(
-            corpus, corpus_pairs, id_col=id_col, bounds=bounds
+            corpus, corpus_pairs, id_col=id_col
         ).localCheckpoint(eager=True)
 
     def _ingest_pairs():
@@ -714,7 +712,7 @@ def incremental_split_update(
         )
     )
     bucket = F.substring(F.md5(F.col("urep").cast("string")), 1, 2)
-    lo, hi = bounds
+    lo, hi = _SPLIT_BOUNDS
     fresh_split = (
         F.when(bucket < F.lit(lo), F.lit("train"))
         .when(bucket < F.lit(hi), F.lit("val"))

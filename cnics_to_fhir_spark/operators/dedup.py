@@ -617,7 +617,6 @@ def embedding_near_dup_pairs(
     block_col: str = "label",
     threshold: float = 0.95,
     target_cell_rows: int | None = 256,
-    max_refine_bits: int = 8,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold, IVF-style:
     the self-join is blocked on a coarse cluster id (``block_col`` — a
@@ -657,7 +656,7 @@ def embedding_near_dup_pairs(
             F.count(F.lit(1)).alias("n"), F.countDistinct(block_col).alias("c")
         ).first()
         bits = choose_refine_bits(
-            stats["n"], stats["c"], target_cell_rows, max_refine_bits
+            stats["n"], stats["c"], target_cell_rows, max_bits=8
         )
         if bits > 0:
             cell = F.col(block_col).cast("long") * 256
@@ -698,7 +697,10 @@ def embedding_near_dup_pairs(
 # Duplicate clusters (transitive closure over near-dup pairs)
 # ---------------------------------------------------------------------------
 
-def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+_PROPAGATION_MAX_ITERS = 20
+
+
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over near-dup pairs: every doc that appears in a
     pair gets its component's minimum id as ``cluster_rep`` — the canonical
     keeper; drop everything where doc_id != cluster_rep.
@@ -717,7 +719,7 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
     )
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    for _ in range(max_iters):
+    for _ in range(_PROPAGATION_MAX_ITERS):
         nbr = (
             edges.join(
                 labels.select(F.col("id").alias("dst"), F.col("label").alias("dst_label")),
@@ -753,7 +755,9 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         labels = new_labels
         if changed == 0:
             return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_rep"))
-    raise RuntimeError(f"label propagation did not converge in {max_iters} iterations")
+    raise RuntimeError(
+        f"label propagation did not converge in {_PROPAGATION_MAX_ITERS} iterations"
+    )
 
 
 def semantic_dedup(
@@ -874,17 +878,19 @@ def duplicated_spans(
 # Containment near-dup (asymmetric: small doc inside big doc)
 # ---------------------------------------------------------------------------
 
+_CONTAINMENT_K = 4
+_CONTAINMENT_MAX_DF = 10
+
+
 def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 4,
-    max_df: int = 10,
     threshold: float = 0.5,
     with_cap_count: bool = False,
 ) -> DataFrame:
     """Asymmetric containment dedup: C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|
-    over distinct k-word shingle sets — the measure that catches a small
+    over distinct 4-word shingle sets — the measure that catches a small
     document quoted wholesale inside a big one, which Jaccard dilutes
     below any usable threshold (and which real decontamination pipelines
     therefore score with containment, not Jaccard).
@@ -893,14 +899,14 @@ def containment_pairs(
 
     Scale shape — inverted-index blocking with a document-frequency cap:
     candidate pairs come from sharing a shingle whose doc-freq is in
-    [2, max_df], so candidate volume is Σ_g df(g)² over capped shingles
-    (bounded by max_df · index size), never all-pairs; the Zipf-hot
+    [2, 10], so candidate volume is Σ_g df(g)² over capped shingles
+    (bounded by 10 · index size), never all-pairs; the Zipf-hot
     shingles that would explode the self-join are excluded.  Recall
     contract: a contained doc shares EVERY one of its shingles with its
     container, so a pair is missed only when all its shared shingles are
     corpus-hot — pure-boilerplate content, exactly what dd08 removes
     upstream.  The shingle-set rejoin ships arrays only for surviving
-    candidates.  Docs shorter than ``k`` words have no k-shingle and are
+    candidates.  Docs shorter than 4 words have no 4-shingle and are
     excluded from both sides of the measure.
 
     No-silent-caps accounting: with ``with_cap_count=True`` every output
@@ -908,23 +914,23 @@ def containment_pairs(
     the df-cap excluded on THIS run (broadcast 1-row scalar; costs one
     extra shingle scan + tiny agg, which is why it is opt-in)."""
     df = ensure_min_parallelism(df, id_col)
-    sh = df.filter(F.size(F.split(F.col(text_col), " ")) >= k).select(
+    sh = df.filter(F.size(F.split(F.col(text_col), " ")) >= _CONTAINMENT_K).select(
         F.col(id_col).alias("id"),
-        F.array_distinct(word_shingles(F.col(text_col), k)).alias("s"),
+        F.array_distinct(word_shingles(F.col(text_col), _CONTAINMENT_K)).alias("s"),
     )
     # explode_outer, not explode: plain explode lets Catalyst infer
     # `isnotnull(s) AND size(s) > 0` and push the full shingle expression
     # below the min-parallelism exchange, where it evaluates (twice) inside
     # the scan stage — 1 task for a single-file input, serializing the
     # heaviest projection in the query.  `s` is never null/empty here
-    # (>= k words guarantees >= 1 shingle), so the outer variant plus an
+    # (>= 4 words guarantees >= 1 shingle), so the outer variant plus an
     # explicit null guard is row-identical while the shingle projection
     # stays on the repartitioned side of the exchange.
     inv = sh.select("id", F.explode_outer("s").alias("g")).filter(
         F.col("g").isNotNull()
     )
     dfreq = inv.groupBy("g").agg(F.count(F.lit(1)).alias("df_"))
-    rare = dfreq.filter((F.col("df_") >= 2) & (F.col("df_") <= max_df)).select("g")
+    rare = dfreq.filter((F.col("df_") >= 2) & (F.col("df_") <= _CONTAINMENT_MAX_DF)).select("g")
     idx = inv.join(rare, "g", "left_semi")
     cand = (
         idx.select(F.col("id").alias("id_a"), "g")
@@ -951,32 +957,9 @@ def containment_pairs(
         # consumers from one shuffle instead of two independent
         # shingle-scan + agg pipelines
         capped = dfreq.agg(
-            F.sum(F.when(F.col("df_") > max_df, 1).otherwise(0))
+            F.sum(F.when(F.col("df_") > _CONTAINMENT_MAX_DF, 1).otherwise(0))
             .cast("long")
             .alias("n_capped_shingles")
         )
         out = out.crossJoin(F.broadcast(capped))
     return out
-
-
-def plan_lsh_bands(threshold: float, num_hashes: int) -> tuple[int, int]:
-    """Pick (bands, rows) for MinHash-LSH from a target Jaccard threshold —
-    the S-curve planner: collision probability for similarity s is
-    ``1 - (1 - s^rows)^bands``, whose inflection sits near
-    ``(1/bands)^(1/rows)``; choose the divisor pair of ``num_hashes``
-    whose inflection lands closest to the target, biasing ties toward
-    MORE bands (recall over precision — missed dups cost a training run,
-    false candidates only cost a verify join).  Driver-side integer
-    arithmetic; feeds minhash_lsh_pairs(bands=...)."""
-    if not 0 < threshold < 1:
-        raise ValueError("threshold must be in (0, 1)")
-    best = None
-    for bands in range(1, num_hashes + 1):
-        if num_hashes % bands:
-            continue
-        rows = num_hashes // bands
-        inflection = (1.0 / bands) ** (1.0 / rows)
-        key = (abs(inflection - threshold), -bands)
-        if best is None or key < best[0]:
-            best = (key, bands, rows)
-    return best[1], best[2]

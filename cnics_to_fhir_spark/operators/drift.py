@@ -25,16 +25,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+_PSI_BINS = 10
+_SHIFT_QUANT = 1_000_000
+
 
 def psi_drift(
     df: DataFrame,
     value_col: str,
     group_col: str,
     baseline_col: str,
-    n_bins: int = 10,
 ) -> DataFrame:
     """PSI per ``group_col`` between the ``baseline_col``=true rows and the
-    rest.  Bins are ``n_bins`` equal-width slices of the BASELINE's
+    rest.  Bins are ``_PSI_BINS`` (10) equal-width slices of the BASELINE's
     [min, max] per group (comparison-side values clamp into the edge
     bins, which is where drift shows up).  → (group, n_base, n_new,
     psi_q) with psi_q in integer micro-units; groups with a degenerate
@@ -51,11 +53,11 @@ def psi_drift(
     # feed the same float ops in the same order; only the carrier of the
     # per-bin rows changed (array slots instead of joined rows).
     stats = base.groupBy(group_col).agg(F.min(v).alias("mn"), F.max(v).alias("mx"))
-    width = (F.col("mx") - F.col("mn")) / F.lit(n_bins)
+    width = (F.col("mx") - F.col("mn")) / F.lit(_PSI_BINS)
     bin_expr = F.when(F.col("mx") == F.col("mn"), F.lit(0)).otherwise(
         F.greatest(
             F.lit(0),
-            F.least(F.lit(n_bins - 1), F.floor((v - F.col("mn")) / width).cast("int")),
+            F.least(F.lit(_PSI_BINS - 1), F.floor((v - F.col("mn")) / width).cast("int")),
         )
     )
     percell = (
@@ -72,7 +74,7 @@ def psi_drift(
     grouped = percell.groupBy("grp").agg(
         F.collect_list(F.struct("b", "c1", "c2")).alias("cells")
     )
-    bins = F.sequence(F.lit(0), F.lit(n_bins - 1))
+    bins = F.sequence(F.lit(0), F.lit(_PSI_BINS - 1))
 
     def smoothed(field):
         # count of bin i on one side, add-one smoothed (missing bin -> 1),
@@ -107,8 +109,8 @@ def psi_drift(
 
     return withp.select(
         F.col("grp").alias(group_col),
-        (F.col("n1") - F.lit(n_bins)).alias("n_base"),
-        (F.col("n2") - F.lit(n_bins)).alias("n_new"),
+        (F.col("n1") - F.lit(_PSI_BINS)).alias("n_base"),
+        (F.col("n2") - F.lit(_PSI_BINS)).alias("n_new"),
         F.aggregate(
             F.zip_with(F.col("p1s"), F.col("p2s"), tq),
             F.lit(0).cast("long"),
@@ -310,18 +312,17 @@ def embedding_mean_shift(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     group_col: str = "label",
-    quant: int = 1_000_000,
 ) -> DataFrame:
     """Embedding-space drift between two corpus snapshots: per group, the
     component-wise shift between the mean vector of snapshot A (even ids)
     and snapshot B (odd ids) — the retraining trigger an embedding-backed
     pipeline watches (a centroid that moved means the encoder, the corpus,
     or both changed under the index).
-    → (group, n_a, n_b, linf_shift_q, l1_shift_q), shifts in 1/``quant``
-    units of embedding magnitude.
+    → (group, n_a, n_b, linf_shift_q, l1_shift_q), shifts in 1/``_SHIFT_QUANT``
+    (10⁶) units of embedding magnitude.
 
     Determinism: each component is quantized to an integer
-    floor(x·quant + 0.5) BEFORE any aggregation, so the per-(group, dim)
+    floor(x·_SHIFT_QUANT + 0.5) BEFORE any aggregation, so the per-(group, dim)
     sums are exact integers whatever the partition/evaluation order; the
     per-dim mean shift is the integer cross-multiplication
     |sa·cb − sb·ca| with ONE correctly-rounded float division, and the
@@ -343,7 +344,7 @@ def embedding_mean_shift(
         "grp",
         "is_a",
         "pos",
-        F.floor(F.col("x").cast("double") * quant + F.lit(0.5))
+        F.floor(F.col("x").cast("double") * _SHIFT_QUANT + F.lit(0.5))
         .cast("long")
         .alias("xq"),
     )
@@ -359,7 +360,7 @@ def embedding_mean_shift(
     # while floor division rounds toward −∞ — they disagree on negative
     # sums) followed by ONE correctly-rounded float division per dim —
     # identical IEEE doubles on both engines (ks_drift's pattern).
-    # Long-overflow bound: |sa·cb| ≤ n²·max|x|·quant — fine through ~1e6
+    # Long-overflow bound: |sa·cb| ≤ n²·max|x|·_SHIFT_QUANT — fine through ~1e6
     # rows/group at |x| ≤ 4; beyond that, sample per group first.
     shift = F.floor(
         F.abs(F.col("sa") * F.col("cb") - F.col("sb") * F.col("ca")).cast("double")

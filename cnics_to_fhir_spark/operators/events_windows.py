@@ -54,15 +54,14 @@ def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def sliding_window_agg(
-    events: DataFrame, width: str = "1 hour", slide: str = "30 minutes"
-) -> DataFrame:
-    """Sliding-window counts/sums per event_type: each event lands in
-    width/slide overlapping windows (F.window replicates it into each).
-    Same single shuffle as the tumbling form, with a width/slide row
-    amplification before it — the standard sliding trade."""
+def sliding_window_agg(events: DataFrame) -> DataFrame:
+    """Sliding-window counts/sums per event_type over 1-hour windows every
+    30 minutes: each event lands in 2 overlapping windows (F.window
+    replicates it into each).  Same single shuffle as the tumbling form,
+    with a width/slide row amplification before it — the standard sliding
+    trade."""
     return (
-        events.groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -110,12 +109,10 @@ def gap_filled_hourly(events: DataFrame, value_col: str = "value") -> DataFrame:
     )
 
 
-def zscore_anomaly_days(
-    events: DataFrame, z_threshold: float = 2.0
-) -> DataFrame:
+def zscore_anomaly_days(events: DataFrame) -> DataFrame:
     """Per-user anomalous activity days: each (user, day) event count is
     z-scored against the USER'S OWN daily distribution; days with
-    |z| ≥ threshold flag (the windowed outlier-detection op every event
+    |z| ≥ 2 flag (the windowed outlier-detection op every event
     pipeline runs before trusting volume-derived features).
 
     Determinism design: the per-user moments are EXACT INTEGER sums
@@ -150,7 +147,7 @@ def zscore_anomaly_days(
             F.col("n").alias("n_events"),
             stable_round(z, 4).alias("z"),
         )
-        .filter(F.abs(F.col("z")) >= z_threshold)
+        .filter(F.abs(F.col("z")) >= 2.0)
     )
 
 
@@ -203,18 +200,18 @@ def cohort_retention(
     events: DataFrame,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    epoch: str = "2024-01-01",
     period_days: int = 7,
 ) -> DataFrame:
     """Cohort retention matrix — the activation/churn table every product
     and engagement pipeline reports: users grouped by their FIRST-active
     period (the cohort), each later period measuring how many came back.
 
-    Period indexing is pure integer arithmetic off a fixed ``epoch`` date
-    (days-since-epoch DIV period_days), not calendar truncation — ISO-week
-    vs locale-week and timezone-truncation differences between engines
-    can't touch it, and the retention rate quantizes to micro-units via
-    exact DIV.  The offset-0 row IS the cohort (rate = 10⁶ exactly).
+    Period indexing is pure integer arithmetic off the fixed epoch
+    2024-01-01 (days-since-epoch DIV period_days), not calendar
+    truncation — ISO-week vs locale-week and timezone-truncation
+    differences between engines can't touch it, and the retention rate
+    quantizes to micro-units via exact DIV.  The offset-0 row IS the
+    cohort (rate = 10⁶ exactly).
 
     Scale shape: one (user, period) DISTINCT (map-side combinable), one
     user-keyed min for the cohort, one user-keyed join back (the only
@@ -227,7 +224,7 @@ def cohort_retention(
     if period_days < 1:
         raise ValueError(f"period_days must be >= 1, got {period_days}")
     period = F.expr(
-        f"CAST(datediff(CAST({ts_col} AS DATE), DATE'{epoch}') DIV {period_days}"
+        f"CAST(datediff(CAST({ts_col} AS DATE), DATE'2024-01-01') DIV {period_days}"
         " AS BIGINT)"
     )
     act = events.select(

@@ -164,7 +164,10 @@ def _nbr_min(sym: DataFrame) -> DataFrame:
     return sym.groupBy("u").agg(F.least(F.first("u"), F.min("v")).alias("m"))
 
 
-def connected_components_star(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
+_STAR_MAX_ROUNDS = 25
+
+
+def connected_components_star(pairs: DataFrame) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (the MapReduce-native CC algorithm: Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14) —
@@ -217,7 +220,7 @@ def connected_components_star(pairs: DataFrame, max_rounds: int = 25) -> DataFra
         .distinct()
     )
     n_edges = obs0.get["n"] or 0
-    for _ in range(max_rounds):
+    for _ in range(_STAR_MAX_ROUNDS):
         # large-star: emit (v, m(u)) for every neighbor v > u
         s = _sym(edges)
         m = _nbr_min(s)
@@ -251,7 +254,7 @@ def connected_components_star(pairs: DataFrame, max_rounds: int = 25) -> DataFra
             return all_nodes.join(rep, "doc_id", "left").select(
                 "doc_id", F.coalesce("cluster_rep", "doc_id").alias("cluster_rep")
             )
-    raise RuntimeError(f"star contraction did not converge in {max_rounds} rounds")
+    raise RuntimeError(f"star contraction did not converge in {_STAR_MAX_ROUNDS} rounds")
 
 
 # ---------------------------------------------------------------------------

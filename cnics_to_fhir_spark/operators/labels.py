@@ -107,7 +107,6 @@ def bradley_terry(
     loser_col: str = "loser",
     iters: int = 4,
     scale: int = 1_000_000,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Bradley-Terry strength ratings from pairwise preference outcomes —
     the model behind reward-model data curation and Chatbot-Arena-style
@@ -213,14 +212,12 @@ def bradley_terry(
                 .alias("s"),
             )
         )
-        # Eager checkpoint per iteration is the measured default, not
-        # caution: ``r`` is consumed THREE times per step (si side, sj
-        # side, update join), so an untruncated plan recomputes the prior
-        # step 3× — 3^k total (checkpoint_every=2 measured 31s vs 18s at
-        # sf0.01).  The checkpoint is one tiny O(entities) job; raising
-        # checkpoint_every only makes sense if the engine ever caches
-        # multi-consumed shuffle outputs reliably without it.
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it + 1 < iters:
+        # Eager checkpoint per iteration is measured, not caution: ``r``
+        # is consumed THREE times per step (si side, sj side, update
+        # join), so an untruncated plan recomputes the prior step 3× —
+        # 3^k total (checkpointing every second step measured 31s vs 18s
+        # at sf0.01).  The checkpoint is one tiny O(entities) job.
+        if it + 1 < iters:
             r = r.localCheckpoint(eager=True)
     return base.join(F.broadcast(r), "a").select(
         F.col("a").alias("entity"),

@@ -270,13 +270,6 @@ def scd2_merge(
     return closed_rows.select(key, *payload_cols, fro, to).unionByName(merged)
 
 
-def anti_join_deletes(existing: DataFrame, current: DataFrame, key: str = "key") -> DataFrame:
-    """J5 — site-level patient delete: existing keys absent from the current
-    extract (cnics_to_fhir.py:328-337). left_anti keeps the plan broadcast-
-    able when ``current`` is the small side."""
-    return existing.join(current.select(key).distinct(), on=key, how="left_anti")
-
-
 def action_counts(plan: DataFrame, resource_type_col: str | None = None) -> DataFrame:
     """A5 — the reference's 12 insert/update/delete counters
     (cnics_to_fhir.py:309-320, :914-925) as one aggregation over the plan."""

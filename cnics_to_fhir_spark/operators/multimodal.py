@@ -4,8 +4,8 @@ Images/audio/video ride as ``binary`` columns with a metadata struct; the
 Spark-side plumbing (schema, partition sizing, Arrow batch shape, UDF
 signatures) is real and tested. Decoding is real too:
 ``real_decode=True`` routes through functions/mediacodec.py — PIL when
-importable, a pure-stdlib PNG codec otherwise — so PNG images decode,
-resize, and re-encode in every environment; non-PNG formats without PIL
+importable, a pure-stdlib PNG codec otherwise — so PNG images decode in
+every environment; non-PNG formats without PIL
 raise a clear error naming the optional dependency. The default fake path
 remains for deterministic oracle-compared features over arbitrary bytes.
 
@@ -20,8 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 MEDIA_METADATA = T.StructType(
@@ -35,15 +34,6 @@ MEDIA_METADATA = T.StructType(
 )
 
 FEATURE_DIM = 8
-
-
-def payload_fingerprint(payload: Column) -> Column:
-    """Content address of the raw bytes — exact-dedup key for media."""
-    return F.sha2(payload, 256)
-
-
-def payload_size(payload: Column) -> Column:
-    return F.octet_length(payload)
 
 
 def decode_image_stub(
@@ -109,67 +99,6 @@ def decode_image_stub(
             )
 
     return df.select(id_col, payload_col).mapInPandas(extract, schema=out_schema)
-
-
-def resize_image_stub(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    target_w: int = 32,
-    target_h: int = 32,
-    real_decode: bool = False,
-) -> DataFrame:
-    """Binary-in → binary-out resize contract: output rows carry a NEW
-    payload plus its dimensions — the geometry of a real thumbnailer.
-
-    ``real_decode=True``: decode (PIL or stdlib PNG) → nearest-neighbor
-    resample → re-encode PNG, inside the same Arrow batch loop. The fake
-    path 'resizes' by deterministic byte subsampling to w*h bytes."""
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
-    )
-    n_out = target_w * target_h
-
-    def resize(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        if real_decode:
-            from cnics_to_fhir_spark.functions.mediacodec import (
-                decode_image,
-                encode_png,
-                resize_nearest,
-            )
-        for pdf in batches:
-            outs = []
-            for raw in pdf[payload_col]:
-                raw = bytes(raw or b"")
-                if real_decode:
-                    w, h, ch, px = decode_image(raw)
-                    small = resize_nearest(px, w, h, ch, target_w, target_h)
-                    outs.append(encode_png(small, target_w, target_h, ch))
-                    continue
-                b = np.frombuffer(raw, dtype=np.uint8)
-                if len(b) >= n_out:
-                    idx = np.linspace(0, len(b) - 1, n_out).astype(np.int64)
-                    outs.append(b[idx].tobytes())
-                else:
-                    outs.append(b.tobytes() + b"\x00" * (n_out - len(b)))
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "payload": outs,
-                    "width": target_w,
-                    "height": target_h,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(resize, schema=out_schema)
 
 
 def frame_sample_stub(

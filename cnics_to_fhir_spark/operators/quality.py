@@ -92,18 +92,14 @@ def expect_foreign_key(
     child_key: str,
     parent_key: str,
     name: str | None = None,
-    broadcast_parent: bool = True,
 ) -> DataFrame:
     """Referential-integrity expectation: child rows whose key has no
     match in the parent's key set are violations (NULL child keys are
     orphans too — an unattributable row can't be joined downstream).
     One left-anti join; the parent side reduces to its distinct keys
-    first and broadcasts when dimension-sized (``broadcast_parent=False``
-    for fact-to-fact integrity, which shuffles both sides on the key)."""
+    first and broadcasts (a dimension-sized key set)."""
     name = name or f"fk({child_key}->{parent_key})"
-    keys = parent.select(F.col(parent_key).alias(child_key)).distinct()
-    if broadcast_parent:
-        keys = F.broadcast(keys)
+    keys = F.broadcast(parent.select(F.col(parent_key).alias(child_key)).distinct())
     n = child.agg(F.count(F.lit(1)).alias("__n"))
     orphans = child.join(keys, on=child_key, how="left_anti").agg(
         F.count(F.lit(1)).alias("__v")

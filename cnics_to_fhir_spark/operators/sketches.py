@@ -26,18 +26,17 @@ def hll_sketches(
     df: DataFrame,
     fine_keys: Sequence[str],
     col: str,
-    lgk: int = 12,
 ) -> DataFrame:
     """One scan → one HLL sketch per fine-grain group.
 
     Output: fine_keys + ``sketch`` (binary) + ``n_rows``. This is the
-    persistable artifact: each sketch is ≤ 2^lgk bytes regardless of group
-    cardinality, and partial aggregation combines map-side, so the shuffle
-    carries sketches, not distinct keys (exact COUNT(DISTINCT) shuffles
-    every distinct key; see a10's docstring).
+    persistable artifact: each sketch (lgK = 12) is ≤ 2^12 bytes
+    regardless of group cardinality, and partial aggregation combines
+    map-side, so the shuffle carries sketches, not distinct keys (exact
+    COUNT(DISTINCT) shuffles every distinct key; see a10's docstring).
     """
     return df.groupBy(*fine_keys).agg(
-        F.hll_sketch_agg(col, F.lit(lgk)).alias("sketch"),
+        F.hll_sketch_agg(col, F.lit(12)).alias("sketch"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 

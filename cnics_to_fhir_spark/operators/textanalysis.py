@@ -462,13 +462,12 @@ def nb_langid(
     text_col: str = "text",
     id_col: str = "doc_id",
     label_col: str = "lang",
-    test_mod: int = 5,
     score_all: bool = False,
 ) -> DataFrame:
     """Multinomial Naive-Bayes language identification TRAINED on the
     corpus's own labels (the fasttext-style classifier of a curation
     pipeline, reduced to its distributed essence): docs with
-    ``id % test_mod != 0`` train add-one-smoothed per-(lang, token)
+    ``id % 5 != 0`` train add-one-smoothed per-(lang, token)
     likelihoods; the held-out rest are scored and argmin-classified.
     → (doc_id, pred_lang, total_cost, lang, correct) per test doc.
     ``score_all=True`` scores EVERY doc with the same split-trained model
@@ -489,7 +488,7 @@ def nb_langid(
     web-scale vocab shuffles — both correct) + a doc-keyed sum.  The only
     driver round-trips are Spark-internal scalar crossJoins; no collect.
     """
-    is_test = F.col(id_col) % test_mod == 0
+    is_test = F.col(id_col) % 5 == 0
     train = df.filter(~is_test)
     test = df if score_all else df.filter(is_test)
     tr_toks = train.select(

@@ -38,9 +38,9 @@ class CatalogEntry:
 _REGISTRY: dict[str, CatalogEntry] = {}
 
 
-def query(name: str, tags: str, oracle: str | None = None, doc: str = ""):
+def query(name: str, tags: str, oracle: str | None = None):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        _REGISTRY[name] = CatalogEntry(name=name, tags=tags, spark=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        _REGISTRY[name] = CatalogEntry(name=name, tags=tags, spark=fn, oracle=oracle, doc=fn.__doc__ or "")
         return fn
 
     return deco

@@ -1079,7 +1079,7 @@ def ds02_chunked_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dataset.pack_chunked(table(spark, sf_dir, "documents"), budget=256)
 
 
-def _ds03_oracle(budget: int = 256, levels: int = 20) -> str:
+def _ds03_oracle() -> str:
     """Binary-lifting oracle for greedy first-fit-sequential packing.
 
     The naive recursive-CTE replay advances ONE row per shard per
@@ -1104,6 +1104,7 @@ def _ds03_oracle(budget: int = 256, levels: int = 20) -> str:
     ``levels=20`` is exact while bins-per-shard < 2^21 (~2M) — far above
     any verification SF (sf10: 500k docs total); the oracle is a test
     artifact, the engine side has no such bound."""
+    budget, levels = 256, 20  # ds03's bin size; jump-table depth
     jumps = []
     for k in range(1, levels + 1):
         jumps.append(
@@ -7731,7 +7732,7 @@ def o09_versioned_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         if len(frag) <= 1:
             raise AssertionError(f"fixture failed to fragment: {len(frag)} file(s)")
 
-        rep = vt.compact_versioned(spark, path, files_per_partition=1)
+        rep = vt.compact_versioned(spark, path)
         if rep["partitions_compacted"] != 1 or rep["files_after"] != 1:
             raise AssertionError(f"compaction scope wrong: {rep}")
         if vt.read_changes(spark, path, 1, 2, key_col="key").count() != 0:

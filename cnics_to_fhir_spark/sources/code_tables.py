@@ -1,14 +1,13 @@
 """S3 — standard code-table source (cnics_to_fhir.py:190-193).
 
 The reference reads a one-column CSV of quoted names into a Python list and
-probes it per row. Here the table becomes (a) a broadcast DataFrame for join
-form, or (b) a driver-side frozenset for `isin` form — both O(1) per probe
-and shuffle-free at any fact-table size.
+probes it per row. Here the table becomes a broadcast DataFrame for join
+form — O(1) per probe and shuffle-free at any fact-table size.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark.operators.extract import site_scoped
@@ -22,11 +21,6 @@ def load_code_table(spark: SparkSession, path: str, col_name: str = "code") -> D
     return df.select(F.regexp_replace(F.col("_c0"), '"', "").alias(col_name)).filter(
         F.length(col_name) > 0
     )
-
-
-def code_set(spark: SparkSession, path: str) -> frozenset[str]:
-    """Driver-side set for isin-style membership (small tables only)."""
-    return frozenset(r["code"] for r in load_code_table(spark, path).collect())
 
 
 def membership_via_join(

@@ -36,15 +36,14 @@ def per_field_lww(
     ord_col: str,
     unconditional: list[str],
     non_null_literal: list[str],
-    null_literal: str = "NULL",
 ) -> DataFrame:
     """Resolve duplicate ``key`` rows with the reference's per-field
     last-write-wins (cnics_to_fhir.py:296-303).
 
     ``unconditional`` fields take the value from the last row, whatever it
-    is (even the literal ``null_literal`` string).  ``non_null_literal``
+    is (even the literal ``'NULL'`` string).  ``non_null_literal``
     fields take the value from the last row whose value differs from
-    ``null_literal`` (null when no such row exists).
+    ``'NULL'`` (null when no such row exists).
 
     One hash aggregation → one shuffle on ``key``; ``max_by`` with a null
     ordering expression skips the row (MAX ignores nulls), which is exactly
@@ -54,7 +53,7 @@ def per_field_lww(
     def last_of(col: str, conditional: bool) -> Column:
         if not conditional:
             return F.max_by(F.col(col), F.col(ord_col)).alias(col)
-        keep = F.col(col) != null_literal
+        keep = F.col(col) != "NULL"
         return F.max_by(
             F.when(keep, F.col(col)), F.when(keep, F.col(ord_col))
         ).alias(col)

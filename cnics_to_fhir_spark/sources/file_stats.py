@@ -18,9 +18,9 @@ is that manifest for plain parquet directories, in two tiers:
   million-file tier: a MULTI-column manifest persisted once at ingest as
   its own parquet table.  Query-time pruning is then a distributed filter
   over the manifest table — no footer reads at all, and the driver collects
-  only the SURVIVING paths (O(kept), not O(total)).  This is the same
-  train-once/serve-many seam as operators/model_store.py: the expensive
-  footer sweep happens once per table version, every query reuses it.
+  only the SURVIVING paths (O(kept), not O(total)).  This is a
+  train-once/serve-many seam: the expensive footer sweep happens once per
+  table version, every query reuses it.
 
 Typing: min/max are stored as strings plus a ``kind`` tag.  String, date
 and timestamp stats ('str' kind, ISO-rendered) compare lexicographically;

@@ -21,16 +21,12 @@ def tumbling_window_stream(
     width: str = "1 hour",
     watermark: str = "30 minutes",
     ts_col: str = "ts",
-    slide: str | None = None,
 ) -> DataFrame:
-    """Watermarked tumbling (or, with ``slide``, sliding) window counts/sums
-    per event_type for an unbounded event stream. Output (append mode):
-    finalized windows only. A sliding window multiplies live state by
-    width/slide — the watermark bound applies per overlapping window."""
-    win = F.window(ts_col, width, slide) if slide else F.window(ts_col, width)
+    """Watermarked tumbling window counts/sums per event_type for an
+    unbounded event stream. Output (append mode): finalized windows only."""
     return (
         events.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("w"), "event_type")
+        .groupBy(F.window(ts_col, width).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -38,16 +34,4 @@ def tumbling_window_stream(
             "n",
             "total_value",
         )
-    )
-
-
-def run_to_memory_sink(stream_df: DataFrame, table_name: str, checkpoint_dir: str):
-    """Wire a streaming aggregation to an in-memory sink (tests/demos).
-    Append mode — only watermark-finalized windows are emitted."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(table_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
     )

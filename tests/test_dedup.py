@@ -398,18 +398,6 @@ def test_pq_adc_ranks_identical_vectors_first(spark):
     assert [n for n, _ in got] == [0, 2, 3]  # the other cluster-0 members
 
 
-def test_plan_lsh_bands_s_curve():
-    # 32 hashes, target 0.5: the planner must land the S-curve inflection
-    # (1/b)^(1/r) near the threshold, and b*r must stay exact.
-    b, r = dedup.plan_lsh_bands(0.5, 32)
-    assert b * r == 32
-    assert abs((1 / b) ** (1 / r) - 0.5) < 0.15
-    # high threshold -> few bands, long rows (precision); low -> many bands
-    b_hi, _ = dedup.plan_lsh_bands(0.9, 32)
-    b_lo, _ = dedup.plan_lsh_bands(0.2, 32)
-    assert b_hi < b <= b_lo
-
-
 def test_containment_cap_count_exposed(spark):
     """No-silent-caps: with_cap_count surfaces how many distinct shingles
     the df-cap dropped. Fixture: one shingle shared by 12 docs (> max_df

@@ -1,378 +1,130 @@
-"""Small-file compaction: plan math, row preservation, layout, idempotence."""
+"""Crash recovery of the MERGE's partition swap: the startup sweep
+(load/table_merge.recover_merge_swap) run before the next merge into a
+table.  Each test crashes ``merge_into_table`` at one point of the
+rename-aside swap and checks what is left and what the sweep does."""
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
+import pytest
 
-from cnics_to_fhir_spark.load.maintenance import (
-    compact_partitions,
-    compact_table,
-    plan_compaction,
-)
+from cnics_to_fhir_spark.load import table_merge
+from cnics_to_fhir_spark.load.table_merge import merge_into_table, recover_merge_swap
 
-
-def _data_files(path):
-    out = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if not f.startswith("_") and not f.startswith(".") and f.endswith(".parquet"):
-                out.append(os.path.join(root, f))
-    return out
+SCHEMA = "key long, action string, id string, val string, day int"
 
 
-def _fragmented_table(spark, path, n_rows=4000, n_files=40):
-    df = spark.range(n_rows).select(
-        F.col("id"),
-        (F.col("id") % 7).alias("grp"),
-        F.md5(F.col("id").cast("string")).alias("payload"),
-    )
-    df.repartition(n_files).write.mode("overwrite").parquet(path)
-    return df
+def _table(spark, path):
+    rows = [(k, f"v{k}", k % 2) for k in range(8)]  # day=0: evens, day=1: odds
+    df = spark.createDataFrame(rows, "key long, val string, day int")
+    df.write.mode("overwrite").partitionBy("day").parquet(path)
 
 
-def test_plan_counts_small_files(spark, tmp_path):
+def _crash_merge(spark, path, monkeypatch, crashing_swap, rows):
+    plan = spark.createDataFrame(rows, SCHEMA)
+    monkeypatch.setattr(table_merge, "_swap_aside", crashing_swap)
+    with pytest.raises(Exception, match="simulated crash"):
+        merge_into_table(spark, path, plan, key_col="key", partition_col="day")
+    monkeypatch.undo()
+
+
+def _vals(spark, path):
+    return {r["key"]: r["val"] for r in spark.read.parquet(path).collect()}
+
+
+def test_swap_crash_between_renames_loses_nothing(spark, tmp_path, monkeypatch):
+    # the narrowest window — after old->prev, before scratch->dest: the old
+    # partition is whole at its aside path and the merged rewrite is whole
+    # in the scratch root, so nothing is stranded or deleted
     path = str(tmp_path / "t")
-    _fragmented_table(spark, path)
-    plan = plan_compaction(spark, path, target_bytes=1 << 20)
-    assert plan.n_files == 40
-    assert plan.n_small_files == 40  # every fragment is far below 512 KiB
-    assert plan.target_files == 1  # 4000 tiny rows fit one 1 MiB file
-    assert plan.worth_it
-
-
-def test_compact_preserves_rows_and_shrinks_files(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _fragmented_table(spark, path)
-    before = spark.read.parquet(path)
-    expected_sum = before.agg(F.sum("id")).collect()[0][0]
-    expected_n = before.count()
-
-    plan = compact_table(spark, path, target_bytes=1 << 20)
-    assert plan.n_files == 40
-
-    after = spark.read.parquet(path)
-    assert after.count() == expected_n
-    assert after.agg(F.sum("id")).collect()[0][0] == expected_sum
-    assert len(_data_files(path)) == 1
-
-
-def test_compact_is_idempotent(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _fragmented_table(spark, path)
-    compact_table(spark, path, target_bytes=1 << 20)
-    plan2 = plan_compaction(spark, path, target_bytes=1 << 20)
-    assert plan2.n_files == plan2.target_files == 1
-    assert not plan2.worth_it  # second rewrite would not pay for itself
-
-
-def test_compact_partitioned_preserves_layout(spark, tmp_path):
-    path = str(tmp_path / "t")
-    df = spark.range(2000).select(
-        F.col("id"), (F.col("id") % 3).alias("grp")
-    )
-    # fragment WITHIN each hive partition
-    df.repartition(20).write.mode("overwrite").partitionBy("grp").parquet(path)
-    assert len(_data_files(path)) > 30
-
-    compact_table(spark, path, target_bytes=1 << 20, partition_cols=["grp"])
-    after = spark.read.parquet(path)
-    assert after.count() == 2000
-    parts = [d for d in os.listdir(path) if d.startswith("grp=")]
-    assert sorted(parts) == ["grp=0", "grp=1", "grp=2"]
-    assert len(_data_files(path)) == 3  # one file per partition
-
-    # partition pruning still works on the compacted layout
-    pruned = after.filter(F.col("grp") == 1)
-    assert pruned.count() == sum(1 for i in range(2000) if i % 3 == 1)
-    plan_str = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan_str and "grp" in plan_str
-
-
-def test_compact_sorted_restores_rowgroup_stats(spark, tmp_path):
-    path = str(tmp_path / "t")
-    _fragmented_table(spark, path)
-    compact_table(spark, path, target_bytes=16 << 10, sort_cols=["id"])
-    after = spark.read.parquet(path)
-    assert after.count() == 4000
-    files = _data_files(path)
-    assert len(files) > 1  # 16 KiB target splits the table
-    # each file covers a disjoint id range (range-partitioned rewrite)
-    import duckdb
-
-    con = duckdb.connect()
-    ranges = []
-    for f in files:
-        lo, hi = con.execute(
-            f"SELECT MIN(id), MAX(id) FROM read_parquet('{f}')"
-        ).fetchone()
-        ranges.append((lo, hi))
-    ranges.sort()
-    for (_, hi_prev), (lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev < lo_next
-
-
-def test_compact_streaming_sink_output(spark, tmp_path):
-    """The compaction consumer that actually exists at 100 TB: a streaming
-    file sink appends one file per (trigger × partition); compaction
-    collapses the accretion without losing a row."""
-    import json
-
-    src = tmp_path / "src"
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-
-    # three micro-batches, one jsonl file each
-    for b in range(3):
-        with open(src / f"b{b}.jsonl", "w") as f:
-            for i in range(100):
-                f.write(json.dumps({"id": b * 100 + i, "v": i % 7}) + "\n")
-        stream = (
-            spark.readStream.schema("id long, v long")
-            .json(str(src))
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    before = spark.read.parquet(out)
-    n_before = before.count()
-    assert n_before == 300
-    assert len(_data_files(out)) >= 3  # at least one file per trigger
-
-    plan = compact_table(spark, out, target_bytes=1 << 20)
-    assert plan.worth_it
-    after = spark.read.parquet(out)
-    assert after.count() == 300
-    assert after.agg(F.sum("id")).collect()[0][0] == sum(range(300))
-    assert len(_data_files(out)) == 1
-
-
-def test_plan_skips_streaming_metadata_log(spark, tmp_path):
-    # a _spark_metadata/ log holds plainly-named files ("0", "1") that must
-    # not count as data in the plan
-    import os as _os
-
-    path = str(tmp_path / "t")
-    _fragmented_table(spark, path, n_rows=100, n_files=2)
-    meta = _os.path.join(path, "_spark_metadata")
-    _os.makedirs(meta)
-    with open(_os.path.join(meta, "0"), "w") as f:
-        f.write("{}" * 1000)
-    plan = plan_compaction(spark, path, target_bytes=1 << 20)
-    assert plan.n_files == 2
-
-
-def test_compact_partitions_incremental(spark, tmp_path):
-    path = str(tmp_path / "t")
-    df = spark.range(3000).select(F.col("id"), (F.col("id") % 3).alias("day"))
-    df.repartition(15).write.mode("overwrite").partitionBy("day").parquet(path)
-    files_before = {d: len(_data_files(os.path.join(path, f"day={d}"))) for d in (0, 1, 2)}
-    assert all(n > 5 for n in files_before.values())
-
-    done = compact_partitions(spark, path, "day", [0, 2], target_bytes=1 << 20)
-    assert set(done) == {0, 2}
-    # targeted partitions collapsed; untouched partition kept its layout
-    assert len(_data_files(os.path.join(path, "day=0"))) == 1
-    assert len(_data_files(os.path.join(path, "day=2"))) == 1
-    assert len(_data_files(os.path.join(path, "day=1"))) == files_before[1]
-
-    after = spark.read.parquet(path)
-    assert after.count() == 3000
-    assert after.groupBy("day").count().count() == 3
-    assert after.agg(F.sum("id")).collect()[0][0] == sum(range(3000))
-
-    # second pass: nothing worth rewriting
-    assert compact_partitions(spark, path, "day", [0, 2], target_bytes=1 << 20) == {}
-
-
-def test_partition_scratch_invisible_to_concurrent_parent_reader(spark, tmp_path):
-    # Concurrent-reader simulation across the compact_partitions swap: at
-    # the instant the scratch write has finished but the swap has not yet
-    # begun (the widest race window), a reader listing the PARENT table
-    # path must see exactly the original partitions with the original data
-    # — no phantom '{col}={val}__compacting' partition, nothing missing.
-    # Driven by monkeypatching the swap entry point, which runs on the
-    # main thread at precisely that instant.
-    from cnics_to_fhir_spark.load import maintenance
-
-    path = str(tmp_path / "t")
-    df = spark.range(3000).select(F.col("id"), (F.col("id") % 3).alias("day"))
-    df.repartition(15).write.mode("overwrite").partitionBy("day").parquet(path)
-
-    real_swap = maintenance._swap_aside
-    seen_mid_swap = []
-
-    def checking_swap(fs, jvm, tmp, dest, prev):
-        mid = spark.read.parquet(path)
-        seen_mid_swap.append(
-            (
-                sorted(r["day"] for r in mid.select("day").distinct().collect()),
-                mid.count(),
-                mid.agg(F.sum("id")).collect()[0][0],
-            )
-        )
-        real_swap(fs, jvm, tmp, dest, prev)
-
-    maintenance._swap_aside = checking_swap
-    try:
-        done = compact_partitions(spark, path, "day", [0, 1, 2], target_bytes=1 << 20)
-    finally:
-        maintenance._swap_aside = real_swap
-
-    assert set(done) == {0, 1, 2}
-    # every mid-swap read saw the intact table: all 3 partitions, all rows
-    assert seen_mid_swap == [([0, 1, 2], 3000, sum(range(3000)))] * 3
-    # and after the swaps: no scratch/aside siblings left behind
-    leftovers = [d for d in os.listdir(tmp_path) if "__compacting" in d or "__prev" in d]
-    assert leftovers == []
-    after = spark.read.parquet(path)
-    assert after.count() == 3000
-    assert sorted(r["day"] for r in after.select("day").distinct().collect()) == [0, 1, 2]
-
-
-def test_swap_crash_between_renames_loses_nothing(spark, tmp_path):
-    # Simulate a crash in the narrowest window of the rename-aside swap —
-    # after old->prev, before scratch->dest. The old partition must be
-    # fully intact at the aside path and the rewrite fully intact in
-    # scratch: recoverable by a metadata op, never stranded or deleted
-    # (the failure mode of the old delete-then-rename ordering).
-    from cnics_to_fhir_spark.load import maintenance
-
-    path = str(tmp_path / "t")
-    df = spark.range(2000).select(F.col("id"), (F.col("id") % 2).alias("day"))
-    df.repartition(10).write.mode("overwrite").partitionBy("day").parquet(path)
-    old_day0 = spark.read.parquet(os.path.join(path, "day=0"))
-    old_rows, old_sum = old_day0.count(), old_day0.agg(F.sum("id")).collect()[0][0]
-
-    real_swap = maintenance._swap_aside
-
-    def crashing_swap(fs, jvm, tmp, dest, prev):
-        os.rename(dest, prev)  # first rename lands...
-        raise IOError("simulated crash between the swap's two renames")
-
-    maintenance._swap_aside = crashing_swap
-    try:
-        import pytest
-
-        with pytest.raises(Exception, match="simulated crash"):
-            compact_partitions(spark, path, "day", [0], target_bytes=1 << 20)
-    finally:
-        maintenance._swap_aside = real_swap
-
-    prev = str(tmp_path / "t__prev_day=0")
-    scratch = str(tmp_path / "t__compacting_day=0")
-    recovered = spark.read.parquet(prev)
-    assert (recovered.count(), recovered.agg(F.sum("id")).collect()[0][0]) == (
-        old_rows,
-        old_sum,
-    )
-    rewritten = spark.read.parquet(scratch)
-    assert (rewritten.count(), rewritten.agg(F.sum("id")).collect()[0][0]) == (
-        old_rows,
-        old_sum,
-    )
-    # recovery is one metadata op; the untouched partition was never at risk
-    os.rename(prev, os.path.join(path, "day=0"))
-    after = spark.read.parquet(path)
-    assert after.count() == 2000
-
-
-def test_recover_rolls_back_mid_swap_crash(spark, tmp_path):
-    # the narrowest crash window (old->prev landed, scratch->dest didn't):
-    # recovery must rename the parked partition back AND clear the scratch
-    from cnics_to_fhir_spark.load import maintenance
-    from cnics_to_fhir_spark.load.maintenance import recover_compaction_leftovers
-
-    path = str(tmp_path / "t")
-    df = spark.range(2000).select(F.col("id"), (F.col("id") % 2).alias("day"))
-    df.repartition(10).write.mode("overwrite").partitionBy("day").parquet(path)
-
-    real_swap = maintenance._swap_aside
+    _table(spark, path)
 
     def crashing_swap(fs, jvm, tmp, dest, prev):
         os.rename(dest, prev)
         raise IOError("simulated crash between the swap's two renames")
 
-    maintenance._swap_aside = crashing_swap
-    try:
-        import pytest
+    _crash_merge(spark, path, monkeypatch, crashing_swap, [(1, "update", "id1", "v1-new", 1)])
+    assert not os.path.exists(os.path.join(path, "day=1"))
+    assert _vals(spark, str(tmp_path / "t__prev_day=1")) == {k: f"v{k}" for k in (1, 3, 5, 7)}
+    merged = _vals(spark, str(tmp_path / "t__merging" / "day=1"))
+    assert merged == {1: "v1-new", 3: "v3", 5: "v5", 7: "v7"}
+    # the untouched partition was never at risk
+    assert _vals(spark, path) == {k: f"v{k}" for k in (0, 2, 4, 6)}
 
-        with pytest.raises(Exception, match="simulated crash"):
-            compact_partitions(spark, path, "day", [0], target_bytes=1 << 20)
-    finally:
-        maintenance._swap_aside = real_swap
 
-    report = recover_compaction_leftovers(spark, path)
-    assert report["rolled_back"] == [os.path.join(path, "day=0")]
-    assert len(report["cleaned"]) == 1 and "__compacting" in report["cleaned"][0]
+def test_recover_rolls_back_mid_swap_crash(spark, tmp_path, monkeypatch):
+    # every partition of a two-partition merge crashes between the swap's
+    # renames: recovery renames each parked partition back and clears the
+    # scratch root, restoring the pre-merge table
+    path = str(tmp_path / "t")
+    _table(spark, path)
+
+    def crashing_swap(fs, jvm, tmp, dest, prev):
+        os.rename(dest, prev)
+        raise IOError("simulated crash between the swap's two renames")
+
+    rows = [(0, "update", "id0", "v0-new", 0), (1, "update", "id1", "v1-new", 1)]
+    _crash_merge(spark, path, monkeypatch, crashing_swap, rows)
+    report = recover_merge_swap(spark, path)
+    assert sorted(report["rolled_back"]) == [
+        os.path.join(path, "day=0"),
+        os.path.join(path, "day=1"),
+    ]
+    assert report["cleaned"] == [f"file:{tmp_path}/t__merging"]
     assert report["kept"] == []
-    assert not os.path.exists(str(tmp_path / "t__prev_day=0"))
-    assert not os.path.exists(str(tmp_path / "t__compacting_day=0"))
-    after = spark.read.parquet(path)
-    assert after.count() == 2000
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert _vals(spark, path) == {k: f"v{k}" for k in range(8)}
 
 
-def test_recover_finishes_cleanup_when_new_tree_is_live(spark, tmp_path):
-    # crash AFTER the new tree went live, before the __prev delete: the
-    # parked old tree is garbage and must go; the live table is untouched
-    from cnics_to_fhir_spark.load.maintenance import recover_compaction_leftovers
-
+def test_recover_finishes_cleanup_when_new_tree_is_live(spark, tmp_path, monkeypatch):
+    # crash AFTER the new partition went live, before the parked old tree
+    # was deleted: the parked tree is garbage; the live partition stays
     path = str(tmp_path / "t")
-    _fragmented_table(spark, path, n_rows=100, n_files=2)
-    os.makedirs(str(tmp_path / "t__prev"))
-    with open(str(tmp_path / "t__prev" / "old.parquet"), "w") as f:
-        f.write("stale")
+    _table(spark, path)
 
-    report = recover_compaction_leftovers(spark, path)
-    assert report["cleaned"] == [f"file:{tmp_path}/t__prev"]
+    def crashing_swap(fs, jvm, tmp, dest, prev):
+        os.rename(dest, prev)
+        os.rename(tmp, dest)
+        raise IOError("simulated crash before the aside tree's delete")
+
+    _crash_merge(spark, path, monkeypatch, crashing_swap, [(1, "update", "id1", "v1-new", 1)])
+    report = recover_merge_swap(spark, path)
     assert report["rolled_back"] == [] and report["kept"] == []
-    assert not os.path.exists(str(tmp_path / "t__prev"))
-    assert spark.read.parquet(path).count() == 100
+    assert sorted(report["cleaned"]) == [
+        f"file:{tmp_path}/t__merging",
+        f"file:{tmp_path}/t__prev_day=1",
+    ]
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    got = _vals(spark, path)
+    assert got[1] == "v1-new" and len(got) == 8
 
 
-def test_recover_keeps_scratch_that_is_the_only_copy(spark, tmp_path):
-    # a scratch tree whose destination vanished is the ONLY copy of that
-    # data: recovery must refuse to delete it and report it instead
-    from cnics_to_fhir_spark.load.maintenance import recover_compaction_leftovers
-
+def test_recover_keeps_scratch_that_is_the_only_copy(spark, tmp_path, monkeypatch):
+    # a first merge into a new table that dies after its scratch write but
+    # before the table root exists: the scratch holds the only copy of the
+    # inserted rows, so recovery must keep it and report it
     path = str(tmp_path / "t")
-    _fragmented_table(spark, path, n_rows=100, n_files=2)
-    scratch = str(tmp_path / "t__compacting_day=9")
-    os.makedirs(scratch)
-    with open(os.path.join(scratch, "part.parquet"), "w") as f:
-        f.write("the only copy")
 
-    report = recover_compaction_leftovers(spark, path)
-    assert report["kept"] == [f"file:{scratch}"]
-    assert os.path.exists(scratch)
+    def crashing_swap(fs, jvm, tmp, dest, prev):
+        raise IOError("simulated crash before the first rename")
 
+    _crash_merge(spark, path, monkeypatch, crashing_swap, [(1, "insert", None, "v1", 1)])
+    # the go-live step created the (still empty) root just before its first
+    # swap; removing it gives the state of a crash one step earlier
+    os.rmdir(path)
 
-def test_recover_whole_table_rollback(spark, tmp_path):
-    # whole-table form: table missing at its path, parked at table__prev
-    from cnics_to_fhir_spark.load.maintenance import recover_compaction_leftovers
-
-    path = str(tmp_path / "t")
-    _fragmented_table(spark, path, n_rows=100, n_files=2)
-    os.rename(path, str(tmp_path / "t__prev"))
-    assert not os.path.exists(path)
-
-    report = recover_compaction_leftovers(spark, path)
-    assert report["rolled_back"] == [path]
-    assert spark.read.parquet(path).count() == 100
+    scratch = str(tmp_path / "t__merging")
+    report = recover_merge_swap(spark, path)
+    assert report == {"rolled_back": [], "cleaned": [], "kept": [f"file:{scratch}"]}
+    assert _vals(spark, scratch) == {1: "v1"}
 
 
 def test_recover_noop_on_clean_table(spark, tmp_path):
-    from cnics_to_fhir_spark.load.maintenance import recover_compaction_leftovers
-
     path = str(tmp_path / "t")
-    _fragmented_table(spark, path, n_rows=100, n_files=2)
-    report = recover_compaction_leftovers(spark, path)
+    _table(spark, path)
+    plan = spark.createDataFrame([(1, "update", "id1", "v1-new", 1)], SCHEMA)
+    merge_into_table(spark, path, plan, key_col="key", partition_col="day")
+    report = recover_merge_swap(spark, path)
     assert report == {"rolled_back": [], "cleaned": [], "kept": []}
+    assert sorted(os.listdir(tmp_path)) == ["t"]

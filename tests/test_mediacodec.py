@@ -19,7 +19,7 @@ from cnics_to_fhir_spark.operators import multimodal as mm
 
 def gradient_png(w=16, h=12, channels=3):
     """Deterministic gradient image — every pixel value distinct-ish so
-    resize/decode bugs can't hide behind uniform fills."""
+    decode bugs can't hide behind uniform fills."""
     px = bytearray()
     for y in range(h):
         for x in range(w):
@@ -122,21 +122,6 @@ def test_real_decode_through_spark(spark):
     assert feat[:3] == [16.0, 12.0, 3.0]
     assert feat[3] == pytest.approx(float(a.mean()), abs=1e-3)
     assert feat[7] == pytest.approx(16.0 / 12.0, abs=1e-5)
-
-
-def test_real_resize_through_spark(spark):
-    data, px = gradient_png(16, 12, 3)
-    df = spark.createDataFrame([(1, bytearray(data))], "doc_id long, payload binary")
-    out = mm.resize_image_stub(
-        df, target_w=8, target_h=6, real_decode=True
-    ).collect()[0]
-    assert (out["width"], out["height"]) == (8, 6)
-    w, h, ch, small = mc.decode_png(bytes(out["payload"]))
-    assert (w, h, ch) == (8, 6, 3)
-    # nearest-neighbor: output pixel (x,y) == input pixel (2x, 2y)
-    arr = np.frombuffer(px, dtype=np.uint8).reshape(12, 16, 3)
-    got = np.frombuffer(small, dtype=np.uint8).reshape(6, 8, 3)
-    assert (got == arr[::2, ::2, :]).all()
 
 
 def make_wav(rate=8000, freq=440, ms=250, width=2):

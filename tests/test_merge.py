@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark.operators.merge import (
     action_counts,
-    anti_join_deletes,
     apply_merge,
     assert_unique_keys,
     merge_plan,
@@ -82,14 +81,6 @@ def test_apply_merge_null_safe_keys_and_duplicated_target_keys(spark):
 
     with pytest.raises(ValueError, match=r"unknown action labels \['NULL'\]"):
         apply_merge(plan.withColumn("action", F.lit(None).cast("string")), existing, ["p", "k"])
-
-
-def test_anti_join_deletes(spark):
-    # site-level patient delete (cnics_to_fhir.py:328-337)
-    existing = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], ["key", "x"])
-    current = spark.createDataFrame([("a",), ("c",)], ["key"])
-    gone = sorted(r["key"] for r in anti_join_deletes(existing, current).collect())
-    assert gone == ["b"]
 
 
 def test_action_counts(spark):

@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from cnics_to_fhir_spark.operators import multimodal as mm
 
@@ -50,38 +49,3 @@ def test_frame_sample_explode_shape(spark):
     assert sorted(per_id[1]) == [0, 1, 2, 3]  # 256 bytes / 64
     assert sorted(per_id[2]) == [0]
     assert 3 not in per_id  # empty payload → no samples
-
-
-def test_resize_stub_geometry(spark):
-    out = {r["id"]: r for r in mm.resize_image_stub(_media(spark), target_w=4, target_h=4).collect()}
-    assert all(len(r["payload"]) == 16 and r["width"] == 4 and r["height"] == 4 for r in out.values())
-    # 256 bytes subsampled to 16: first and last sampled bytes preserved
-    assert out[1]["payload"][0] == 0x00 and out[1]["payload"][-1] == 0x03
-    # shorter payload zero-padded
-    assert bytes(out[3]["payload"]) == b"\x00" * 16
-    assert bytes(out[2]["payload"])[:16] == b"\xff" * 16
-
-
-def test_payload_fingerprint_and_size(spark):
-    df = _media(spark).select(
-        "doc_id",
-        mm.payload_fingerprint(F.col("payload")).alias("fp"),
-        mm.payload_size(F.col("payload")).alias("sz"),
-    )
-    rows = {r["doc_id"]: r for r in df.collect()}
-    assert rows[1]["sz"] == 256 and len(rows[1]["fp"]) == 64
-    assert rows[3]["sz"] == 0
-
-
-def test_observe_metrics(spark):
-    from cnics_to_fhir_spark.operators.metrics import observe_plan
-
-    plan = spark.createDataFrame(
-        [("Condition", "insert"), ("Condition", "update"), ("Condition", "delete"),
-         ("Condition", "insert")],
-        "resource_type string, action string",
-    )
-    observed, obs = observe_plan(plan)
-    observed.count()  # any action triggers metric collection
-    m = obs.get
-    assert (m["n_insert"], m["n_update"], m["n_delete"], m["n_total"]) == (2, 1, 1, 4)

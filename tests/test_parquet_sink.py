@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cnics_to_fhir_spark.load.parquet_sink import read_pruned, write_partitioned
+from cnics_to_fhir_spark.load.parquet_sink import write_partitioned
 from cnics_to_fhir_spark.operators import dataset
 from cnics_to_fhir_spark.sources.tables import read_table
 
@@ -17,7 +17,7 @@ def test_partitioned_write_prunes_on_read(spark, tmp_path):
     path = str(tmp_path / "curated")
     write_partitioned(curated, path, partition_cols=["shard"], sort_cols=["bin_id"])
 
-    back = read_pruned(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == curated.count()
 
     plan = (

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import json
 
-from cnics_to_fhir_spark.sources.code_tables import code_set, load_code_table, membership_via_join
+from cnics_to_fhir_spark.sources.code_tables import load_code_table, membership_via_join
 from cnics_to_fhir_spark.sources.crosswalk import load_crosswalk
 from cnics_to_fhir_spark.sources.fhir import snapshot_from_bundles
 from cnics_to_fhir_spark.sources.jdbc import JdbcSource
@@ -18,9 +18,6 @@ def test_code_table_quote_stripping(spark, tmp_path):
     assert sorted(r["code"] for r in codes.collect()) == [
         "COPD", "Diabetes Mellitus Type 2", "Hypertension",
     ]
-    assert code_set(spark, str(p)) == frozenset(
-        {"COPD", "Diabetes Mellitus Type 2", "Hypertension"}
-    )
 
 
 def test_membership_via_join(spark, tmp_path):
@@ -81,53 +78,6 @@ def test_jdbc_reader_config(spark):
     r = src.reader(spark, "DiagnosisAltered")
     assert r is not None
     assert src.url == "jdbc:mysql://db.example:3306/cnics"
-
-
-def test_jsonl_corrupt_record_quarantine(spark, tmp_path):
-    """Corrupt-tolerant JSONL ingestion: malformed lines quarantine instead
-    of failing the scan; clean lines parse typed."""
-    from cnics_to_fhir_spark.sources.jsonl import read_jsonl, split_corrupt
-
-    p = tmp_path / "corpus.jsonl"
-    p.write_text(
-        "\n".join(
-            [
-                '{"doc_id": 1, "text": "hello world", "lang": "en", "source": "web"}',
-                '{"doc_id": 2, "text": "truncated...',          # malformed
-                "not json at all",                               # malformed
-                '{"doc_id": 3, "text": "ok", "lang": "fr", "source": "books"}',
-                '{"doc_id": 4, "text": null, "lang": "en", "source": "web"}',  # valid, null field
-            ]
-        )
-    )
-    clean, quarantine = split_corrupt(read_jsonl(spark, str(p)), spark, str(p))
-    rows = {r["doc_id"]: r for r in clean.collect()}
-    assert sorted(rows) == [1, 3, 4]
-    assert rows[1]["text"] == "hello world" and rows[3]["lang"] == "fr"
-    assert rows[4]["text"] is None  # explicit null is NOT corruption
-    bad = sorted(r["line"] for r in quarantine.collect())
-    assert len(bad) == 2 and "not json at all" in bad  # raw lines preserved
-    assert all(r["reason"] == "malformed_json" for r in quarantine.collect())
-
-
-def test_jsonl_blank_lines_not_quarantined(spark, tmp_path):
-    """Spark's JSON file source silently skips blank/whitespace-only lines;
-    the quarantine re-scan must match that (quarantine = exactly the lines
-    the main scan routed to _corrupt_record)."""
-    from cnics_to_fhir_spark.sources.jsonl import read_jsonl, split_corrupt
-
-    p = tmp_path / "gappy.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "a", "lang": "en", "source": "web"}\n'
-        "\n"
-        "   \n"
-        "broken{\n"
-        '{"doc_id": 2, "text": "b", "lang": "fr", "source": "web"}\n'
-    )
-    clean, quarantine = split_corrupt(read_jsonl(spark, str(p)), spark, str(p))
-    assert sorted(r["doc_id"] for r in clean.collect()) == [1, 2]
-    bad = [r["line"] for r in quarantine.collect()]
-    assert bad == ["broken{"]  # blanks excluded, real corruption kept
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

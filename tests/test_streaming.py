@@ -48,7 +48,7 @@ def test_watermarked_window_drops_late_rows(spark, tmp_path):
     watermark are dropped, bounding state on an unbounded stream."""
     from datetime import datetime
 
-    from cnics_to_fhir_spark.streaming.windows import run_to_memory_sink, tumbling_window_stream
+    from cnics_to_fhir_spark.streaming.windows import tumbling_window_stream
 
     src = tmp_path / "ev-src"
     src.mkdir()
@@ -69,9 +69,13 @@ def test_watermarked_window_drops_late_rows(spark, tmp_path):
     ])
 
     stream = spark.readStream.schema(schema).parquet(str(src) + "/*")
-    q = run_to_memory_sink(
-        tumbling_window_stream(stream, width="1 hour", watermark="30 minutes"),
-        "win_sink", str(chk),
+    q = (
+        tumbling_window_stream(stream, width="1 hour", watermark="30 minutes")
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("win_sink")
+        .option("checkpointLocation", str(chk))
+        .start()
     )
     try:
         q.processAllAvailable()

@@ -1,7 +1,8 @@
 """Copy-on-write MERGE INTO a partitioned parquet table: row semantics,
 honest counts, PHYSICAL copy-on-write (untouched partitions keep
-byte-identical file lists and mtimes), crash recovery inheritance, and
-end-to-end from merge_plan's action plan."""
+byte-identical file lists and mtimes), crash recovery of the partition
+swap (more in test_maintenance.py), and end-to-end from merge_plan's
+action plan."""
 
 from __future__ import annotations
 
@@ -11,7 +12,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from cnics_to_fhir_spark.load.table_merge import merge_into_table
+from cnics_to_fhir_spark.load import table_merge
+from cnics_to_fhir_spark.load.table_merge import merge_into_table, recover_merge_swap
 from cnics_to_fhir_spark.operators.merge import merge_plan
 
 
@@ -126,37 +128,32 @@ def test_merge_plan_feeds_table_merge_end_to_end(spark, tmp_path):
     assert day1 == {1: "v1-new", 3: "v3", 9: "v9"}
 
 
-def test_crashed_merge_swap_is_recoverable(spark, tmp_path):
-    # inherit the compaction recovery story: crash between the swap's two
-    # renames, then recover_compaction_leftovers restores the partition
-    from cnics_to_fhir_spark.load import maintenance
-    from cnics_to_fhir_spark.load.maintenance import recover_compaction_leftovers
-
+def test_crashed_merge_swap_is_recoverable(spark, tmp_path, monkeypatch):
+    # crash between the swap's two renames, then recover_merge_swap
+    # restores the partition and clears the scratch root
     path = str(tmp_path / "t")
     _table(spark, path)
-
-    real_swap = maintenance._swap_aside
 
     def crashing_swap(fs, jvm, tmp, dest, prev):
         os.rename(dest, prev)
         raise IOError("simulated crash mid-merge-swap")
 
-    maintenance._swap_aside = crashing_swap
+    monkeypatch.setattr(table_merge, "_swap_aside", crashing_swap)
     plan = spark.createDataFrame(
         [(1, "update", "id1", "v1-new", 1)],
         "key long, action string, id string, val string, day int",
     )
-    try:
-        with pytest.raises(Exception, match="simulated crash"):
-            merge_into_table(spark, path, plan, key_col="key", partition_col="day")
-    finally:
-        maintenance._swap_aside = real_swap
+    with pytest.raises(Exception, match="simulated crash"):
+        merge_into_table(spark, path, plan, key_col="key", partition_col="day")
+    monkeypatch.undo()
 
-    report = recover_compaction_leftovers(spark, path)
+    report = recover_merge_swap(spark, path)
     assert report["rolled_back"] == [os.path.join(path, "day=1")]
     assert len(report["cleaned"]) == 1 and "__merging" in report["cleaned"][0]
+    assert report["kept"] == []
     got = {r["key"]: r["val"] for r in spark.read.parquet(path).collect()}
     assert got[1] == "v1"  # pre-merge state restored, nothing lost
+    assert len(got) == 8
 
 
 def test_merge_preserves_null_partition_rows(spark, tmp_path):

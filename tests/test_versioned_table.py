@@ -279,7 +279,7 @@ def test_compaction_is_a_version_that_moves_no_data(spark, tmp_path):
     assert len(day1_files) > 1  # fragmented
     day0_entries = [e for e in m1["entries"] if e["partition"] == "0"]
 
-    rep = vt.compact_versioned(spark, table, files_per_partition=1)
+    rep = vt.compact_versioned(spark, table)
     assert rep["version"] == 2 and rep["partitions_compacted"] == 1
     assert rep["files_before"] == len(day1_files) and rep["files_after"] == 1
     m2 = vt.read_manifest(table, 2)
@@ -292,16 +292,9 @@ def test_compaction_is_a_version_that_moves_no_data(spark, tmp_path):
     # prior versions still whole
     assert vt.read_version(spark, table, 0).count() == 8
     # idempotent: nothing fragmented -> no new version
-    rep2 = vt.compact_versioned(spark, table, files_per_partition=1)
+    rep2 = vt.compact_versioned(spark, table)
     assert rep2 == {"version": 2, "partitions_compacted": 0,
                     "files_before": 0, "files_after": 0}
     # vacuum after retention: old fragments swept, latest reads whole
     vt.vacuum(table, retain_versions=1)
     assert {r["key"] for r in vt.read_version(spark, table).collect()} == set(range(8))
-
-
-def test_compaction_to_bounded_files_requires_key(spark, tmp_path):
-    table = str(tmp_path / "t")
-    _seed(spark, table)
-    with pytest.raises(ValueError, match="requires key_col"):
-        vt.compact_versioned(spark, table, files_per_partition=2)
